@@ -118,6 +118,44 @@ def test_gensort_engine_roundtrip_reproduces_ref_checksum(spark, workdir):
     assert chk["checksum"] == _REF_SUM_UNIFORM_1000
 
 
+def test_read_gensort_truncated_input_raises(spark, workdir):
+    # a partial trailing record is corrupt input: the scan must fail,
+    # not silently drop the tail
+    raw = os.path.join(workdir, "truncated")
+    os.makedirs(raw)
+    with open(os.path.join(raw, "part-00000"), "wb") as f:
+        f.write(b"x" * (2 * RECORD_LEN + 50))
+    with pytest.raises(Exception, match="EOFException"):
+        read_gensort(spark, raw).count()
+
+
+def test_read_gensort_scan_stays_in_jvm_and_splits(spark, workdir):
+    # the record scan starts no Python worker (no ExistingRDD from a
+    # Python RDD, no Python exec node), and it keeps Hadoop's splits:
+    # each input file is at least one partition, never loaded whole
+    raw = os.path.join(workdir, "jvmscan")
+    write_gensort(gensort_records(spark, 1000, num_partitions=4), raw)
+    assert len(glob.glob(os.path.join(raw, "part-*"))) == 4
+    df = read_gensort(spark, raw)
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    assert "ExistingRDD" not in plan
+    assert "Python" not in plan
+    assert df.rdd.getNumPartitions() >= 4
+    assert gensort_checksum(df) == _REF_SUM_UNIFORM_1000
+
+
+def test_gensort_null_record_raises(spark, workdir):
+    # a null key or value cannot be a gensort record: neither the
+    # writer nor the checksum may skip it
+    df = spark.createDataFrame(
+        [(b"k" * 10, None), (b"a" * 10, b"v" * 90)], "key binary, value binary"
+    )
+    with pytest.raises(Exception, match="TypeError"):
+        write_gensort(df, os.path.join(workdir, "nullrec"))
+    with pytest.raises(ValueError, match="null"):
+        gensort_checksum(df)
+
+
 def test_gensort_published_10gb_checksum(spark):
     # The reference's own published artifact: valsort checksum of the
     # 10 GB (100M-record) uniform GraySort input.  Computed exactly the

@@ -1039,3 +1039,48 @@ def test_token_budget_replay_carries_state_across_batches(spark):
     )
     got = sorted((r["id"], r["cum_tokens"]) for r in out.collect())
     assert got == [(0, 10), (1, 20), (2, 30), (3, 40)]
+
+
+def test_token_budget_replay_timeout_raises(spark, monkeypatch):
+    """A replay that does not finish in time must raise, not return the
+    partial memory table it has so far."""
+    from pyspark.sql.streaming import StreamingQuery
+
+    from themis_tritonsort_spark.streaming.budget import token_budget_replay
+
+    monkeypatch.setattr(
+        StreamingQuery, "awaitTermination", lambda self, timeout=None: False
+    )
+    docs = spark.createDataFrame(
+        [(i, "w w", "g0") for i in range(4)],
+        "doc_id long, text string, source string",
+    )
+    prev = spark.conf.get("spark.sql.shuffle.partitions")
+    with pytest.raises(TimeoutError):
+        token_budget_replay(spark, docs, "doc_id", "text", "source", 3)
+    assert spark.conf.get("spark.sql.shuffle.partitions") == prev
+    assert not any(q.isActive for q in spark.streams.active)
+
+
+@pytest.mark.parametrize(
+    "value, expected",
+    [
+        ("67108864", 67108864),
+        ("64m", 64 << 20),
+        ("64mb", 64 << 20),
+        ("256MB", 256 << 20),
+        ("1t", 1 << 40),
+        ("2p", 2 << 50),
+    ],
+)
+def test_parse_bytes_matches_spark(spark, value, expected):
+    """The replay's advisory size is parsed the way Spark parses
+    ``advisoryPartitionSizeInBytes`` itself."""
+    from themis_tritonsort_spark.streaming.budget import _parse_bytes
+
+    key = "spark.sql.adaptive.advisoryPartitionSizeInBytes"
+    session = spark.newSession()
+    session.conf.set(key, value)
+    entry = spark._jvm.org.apache.spark.sql.internal.SQLConf.ADVISORY_PARTITION_SIZE_IN_BYTES()
+    assert session._jsparkSession.sessionState().conf().getConf(entry) == expected
+    assert _parse_bytes(spark, value) == expected

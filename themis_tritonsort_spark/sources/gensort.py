@@ -11,12 +11,17 @@ Reference formats:
   - validation: valsort checks global order + record checksums
     (``src/gensort/valsort.c``, ``scripts/valsort/validate.py:37-53``).
 
-Spark-first: ``binaryRecords`` gives a fixed-size record scan; the sort
-is plain ``df.sort(key)`` (RangePartitioner = phase 0, shuffle =
-phase 1, Tungsten external sort = phases 2/3).  The writer concatenates
-raw records per partition so output files are byte-identical to what
-the reference's headerless writer produces (``main.cc:1313-1326``
-WRITE_WITHOUT_HEADERS).
+Spark-first: the read side never leaves the JVM.  ``read_gensort`` is
+Hadoop's fixed-length record scan (``FixedLengthBinaryInputFormat``,
+splittable, so one file is read by several tasks) wrapped as a
+``Dataset[Array[Byte]]`` and split into key/value with ``substring``;
+neither the sampling job nor the map stage starts a Python worker.  The
+sort is plain ``df.sort(key)`` (RangePartitioner = phase 0, shuffle =
+phase 1, Tungsten external sort = phases 2/3).  The writer receives
+each record as ONE pre-joined ``bytes`` object (``concat(key, value)``
+crossing as raw framed bytes, no pickled Row) and concatenates them per
+partition, so output files are byte-identical to what the reference's
+headerless writer produces (``main.cc:1313-1326`` WRITE_WITHOUT_HEADERS).
 """
 
 from __future__ import annotations
@@ -25,6 +30,8 @@ import glob
 import os
 import zlib
 
+from pyspark import RDD
+from pyspark.serializers import NoOpSerializer
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -262,26 +269,37 @@ def gensort_range_checksum(
 
 def gensort_checksum(df: DataFrame) -> int:
     """The gensort/valsort record checksum: sum over records of
-    zlib.crc32(key || value), mod 2**128 (gensort -c / valsort output;
-    order-insensitive, so it commutes with any shuffle or sort).  Only
-    one 128-bit partial sum per partition reaches the driver."""
-
-    def _part_sum(rows):
-        s = 0
-        for row in rows:
-            s += zlib.crc32(bytes(row.key) + bytes(row.value))
-        yield s
-
-    parts = df.select("key", "value").rdd.mapPartitions(_part_sum).collect()
-    return sum(parts) & _GENSORT_MASK
+    crc32(key || value), mod 2**128 (gensort -c / valsort output;
+    order-insensitive, so it commutes with any shuffle or sort).
+    Computed in the JVM: Spark's ``crc32`` is ``java.util.zip.CRC32``,
+    the same polynomial as zlib's, and a decimal(38,0) sum cannot
+    overflow below ~10**28 records.  A null key or value raises, since
+    it cannot be a gensort record."""
+    rec = F.concat("key", "value")
+    total, nulls = df.select(
+        F.sum(F.crc32(rec).cast("decimal(38,0)")),
+        F.count_if(rec.isNull()),
+    ).first()
+    if nulls:
+        raise ValueError(f"{nulls} records with a null key or value")
+    return int(total or 0) & _GENSORT_MASK
 
 
 def read_gensort(spark: SparkSession, path: str) -> DataFrame:
     """Read headerless 100-byte gensort records as (key binary, value
-    binary).  Distributed fixed-size record scan via binaryRecords."""
-    rdd = spark.sparkContext.binaryRecords(path, RECORD_LEN)
-    split = rdd.map(lambda rec: (rec[:KEY_LEN], rec[KEY_LEN:]))
-    return spark.createDataFrame(split, schema="key binary, value binary")
+    binary).  The scan stays in the JVM: Hadoop's fixed-length record
+    reader (the same splits ``binaryRecords`` plans) wrapped as a
+    ``Dataset[Array[Byte]]``, then split with ``substring``.  A file
+    whose size is not a multiple of ``RECORD_LEN`` raises
+    (``java.io.EOFException``) instead of dropping its tail."""
+    sc = spark.sparkContext
+    records = sc._jsc.sc().binaryRecords(path, RECORD_LEN, sc._jsc.hadoopConfiguration())
+    binary = sc._jvm.org.apache.spark.sql.Encoders.BINARY()
+    raw = DataFrame(spark._jsparkSession.createDataset(records, binary).toDF(), spark)
+    return raw.select(
+        F.substring("value", 1, KEY_LEN).alias("key"),
+        F.substring("value", KEY_LEN + 1, RECORD_LEN - KEY_LEN).alias("value"),
+    )
 
 
 def sort_records(df: DataFrame) -> DataFrame:
@@ -314,17 +332,23 @@ def write_gensort(df: DataFrame, path: str) -> None:
     cluster).
     """
     os.makedirs(path, exist_ok=True)
+    # One pre-joined column, handed over as Dataset[Array[Byte]]: each
+    # record reaches Python as one framed ``bytes`` (no pickled Row).  A
+    # null key or value makes a null record, which ``f.write`` rejects.
+    sc = df.sparkSession.sparkContext
+    binary = sc._jvm.org.apache.spark.sql.Encoders.BINARY()
+    joined = getattr(df.select(F.concat("key", "value"))._jdf, "as")(binary)
+    records = RDD(joined.toJavaRDD(), sc, NoOpSerializer())
 
     def _dump(idx: int, it):
         n = 0
         with open(os.path.join(path, f"part-{idx:05d}"), "wb") as f:
-            for row in it:
-                f.write(row.key)
-                f.write(row.value)
+            for rec in it:
+                f.write(rec)
                 n += 1
         yield idx, n
 
-    counts = df.rdd.mapPartitionsWithIndex(_dump).collect()
+    counts = records.mapPartitionsWithIndex(_dump).collect()
     # Drop empty partition files for cleanliness.
     for idx, n in counts:
         if n == 0:

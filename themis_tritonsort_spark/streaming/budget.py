@@ -185,9 +185,10 @@ def token_budget_replay(
             os.path.getsize(os.path.join(src, f)) for f in parts
         )
         advisory = _parse_bytes(
+            spark,
             spark.conf.get(
                 "spark.sql.adaptive.advisoryPartitionSizeInBytes", "64m"
-            )
+            ),
         )
         cap = int(spark.conf.get("spark.sql.shuffle.partitions"))
         n_state = max(1, min(cap, -(-staged_bytes // advisory)))
@@ -209,8 +210,12 @@ def token_budget_replay(
                 .trigger(availableNow=True)
                 .start()
             )
-            q.awaitTermination(300)
+            finished = q.awaitTermination(300)
             q.stop()
+            if not finished:
+                raise TimeoutError(
+                    f"token budget replay {name} did not finish in 300 s"
+                )
         finally:
             spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
     finally:
@@ -218,14 +223,8 @@ def token_budget_replay(
     return spark.table(name)
 
 
-def _parse_bytes(v: str) -> int:
-    """Parse a Spark byte-size conf value ('64m', '256MB', '67108864b',
-    plain digits = bytes)."""
-    s = str(v).strip().lower().removesuffix("b")
-    mult = 1
-    for suffix, m in (("k", 1 << 10), ("m", 1 << 20), ("g", 1 << 30)):
-        if s.endswith(suffix):
-            s = s[: -len(suffix)]
-            mult = m
-            break
-    return int(s) * mult
+def _parse_bytes(spark: SparkSession, v: str) -> int:
+    """Parse a Spark byte-size conf value ('64m', '1t', '2p', '64mb',
+    plain digits = bytes) exactly the way Spark parses it."""
+    java_utils = spark.sparkContext._jvm.org.apache.spark.network.util.JavaUtils
+    return java_utils.byteStringAsBytes(str(v))
