@@ -70,159 +70,18 @@ def _dedup_clusters3(spark, sf):
     return dedup_clusters(pairs, id_a="doc_a", id_b="doc_b")
 
 
-BENCH_QUERIES = {
-    "q01_sort_events": q.q01_sort_events,
-    "q03_wordcount": q.q03_wordcount,
-    "q04_ngrams": q.q04_ngrams,
-    "q05_inverted_index": q.q05_inverted_index,
-    "q06_sessionize": q.q06_sessionize,
-    "q07_pagerank": q.q07_pagerank,
-    "q09_kmeans_assign": q.q09_kmeans_assign,
-    "q12_merge_sorted": q.q12_merge_sorted,
-    "q14_pricing_summary": q.q14_pricing_summary,
-    "q15_revenue_by_nation": q.q15_revenue_by_nation,
-    "q18_jaccard3": _jaccard3,
-    "q19_minhash3": _minhash3,
-    "q20_ann_topk": q.q20_ann_topk,
-    "q21_text_quality": q.q21_text_quality,
-    "q24_window_funcs": q.q24_window_funcs,
-    "q26_distinct_agg": q.q26_distinct_agg,
-    "q28_json_extract": q.q28_json_extract,
-    "q36_asof_join": q.q36_asof_join,
-    "q37_range_join": q.q37_range_join,
-    "q39_lsh_neardup": _lsh_neardup_wide,
-    "q41_token_counts": q.q41_token_counts,
-    "q42_value_quantiles": q.q42_value_quantiles,
-    "q43_corpus_pipeline": q.q43_corpus_pipeline,
-    "q49_stratified_sample": q.q49_stratified_sample,
-    "q51_chunk_documents": q.q51_chunk_documents,
-    "q52_small_qty_revenue": q.q52_small_qty_revenue,
-    "q53_order_count_distribution": q.q53_order_count_distribution,
-    "q54_yearly_cohorts": q.q54_yearly_cohorts,
-    "q55_returnflag_pivot": q.q55_returnflag_pivot,
-    "q56_rolling_hour": q.q56_rolling_hour,
-    "q57_cube_revenue": q.q57_cube_revenue,
-    "q58_repetition_stats": q.q58_repetition_stats,
-    "q59_decontaminate": q.q59_decontaminate,
-    "q62_pii_scrub": q.q62_pii_scrub,
-    "q65_dedup_spans": q.q65_dedup_spans,
-    "q63_tfidf_topk": q.q63_tfidf_topk,
-    "q64_unigram_surprisal": q.q64_unigram_surprisal,
-    "q67_gap_fill": q.q67_gap_fill,
-    "q68_triangle_counts": q.q68_triangle_counts,
-    "q69_funnel": q.q69_funnel,
-    "q70_cooccurrence_pmi": q.q70_cooccurrence_pmi,
-    "q71_retention": q.q71_retention,
-    "q72_cheapest_supplier": q.q72_cheapest_supplier,
-    "q73_pack_sequences": q.q73_pack_sequences,
-    "q74_triangle_total": q.q74_triangle_total,
-    "q75_surprisal_mix": q.q75_surprisal_mix,
-    "q76_shuffle_shards": q.q76_shuffle_shards,
-    "q77_full_curation": q.q77_full_curation,
-    "q78_media_decode": q.q78_media_decode,
-    "q79_semdedup": q.q79_semdedup,
-    "q80_bigram_perplexity": q.q80_bigram_perplexity,
-    "q81_sq8_ann": q.q81_sq8_ann,
-    "q82_bloom_decontam": q.q82_bloom_decontam,
-    "q83_token_budget": q.q83_token_budget,
-    "q84_pq_ann": q.q84_pq_ann,
-    "q85_pq_rerank": q.q85_pq_rerank,
-    "q86_kcore": q.q86_kcore,
-    "q87_length_batches": q.q87_length_batches,
-    "q88_cdc_snapshot": q.q88_cdc_snapshot,
-    "q89_scd2_history": q.q89_scd2_history,
-    "q90_hll_distinct": q.q90_hll_distinct,
-    "q91_cms_heavy_hitters": q.q91_cms_heavy_hitters,
-    "q92_zscore_outliers": q.q92_zscore_outliers,
-    "q93_label_propagation": q.q93_label_propagation,
-    "q94_weighted_sample": q.q94_weighted_sample,
-    "q95_volume_shipping": q.q95_volume_shipping,
-    "q96_product_profit": q.q96_product_profit,
-    "q97_important_parts": q.q97_important_parts,
-    "q98_supplier_variety": q.q98_supplier_variety,
-    "q99_large_orders": q.q99_large_orders,
-    "q100_bracket_revenue": q.q100_bracket_revenue,
-    "q101_excess_suppliers": q.q101_excess_suppliers,
-    "q102_waiting_suppliers": q.q102_waiting_suppliers,
-    "q103_bfs_hops": q.q103_bfs_hops,
-    "q104_hashed_classifier": q.q104_hashed_classifier,
-    "q105_concurrency": q.q105_concurrency,
-    "q106_bpe_train": q.q106_bpe_train,
-    "q107_bm25_retrieval": q.q107_bm25_retrieval,
-    "q108_profile_events": q.q108_profile_events,
-    "q109_fuzzy_supplier_match": q.q109_fuzzy_supplier_match,
-    "q110_attribution": q.q110_attribution,
-    "q111_bm25_multi": q.q111_bm25_multi,
-    "q112_clustering_coeff": q.q112_clustering_coeff,
-    "q113_ewma": q.q113_ewma,
-    "q114_markov_transitions": q.q114_markov_transitions,
-    "q115_filtered_revenue": q.q115_filtered_revenue,
-    "q116_priority_by_class": q.q116_priority_by_class,
-    "q117_promo_share": q.q117_promo_share,
-    "q118_top_supplier": q.q118_top_supplier,
-    "q119_histogram_quantiles": q.q119_histogram_quantiles,
-    "q120_lineno_gaps": q.q120_lineno_gaps,
-    "q121_orphan_audit": q.q121_orphan_audit,
-    "q122_event_paths": q.q122_event_paths,
-    "q123_segment_mode": q.q123_segment_mode,
-    "q124_spend_deciles": q.q124_spend_deciles,
-    "q125_video_frames": q.q125_video_frames,
-    "q125b_mjpeg_frames": q.q125b_mjpeg_frames,
-    "q78b_audio_decode": q.q78b_audio_decode,
-    # round-5 fill: the remaining catalog entries, so the bench set IS
-    # the catalog (q18/q19/q39 keep their scale-variant stand-ins
-    # above — trigram shingles / 64-plane LSH, the 100 TB settings).
-    "q02_sort_lineitem": q.q02_sort_lineitem,
-    "q08_link_extract": q.q08_link_extract,
-    "q10_global_agg": q.q10_global_agg,
-    "q10b_length_histogram": q.q10b_length_histogram,
-    "q11_duplicate_keys": q.q11_duplicate_keys,
-    "q13_grep": q.q13_grep,
-    "q16_top_customers": q.q16_top_customers,
-    "q17_exact_dedup": q.q17_exact_dedup,
-    "q22_lang_id": q.q22_lang_id,
-    "q23_fingerprint": q.q23_fingerprint,
-    "q25_customers_without_orders": q.q25_customers_without_orders,
-    "q27_parts_shipped_by_brand": q.q27_parts_shipped_by_brand,
-    "q29_kmeans_full": q.q29_kmeans_full,
-    "q30_simhash": q.q30_simhash,
-    "q31_ivf_ann": q.q31_ivf_ann,
-    "q32_above_avg_parts": q.q32_above_avg_parts,
-    "q33_late_ship_orders": q.q33_late_ship_orders,
-    "q34_region_share": q.q34_region_share,
-    "q35_rollup_revenue": q.q35_rollup_revenue,
-    "q38_cosine_neardup": q.q38_cosine_neardup,
-    "q40_nation_market": q.q40_nation_market,
-    "q44_salted_count": q.q44_salted_count,
-    "q45_time_rollup": q.q45_time_rollup,
-    "q46_dedup_clusters3": _dedup_clusters3,
-    "q47_gap_sessions": q.q47_gap_sessions,
-    "q48_shipping_priority": q.q48_shipping_priority,
-    "q50_mixture_sample": q.q50_mixture_sample,
-    "q60_encode_tokens": q.q60_encode_tokens,
-    "q61_train_split": q.q61_train_split,
-    "q66_blocklist_filter": q.q66_blocklist_filter,
-    "q126_local_supplier_volume": q.q126_local_supplier_volume,
-    "q127_market_share": q.q127_market_share,
-    "q128_returned_items": q.q128_returned_items,
-    "q129_sales_opportunity": q.q129_sales_opportunity,
-    "q130_variant_json": q.q130_variant_json,
-    "q131_k_anonymity": q.q131_k_anonymity,
-    "q132_hard_negatives": q.q132_hard_negatives,
-    "q133_kcenter_sample": q.q133_kcenter_sample,
-    "q134_keep_best": q.q134_keep_best,
-    "q135_incremental_neardup": q.q135_incremental_neardup,
-    "q136_leakage_safe_split": q.q136_leakage_safe_split,
-    "q137_trained_classifier": q.q137_trained_classifier,
-    "q138_importance_resample": q.q138_importance_resample,
-    "q139_dup_substrings": q.q139_dup_substrings,
-    "q140_substring_scrub": q.q140_substring_scrub,
-    "q141_margin_pairs": q.q141_margin_pairs,
-    "q142_ann_margin_pairs": q.q142_ann_margin_pairs,
-    "q143_approx_triangles": q.q143_approx_triangles,
-    "q144_chain_components": q.q144_chain_components,
-    "q145_budget_stream_replay": q.q145_budget_stream_replay,
+# Scale-variant stand-ins (trigram shingles, 64-plane LSH: the 100 TB
+# settings), keyed by the catalog query each one replaces: (bench name,
+# function).  Every other catalog query is benched as declared.
+_STAND_INS = {
+    "q18_jaccard_pairs": ("q18_jaccard3", _jaccard3),
+    "q19_minhash_lsh": ("q19_minhash3", _minhash3),
+    "q39_lsh_neardup": ("q39_lsh_neardup", _lsh_neardup_wide),
+    "q46_dedup_clusters": ("q46_dedup_clusters3", _dedup_clusters3),
 }
+BENCH_QUERIES = dict(
+    _STAND_INS.get(name, (name, fn)) for name, fn in q.CATALOG.items()
+)
 
 
 # The headline scale-factor dir lives in ONE place (ADVICE r07: it was
@@ -347,7 +206,9 @@ def main() -> None:
 
     timings = {name: round(median(ts), 3) for name, ts in runs.items()}
     full, compact, suffix, warnings = emit_payloads(
-        timings, runs, samples, sf_dir, only, loads=loads, steals=steals
+        timings, runs, samples, sf_dir, only, loads=loads, steals=steals,
+        master=spark.sparkContext.master,
+        default_parallelism=spark.sparkContext.defaultParallelism,
     )
     for w in warnings:
         print(w, file=sys.stderr)
@@ -388,6 +249,8 @@ def emit_payloads(
     only: str,
     loads: dict[str, list[float]] | None = None,
     steals: dict[str, list[float]] | None = None,
+    master: str | None = None,
+    default_parallelism: int | None = None,
 ) -> tuple[dict, dict, str, list[str]]:
     """Build the BENCH_FULL payload, the compact stdout line, the
     BENCH_FULL filename suffix, and any warning lines.  Pure — unit
@@ -414,7 +277,11 @@ def emit_payloads(
     headline dir must still count as headline, or a genuine sf0.1 run
     writes the suffixed file and the stale previous BENCH_FULL.json
     gets snapshotted as this round's evidence — the exact failure
-    this logic exists to prevent."""
+    this logic exists to prevent.
+
+    ``master`` and ``default_parallelism`` are the timed session's own
+    (a scaling claim needs the parallelism that actually ran; ``cpus``
+    is the machine's, which the load1 and steal checks need)."""
     total = round(sum(timings.values()), 3)
     metric = "partial_queries_wall_clock" if only else (
         "headline_queries_wall_clock"
@@ -428,6 +295,8 @@ def emit_payloads(
         "samples": samples,
         "spread": {name: [min(ts), max(ts)] for name, ts in runs.items()},
         "sf": sf_dir,
+        "master": master,
+        "default_parallelism": default_parallelism,
     }
     if loads is not None:
         # Per-sample load1 + CPU-steal%, parallel to spread: the

@@ -55,10 +55,13 @@ def test_bench_emit_payloads_partial_vs_headline():
     timings = {"q01": 1.0, "q02": 2.0}
     runs = {"q01": [0.9, 1.0, 1.1], "q02": [1.8, 2.0, 2.2]}
 
-    # full run at the headline SF
+    # full run at the headline SF, stamped with the session's parallelism
     full, compact, suffix, warnings = bench.emit_payloads(
-        timings, runs, 3, bench.HEADLINE_SF_DIR, ""
+        timings, runs, 3, bench.HEADLINE_SF_DIR, "",
+        master="local[8]", default_parallelism=8,
     )
+    assert full["master"] == "local[8]"
+    assert full["default_parallelism"] == 8
     assert full["metric"] == "headline_queries_wall_clock"
     assert compact["metric"] == "headline_queries_wall_clock"
     assert full["partial"] is False and compact["partial"] is False

@@ -5,8 +5,10 @@ from __future__ import annotations
 
 import pandas as pd
 import pytest
+from pyspark.errors import AnalysisException
 from pyspark.sql import functions as F
 
+from themis_tritonsort_spark.functions.names import sql_column
 from themis_tritonsort_spark.functions.text import tokens
 from themis_tritonsort_spark.operators.dedup import (
     exact_duplicates,
@@ -206,6 +208,56 @@ def test_assign_clusters_argmin_and_ties(spark):
     }
     # point 2 is equidistant -> lowest center id wins (reference argmin)
     assert got == {0: 0, 1: 1, 2: 0}
+
+
+def test_assign_clusters_nested_field(spark):
+    """A nested vector column is referenced as F.col reads it: ``s.v``
+    is field ``v`` of struct ``s``."""
+    df = spark.createDataFrame(
+        [(0, ([0.0, 0.0],)), (1, ([10.0, 0.0],)), (2, ([5.0, 0.0],))],
+        "id long, s struct<v: array<double>>",
+    )
+    got = {
+        r["id"]: r["cluster"]
+        for r in assign_clusters(df, "s.v", [[0.0, 0.0], [10.0, 0.0]]).collect()
+    }
+    assert got == {0: 0, 1: 1, 2: 0}
+
+
+def test_assign_clusters_backtick_in_name(spark):
+    """A column named ``a`b`` is passed the way F.col takes it
+    (backtick-quoted, inner backtick doubled) and resolves."""
+    df = spark.createDataFrame(
+        [(0, [0.0, 0.0]), (1, [10.0, 0.0]), (2, [5.0, 0.0])],
+        "id long, `a``b` array<double>",
+    )
+    got = {
+        r["id"]: r["cluster"]
+        for r in assign_clusters(df, "`a``b`", [[0.0, 0.0], [10.0, 0.0]]).collect()
+    }
+    assert got == {0: 0, 1: 1, 2: 0}
+
+
+@pytest.mark.parametrize(
+    "name,quoted",
+    [
+        ("v", "`v`"),
+        ("s.v", "`s`.`v`"),
+        ("`s`.v", "`s`.`v`"),
+        ("`x.y`", "`x.y`"),
+        ("`a``b`", "`a``b`"),
+    ],
+)
+def test_sql_column_splits_like_f_col(name, quoted):
+    assert sql_column(name) == quoted
+
+
+@pytest.mark.parametrize("name", ["a`b", "`a", "`a`b", "s..v", "s."])
+def test_sql_column_rejects_what_f_col_rejects(spark, name):
+    with pytest.raises(ValueError):
+        sql_column(name)
+    with pytest.raises(AnalysisException):
+        spark.range(1).select(F.col(name))
 
 
 def test_lloyd_converges_two_blobs(spark):

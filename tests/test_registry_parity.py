@@ -1,5 +1,6 @@
-"""Registry parity with the reference function factories, plus
-functional tests for the fragment forms of the iterative operators.
+"""Registry parity with the reference function factories, the shape
+of the derived query catalog, plus functional tests for the fragment
+forms of the iterative operators.
 
 Reference catalogs: MapFunctionFactory.cc:24-118 (20 names),
 ReduceFunctionFactory.cc:1-53 (11 names), PartitionFunctionFactory.cc
@@ -10,6 +11,7 @@ ReduceFunctionFactory.cc:1-53 (11 names), PartitionFunctionFactory.cc
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from themis_tritonsort_spark.plans.job import (
@@ -198,3 +200,64 @@ def test_bench_set_covers_the_catalog():
     catalog = {prefix(n) for n in QUERIES}
     missing = sorted(catalog - benched)
     assert missing == [], f"catalog queries without a bench row: {missing}"
+
+
+def test_query_catalog_structure():
+    """One derived catalog feeds queries(), oracle_sql() and the bench:
+    148 entries, oracles in catalog order (number, then suffix), the
+    driver's gated first 50 entries are the rotation window followed
+    by the rest of the catalog in order, and the bench times every
+    catalog query, with the three renamed scale-variant stand-ins."""
+    import re
+
+    import bench
+
+    from themis_tritonsort_spark.queries import (
+        _WINDOW_PRIORITY,
+        ORACLES,
+        QUERIES,
+    )
+
+    def catalog_order(name: str) -> tuple[int, str]:
+        num, suffix = re.match(r"q(\d+)([a-z]?)_", name).groups()
+        return int(num), suffix
+
+    catalog = sorted(QUERIES, key=catalog_order)
+    assert len(QUERIES) == len(ORACLES) == 148
+    assert list(ORACLES) == catalog
+    assert list(QUERIES)[:50] == _WINDOW_PRIORITY
+    assert list(QUERIES)[50:] == [
+        n for n in catalog if n not in _WINDOW_PRIORITY
+    ]
+    renamed = {
+        "q18_jaccard_pairs": "q18_jaccard3",
+        "q19_minhash_lsh": "q19_minhash3",
+        "q46_dedup_clusters": "q46_dedup_clusters3",
+    }
+    assert list(bench.BENCH_QUERIES) == [renamed.get(n, n) for n in catalog]
+
+
+def test_query_catalog_rejects_unpaired_entries():
+    """The import-time pairing check: a query without its oracle
+    constant, or an oracle constant without its query, raises and
+    names the orphan."""
+    from themis_tritonsort_spark.queries import _catalog
+
+    def q07_a(spark, sf_dir):
+        return None
+
+    def q07b_b(spark, sf_dir):
+        return None
+
+    queries, oracles = _catalog(
+        {"q07b_b": q07b_b, "q07_a": q07_a, "_Q07_SQL": "a", "_Q07B_SQL": "b"}
+    )
+    assert list(queries) == ["q07_a", "q07b_b"]
+    assert oracles == {"q07_a": "a", "q07b_b": "b"}
+
+    with pytest.raises(ValueError, match=r"without an oracle \['q07b_b'\]"):
+        _catalog({"q07_a": q07_a, "q07b_b": q07b_b, "_Q07_SQL": "a"})
+    with pytest.raises(ValueError, match=r"without a query \['_Q08_SQL'\]"):
+        _catalog({"q07_a": q07_a, "_Q07_SQL": "a", "_Q08_SQL": "c"})
+    with pytest.raises(ValueError, match=r"sharing an id \['q07_a', 'q07_c'\]"):
+        _catalog({"q07_a": q07_a, "q07_c": q07_a, "_Q07_SQL": "a"})

@@ -1041,6 +1041,37 @@ def test_token_budget_replay_carries_state_across_batches(spark):
     assert got == [(0, 10), (1, 20), (2, 30), (3, 40)]
 
 
+def test_token_budget_replay_drops_its_sink_view(spark, monkeypatch):
+    """The memory sink's budget_replay_<uuid> temp view must not outlive
+    the call, and the returned frame must still read every row after
+    the view is gone (also on the timeout path)."""
+    from pyspark.sql.streaming import StreamingQuery
+
+    from themis_tritonsort_spark.streaming.budget import token_budget_replay
+
+    def replay_views() -> list[str]:
+        return [
+            t.name
+            for t in spark.catalog.listTables()
+            if t.name.startswith("budget_replay_")
+        ]
+
+    docs = spark.createDataFrame(
+        [(i, "w w", "g0") for i in range(5)],
+        "doc_id long, text string, source string",
+    )
+    out = token_budget_replay(spark, docs, "doc_id", "text", "source", 100)
+    assert replay_views() == []
+    assert out.count() == 5
+
+    monkeypatch.setattr(
+        StreamingQuery, "awaitTermination", lambda self, timeout=None: False
+    )
+    with pytest.raises(TimeoutError):
+        token_budget_replay(spark, docs, "doc_id", "text", "source", 100)
+    assert replay_views() == []
+
+
 def test_token_budget_replay_timeout_raises(spark, monkeypatch):
     """A replay that does not finish in time must raise, not return the
     partial memory table it has so far."""

@@ -21,6 +21,7 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..functions.names import sql_column
 from ..functions.vectors import as_double
 
 # Above this many center*dim literals the expression-tree form costs
@@ -62,7 +63,7 @@ def _assign_sql(vec_col: str, centers: list[list[float]]) -> str:
     a single py4j call and parsed/folded in the JVM in milliseconds."""
     return (
         f"array_min(transform({centers_sql(centers)}, (c, i) -> "
-        f"struct(aggregate(zip_with(CAST(`{vec_col}` AS ARRAY<DOUBLE>), c, "
+        f"struct(aggregate(zip_with(CAST({sql_column(vec_col)} AS ARRAY<DOUBLE>), c, "
         f"(x, y) -> (x - y) * (x - y)), CAST(0.0 AS DOUBLE), "
         f"(acc, x) -> acc + x) AS d, i AS cid))).cid"
     )
@@ -172,11 +173,11 @@ def lloyd(
     # client time; `array(avg(v[0]), ..)` is the same 64 independent
     # avg aggregates (identical partial/final arithmetic), only
     # projected into an array after aggregation.
+    vec = sql_column(vec_col)
     means_sql = (
         "array("
         + ",".join(
-            f"avg(CAST(`{vec_col}` AS ARRAY<DOUBLE>)[{i}])"
-            for i in range(dim)
+            f"avg(CAST({vec} AS ARRAY<DOUBLE>)[{i}])" for i in range(dim)
         )
         + ") AS __ms"
     )

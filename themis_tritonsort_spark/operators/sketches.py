@@ -23,6 +23,8 @@ from collections.abc import Sequence
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..functions.names import sql_column
+
 # Deterministic-sketch hash discipline (shared with operators.dedup /
 # operators.sampling): the 60-bit integer from the first 15 hex chars
 # of md5 — reproducible by any engine, so the sketches below are
@@ -295,7 +297,7 @@ def histogram_quantiles(
     if bin_width <= 0 or n_bins <= 1:
         raise ValueError(f"need bin_width > 0, n_bins > 1; got {bin_width}/{n_bins}")
     bin_ = F.least(
-        F.expr(f"cast(`{value_col}` as bigint) div {int(bin_width)}"),
+        F.expr(f"cast({sql_column(value_col)} as bigint) div {int(bin_width)}"),
         F.lit(n_bins - 1).cast("long"),
     )
     counts = (

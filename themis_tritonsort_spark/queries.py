@@ -57,6 +57,7 @@ Sections:
 
 from __future__ import annotations
 
+import re
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
@@ -6423,156 +6424,46 @@ FROM c WHERE cum_tokens - n_tokens < {_TOKEN_BUDGET}
 """
 
 
-QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
-    "q01_sort_events": q01_sort_events,
-    "q02_sort_lineitem": q02_sort_lineitem,
-    "q03_wordcount": q03_wordcount,
-    "q04_ngrams": q04_ngrams,
-    "q05_inverted_index": q05_inverted_index,
-    "q06_sessionize": q06_sessionize,
-    "q07_pagerank": q07_pagerank,
-    "q08_link_extract": q08_link_extract,
-    "q09_kmeans_assign": q09_kmeans_assign,
-    "q10_global_agg": q10_global_agg,
-    "q10b_length_histogram": q10b_length_histogram,
-    "q11_duplicate_keys": q11_duplicate_keys,
-    "q12_merge_sorted": q12_merge_sorted,
-    "q13_grep": q13_grep,
-    "q14_pricing_summary": q14_pricing_summary,
-    "q15_revenue_by_nation": q15_revenue_by_nation,
-    "q16_top_customers": q16_top_customers,
-    "q17_exact_dedup": q17_exact_dedup,
-    "q18_jaccard_pairs": q18_jaccard_pairs,
-    "q19_minhash_lsh": q19_minhash_lsh,
-    "q20_ann_topk": q20_ann_topk,
-    "q21_text_quality": q21_text_quality,
-    "q22_lang_id": q22_lang_id,
-    "q23_fingerprint": q23_fingerprint,
-    "q24_window_funcs": q24_window_funcs,
-    "q25_customers_without_orders": q25_customers_without_orders,
-    "q26_distinct_agg": q26_distinct_agg,
-    "q27_parts_shipped_by_brand": q27_parts_shipped_by_brand,
-    "q28_json_extract": q28_json_extract,
-    "q29_kmeans_full": q29_kmeans_full,
-    "q30_simhash": q30_simhash,
-    "q31_ivf_ann": q31_ivf_ann,
-    "q32_above_avg_parts": q32_above_avg_parts,
-    "q33_late_ship_orders": q33_late_ship_orders,
-    "q34_region_share": q34_region_share,
-    "q35_rollup_revenue": q35_rollup_revenue,
-    "q36_asof_join": q36_asof_join,
-    "q37_range_join": q37_range_join,
-    "q38_cosine_neardup": q38_cosine_neardup,
-    "q39_lsh_neardup": q39_lsh_neardup,
-    "q40_nation_market": q40_nation_market,
-    "q41_token_counts": q41_token_counts,
-    "q42_value_quantiles": q42_value_quantiles,
-    "q43_corpus_pipeline": q43_corpus_pipeline,
-    "q44_salted_count": q44_salted_count,
-    "q45_time_rollup": q45_time_rollup,
-    "q46_dedup_clusters": q46_dedup_clusters,
-    "q47_gap_sessions": q47_gap_sessions,
-    "q48_shipping_priority": q48_shipping_priority,
-    "q49_stratified_sample": q49_stratified_sample,
-    "q50_mixture_sample": q50_mixture_sample,
-    "q51_chunk_documents": q51_chunk_documents,
-    "q52_small_qty_revenue": q52_small_qty_revenue,
-    "q53_order_count_distribution": q53_order_count_distribution,
-    "q54_yearly_cohorts": q54_yearly_cohorts,
-    "q55_returnflag_pivot": q55_returnflag_pivot,
-    "q56_rolling_hour": q56_rolling_hour,
-    "q57_cube_revenue": q57_cube_revenue,
-    "q58_repetition_stats": q58_repetition_stats,
-    "q59_decontaminate": q59_decontaminate,
-    "q60_encode_tokens": q60_encode_tokens,
-    "q61_train_split": q61_train_split,
-    "q62_pii_scrub": q62_pii_scrub,
-    "q63_tfidf_topk": q63_tfidf_topk,
-    "q64_unigram_surprisal": q64_unigram_surprisal,
-    "q65_dedup_spans": q65_dedup_spans,
-    "q66_blocklist_filter": q66_blocklist_filter,
-    "q67_gap_fill": q67_gap_fill,
-    "q68_triangle_counts": q68_triangle_counts,
-    "q69_funnel": q69_funnel,
-    "q70_cooccurrence_pmi": q70_cooccurrence_pmi,
-    "q71_retention": q71_retention,
-    "q72_cheapest_supplier": q72_cheapest_supplier,
-    "q73_pack_sequences": q73_pack_sequences,
-    "q74_triangle_total": q74_triangle_total,
-    "q75_surprisal_mix": q75_surprisal_mix,
-    "q76_shuffle_shards": q76_shuffle_shards,
-    "q77_full_curation": q77_full_curation,
-    "q78_media_decode": q78_media_decode,
-    "q78b_audio_decode": q78b_audio_decode,
-    "q79_semdedup": q79_semdedup,
-    "q80_bigram_perplexity": q80_bigram_perplexity,
-    "q81_sq8_ann": q81_sq8_ann,
-    "q82_bloom_decontam": q82_bloom_decontam,
-    "q83_token_budget": q83_token_budget,
-    "q84_pq_ann": q84_pq_ann,
-    "q85_pq_rerank": q85_pq_rerank,
-    "q86_kcore": q86_kcore,
-    "q87_length_batches": q87_length_batches,
-    "q88_cdc_snapshot": q88_cdc_snapshot,
-    "q89_scd2_history": q89_scd2_history,
-    "q90_hll_distinct": q90_hll_distinct,
-    "q91_cms_heavy_hitters": q91_cms_heavy_hitters,
-    "q92_zscore_outliers": q92_zscore_outliers,
-    "q93_label_propagation": q93_label_propagation,
-    "q94_weighted_sample": q94_weighted_sample,
-    "q95_volume_shipping": q95_volume_shipping,
-    "q96_product_profit": q96_product_profit,
-    "q97_important_parts": q97_important_parts,
-    "q98_supplier_variety": q98_supplier_variety,
-    "q99_large_orders": q99_large_orders,
-    "q100_bracket_revenue": q100_bracket_revenue,
-    "q101_excess_suppliers": q101_excess_suppliers,
-    "q102_waiting_suppliers": q102_waiting_suppliers,
-    "q103_bfs_hops": q103_bfs_hops,
-    "q104_hashed_classifier": q104_hashed_classifier,
-    "q105_concurrency": q105_concurrency,
-    "q106_bpe_train": q106_bpe_train,
-    "q107_bm25_retrieval": q107_bm25_retrieval,
-    "q108_profile_events": q108_profile_events,
-    "q109_fuzzy_supplier_match": q109_fuzzy_supplier_match,
-    "q110_attribution": q110_attribution,
-    "q111_bm25_multi": q111_bm25_multi,
-    "q112_clustering_coeff": q112_clustering_coeff,
-    "q113_ewma": q113_ewma,
-    "q114_markov_transitions": q114_markov_transitions,
-    "q115_filtered_revenue": q115_filtered_revenue,
-    "q116_priority_by_class": q116_priority_by_class,
-    "q117_promo_share": q117_promo_share,
-    "q118_top_supplier": q118_top_supplier,
-    "q119_histogram_quantiles": q119_histogram_quantiles,
-    "q120_lineno_gaps": q120_lineno_gaps,
-    "q121_orphan_audit": q121_orphan_audit,
-    "q122_event_paths": q122_event_paths,
-    "q123_segment_mode": q123_segment_mode,
-    "q124_spend_deciles": q124_spend_deciles,
-    "q125_video_frames": q125_video_frames,
-    "q125b_mjpeg_frames": q125b_mjpeg_frames,
-    "q126_local_supplier_volume": q126_local_supplier_volume,
-    "q127_market_share": q127_market_share,
-    "q128_returned_items": q128_returned_items,
-    "q129_sales_opportunity": q129_sales_opportunity,
-    "q130_variant_json": q130_variant_json,
-    "q131_k_anonymity": q131_k_anonymity,
-    "q132_hard_negatives": q132_hard_negatives,
-    "q133_kcenter_sample": q133_kcenter_sample,
-    "q134_keep_best": q134_keep_best,
-    "q135_incremental_neardup": q135_incremental_neardup,
-    "q136_leakage_safe_split": q136_leakage_safe_split,
-    "q137_trained_classifier": q137_trained_classifier,
-    "q138_importance_resample": q138_importance_resample,
-    "q139_dup_substrings": q139_dup_substrings,
-    "q140_substring_scrub": q140_substring_scrub,
-    "q141_margin_pairs": q141_margin_pairs,
-    "q142_ann_margin_pairs": q142_ann_margin_pairs,
-    "q143_approx_triangles": q143_approx_triangles,
-    "q144_chain_components": q144_chain_components,
-    "q145_budget_stream_replay": q145_budget_stream_replay,
-}
+_QUERY_NAME = re.compile(r"q(\d+)([a-z]?)_\w+")
+_ORACLE_NAME = re.compile(r"_Q\d+[A-Z]?_SQL")
+
+
+def _catalog(
+    ns: dict[str, object],
+) -> tuple[dict[str, Callable[[SparkSession, str], DataFrame]], dict[str, str]]:
+    """The query catalog, derived from a module namespace.
+
+    Every function named ``qNN[b]_*`` is a query, and its DuckDB oracle
+    is the ``_QNN[B]_SQL`` constant.  Both dicts come back in catalog
+    order, by number and then suffix (q10 < q10b < q11), whatever order
+    the definitions appear in.  A query without an oracle, an oracle
+    without a query, or two queries sharing one id raises, so "every
+    query is oracled" holds by construction.
+    """
+    ids = {
+        name: m.groups()
+        for name, fn in ns.items()
+        if callable(fn) and (m := _QUERY_NAME.fullmatch(name))
+    }
+    oracle_of = {name: f"_Q{n}{b.upper()}_SQL" for name, (n, b) in ids.items()}
+    oracles = {name for name in ns if _ORACLE_NAME.fullmatch(name)}
+    no_oracle = sorted(n for n, o in oracle_of.items() if o not in oracles)
+    no_query = sorted(oracles - set(oracle_of.values()))
+    shared = sorted(n for n in ids if list(ids.values()).count(ids[n]) > 1)
+    if no_oracle or no_query or shared:
+        raise ValueError(
+            f"query catalog out of sync: queries without an oracle "
+            f"{no_oracle}; oracles without a query {no_query}; "
+            f"queries sharing an id {shared}"
+        )
+    names = sorted(ids, key=lambda name: (int(ids[name][0]), ids[name][1]))
+    return (
+        {n: ns[n] for n in names},
+        {n: ns[oracle_of[n]] for n in names},
+    )
+
+
+CATALOG, ORACLES = _catalog(globals())
 
 # Driver-window rotation (round 12).  The round driver gates the FIRST
 # 50 entries of queries() against their oracles.  This window executes
@@ -6612,158 +6503,4 @@ _WINDOW_PRIORITY = [
     # spares: get-ahead picks from the r10 set (first two, catalog order)
     "q01_sort_events", "q19_minhash_lsh",
 ]
-QUERIES = {
-    **{name: QUERIES[name] for name in _WINDOW_PRIORITY},
-    **{k: v for k, v in QUERIES.items() if k not in set(_WINDOW_PRIORITY)},
-}
-
-ORACLES: dict[str, str] = {
-    "q01_sort_events": _Q01_SQL,
-    "q02_sort_lineitem": _Q02_SQL,
-    "q03_wordcount": _Q03_SQL,
-    "q04_ngrams": _Q04_SQL,
-    "q05_inverted_index": _Q05_SQL,
-    "q06_sessionize": _Q06_SQL,
-    "q07_pagerank": _Q07_SQL,
-    "q08_link_extract": _Q08_SQL,
-    "q09_kmeans_assign": _Q09_SQL,
-    "q10_global_agg": _Q10_SQL,
-    "q10b_length_histogram": _Q10B_SQL,
-    "q11_duplicate_keys": _Q11_SQL,
-    "q12_merge_sorted": _Q12_SQL,
-    "q13_grep": _Q13_SQL,
-    "q14_pricing_summary": _Q14_SQL,
-    "q15_revenue_by_nation": _Q15_SQL,
-    "q16_top_customers": _Q16_SQL,
-    "q17_exact_dedup": _Q17_SQL,
-    "q18_jaccard_pairs": _Q18_SQL,
-    "q19_minhash_lsh": _Q19_SQL,
-    "q20_ann_topk": _Q20_SQL,
-    "q21_text_quality": _Q21_SQL,
-    "q22_lang_id": _Q22_SQL,
-    "q23_fingerprint": _Q23_SQL,
-    "q24_window_funcs": _Q24_SQL,
-    "q25_customers_without_orders": _Q25_SQL,
-    "q26_distinct_agg": _Q26_SQL,
-    "q27_parts_shipped_by_brand": _Q27_SQL,
-    "q28_json_extract": _Q28_SQL,
-    "q29_kmeans_full": _Q29_SQL,
-    "q30_simhash": _Q30_SQL,
-    "q31_ivf_ann": _Q31_SQL,
-    "q32_above_avg_parts": _Q32_SQL,
-    "q33_late_ship_orders": _Q33_SQL,
-    "q34_region_share": _Q34_SQL,
-    "q35_rollup_revenue": _Q35_SQL,
-    "q36_asof_join": _Q36_SQL,
-    "q37_range_join": _Q37_SQL,
-    "q38_cosine_neardup": _Q38_SQL,
-    "q39_lsh_neardup": _Q39_SQL,
-    "q40_nation_market": _Q40_SQL,
-    "q41_token_counts": _Q41_SQL,
-    "q42_value_quantiles": _Q42_SQL,
-    "q43_corpus_pipeline": _Q43_SQL,
-    "q44_salted_count": _Q44_SQL,
-    "q45_time_rollup": _Q45_SQL,
-    "q46_dedup_clusters": _Q46_SQL,
-    "q47_gap_sessions": _Q47_SQL,
-    "q48_shipping_priority": _Q48_SQL,
-    "q49_stratified_sample": _Q49_SQL,
-    "q50_mixture_sample": _Q50_SQL,
-    "q51_chunk_documents": _Q51_SQL,
-    "q52_small_qty_revenue": _Q52_SQL,
-    "q53_order_count_distribution": _Q53_SQL,
-    "q54_yearly_cohorts": _Q54_SQL,
-    "q55_returnflag_pivot": _Q55_SQL,
-    "q56_rolling_hour": _Q56_SQL,
-    "q57_cube_revenue": _Q57_SQL,
-    "q58_repetition_stats": _Q58_SQL,
-    "q59_decontaminate": _Q59_SQL,
-    "q60_encode_tokens": _Q60_SQL,
-    "q61_train_split": _Q61_SQL,
-    "q62_pii_scrub": _Q62_SQL,
-    "q63_tfidf_topk": _Q63_SQL,
-    "q64_unigram_surprisal": _Q64_SQL,
-    "q65_dedup_spans": _Q65_SQL,
-    "q66_blocklist_filter": _Q66_SQL,
-    "q67_gap_fill": _Q67_SQL,
-    "q68_triangle_counts": _Q68_SQL,
-    "q69_funnel": _Q69_SQL,
-    "q70_cooccurrence_pmi": _Q70_SQL,
-    "q71_retention": _Q71_SQL,
-    "q72_cheapest_supplier": _Q72_SQL,
-    "q73_pack_sequences": _Q73_SQL,
-    "q74_triangle_total": _Q74_SQL,
-    "q75_surprisal_mix": _Q75_SQL,
-    "q76_shuffle_shards": _Q76_SQL,
-    "q77_full_curation": _Q77_SQL,
-    "q78_media_decode": _Q78_SQL,
-    "q78b_audio_decode": _Q78B_SQL,
-    "q79_semdedup": _Q79_SQL,
-    "q80_bigram_perplexity": _Q80_SQL,
-    "q81_sq8_ann": _Q81_SQL,
-    "q82_bloom_decontam": _Q82_SQL,
-    "q83_token_budget": _Q83_SQL,
-    "q84_pq_ann": _Q84_SQL,
-    "q85_pq_rerank": _Q85_SQL,
-    "q86_kcore": _Q86_SQL,
-    "q87_length_batches": _Q87_SQL,
-    "q88_cdc_snapshot": _Q88_SQL,
-    "q89_scd2_history": _Q89_SQL,
-    "q90_hll_distinct": _Q90_SQL,
-    "q91_cms_heavy_hitters": _Q91_SQL,
-    "q92_zscore_outliers": _Q92_SQL,
-    "q93_label_propagation": _Q93_SQL,
-    "q94_weighted_sample": _Q94_SQL,
-    "q95_volume_shipping": _Q95_SQL,
-    "q96_product_profit": _Q96_SQL,
-    "q97_important_parts": _Q97_SQL,
-    "q98_supplier_variety": _Q98_SQL,
-    "q99_large_orders": _Q99_SQL,
-    "q100_bracket_revenue": _Q100_SQL,
-    "q101_excess_suppliers": _Q101_SQL,
-    "q102_waiting_suppliers": _Q102_SQL,
-    "q103_bfs_hops": _Q103_SQL,
-    "q104_hashed_classifier": _Q104_SQL,
-    "q105_concurrency": _Q105_SQL,
-    "q106_bpe_train": _Q106_SQL,
-    "q107_bm25_retrieval": _Q107_SQL,
-    "q108_profile_events": _Q108_SQL,
-    "q109_fuzzy_supplier_match": _Q109_SQL,
-    "q110_attribution": _Q110_SQL,
-    "q111_bm25_multi": _Q111_SQL,
-    "q112_clustering_coeff": _Q112_SQL,
-    "q113_ewma": _Q113_SQL,
-    "q114_markov_transitions": _Q114_SQL,
-    "q115_filtered_revenue": _Q115_SQL,
-    "q116_priority_by_class": _Q116_SQL,
-    "q117_promo_share": _Q117_SQL,
-    "q118_top_supplier": _Q118_SQL,
-    "q119_histogram_quantiles": _Q119_SQL,
-    "q120_lineno_gaps": _Q120_SQL,
-    "q121_orphan_audit": _Q121_SQL,
-    "q122_event_paths": _Q122_SQL,
-    "q123_segment_mode": _Q123_SQL,
-    "q124_spend_deciles": _Q124_SQL,
-    "q125_video_frames": _Q125_SQL,
-    "q125b_mjpeg_frames": _Q125B_SQL,
-    "q126_local_supplier_volume": _Q126_SQL,
-    "q127_market_share": _Q127_SQL,
-    "q128_returned_items": _Q128_SQL,
-    "q129_sales_opportunity": _Q129_SQL,
-    "q130_variant_json": _Q130_SQL,
-    "q131_k_anonymity": _Q131_SQL,
-    "q132_hard_negatives": _Q132_SQL,
-    "q133_kcenter_sample": _Q133_SQL,
-    "q134_keep_best": _Q134_SQL,
-    "q135_incremental_neardup": _Q135_SQL,
-    "q136_leakage_safe_split": _Q136_SQL,
-    "q137_trained_classifier": _Q137_SQL,
-    "q138_importance_resample": _Q138_SQL,
-    "q139_dup_substrings": _Q139_SQL,
-    "q140_substring_scrub": _Q140_SQL,
-    "q141_margin_pairs": _Q141_SQL,
-    "q142_ann_margin_pairs": _Q142_SQL,
-    "q143_approx_triangles": _Q143_SQL,
-    "q144_chain_components": _Q144_SQL,
-    "q145_budget_stream_replay": _Q145_SQL,
-}
+QUERIES = {**{name: CATALOG[name] for name in _WINDOW_PRIORITY}, **CATALOG}

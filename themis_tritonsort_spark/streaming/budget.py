@@ -135,7 +135,8 @@ def token_budget_replay(
     batch k's consumed total.
 
     Returns a batch DataFrame (group, id, n_tokens, cum_tokens) read
-    back from the memory sink after the availableNow run terminates.
+    back from the memory sink after the availableNow run terminates;
+    the sink's temp view is dropped before returning.
     """
     # Pre-tokenize BEFORE the replay write (guide §2.3/§8: move
     # metadata, not payloads): the stream's only consumers are the
@@ -213,6 +214,7 @@ def token_budget_replay(
             finished = q.awaitTermination(300)
             q.stop()
             if not finished:
+                spark.catalog.dropTempView(name)
                 raise TimeoutError(
                     f"token budget replay {name} did not finish in 300 s"
                 )
@@ -220,7 +222,10 @@ def token_budget_replay(
             spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
     finally:
         shutil.rmtree(root, ignore_errors=True)
-    return spark.table(name)
+    # The frame keeps the sink's rows after its view is dropped.
+    out = spark.table(name)
+    spark.catalog.dropTempView(name)
+    return out
 
 
 def _parse_bytes(spark: SparkSession, v: str) -> int:

@@ -1,7 +1,13 @@
-"""Scratch: targeted oracle compares (mirrors the driver gate)."""
+"""Targeted oracle compares for a few queries (mirrors the driver gate).
+
+    python tools/check_q.py q141_margin_pairs              # sf0.001+sf0.01
+    python tools/check_q.py q20_ann_topk,q38_cosine_neardup 0.01
+"""
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+# The package of THIS checkout, wherever it lives.
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from themis_tritonsort_spark.session import get_spark
 from themis_tritonsort_spark import queries as Q
