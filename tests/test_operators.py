@@ -87,29 +87,33 @@ def test_with_global_rank_is_contiguous_total_order(spark):
     assert keys == sorted(keys)
 
 
-def test_with_global_rank_release_bounds_cache(spark):
-    # Chained sorts with the release hook must not accumulate cached
-    # blocks: each sort's persisted intermediate is unpersisted after
-    # its action, so the persistent-RDD count returns to baseline.
-    jsc = spark.sparkContext._jsc.sc()
-    baseline = jsc.getPersistentRDDs().size()
+def test_with_global_rank_chained_leaves_no_cache(spark):
+    # Chained sorts must not accumulate Dataset caches: each sort's
+    # reused intermediate is a lazy local checkpoint, so the session's
+    # CacheManager stays empty with no release call, and every RDD the
+    # loop left persistent is a checkpoint owned by a result's lineage
+    # (freed by the ContextCleaner with it).
+    jsc = spark.sparkContext._jsc
+    baseline = set(jsc.getPersistentRDDs().keys())
+    df = spark.range(200).select(
+        (F.col("id") * 31 % 97).alias("k"), F.col("id").alias("uid")
+    )
     for i in range(3):
-        released: list = []
-        df = spark.range(200).select(
-            ((F.col("id") * 31 + i) % 97).alias("k"), F.col("id").alias("uid")
-        )
-        out = with_global_rank(
-            df, ["k", "uid"], rank_col="pos", num_partitions=4, release=released
-        )
-        assert out.count() == 200
-        assert len(released) == 1
-        for cached in released:
-            cached.unpersist(blocking=True)
-    # <= not ==: Spark's async ContextCleaner may concurrently drop
-    # UNRELATED stale cached RDDs from earlier tests in the shared
-    # session, shrinking the count below the captured baseline.  The
-    # contract under test is only that THIS loop accumulates nothing.
-    assert jsc.getPersistentRDDs().size() <= baseline
+        out = with_global_rank(df, ["k", "uid"], rank_col="pos", num_partitions=4)
+        rows = out.orderBy("pos").collect()
+        assert [r["pos"] for r in rows] == list(range(1, 201))
+        keys = [(r["k"], r["uid"]) for r in rows]
+        assert keys == sorted(keys)
+        assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
+        # chain: the next sort orders by the previous one's rank
+        df = out.select(((F.col("pos") * 7 + i) % 53).alias("k"), "uid")
+    left = {
+        k: v
+        for k, v in jsc.getPersistentRDDs().items()
+        if k not in baseline
+    }
+    assert left, "with_global_rank stopped materializing its ranked relation?"
+    assert all(v.rdd().isCheckpointed() for v in left.values())
 
 
 def test_with_global_prefix_sum_matches_single_window(spark):
@@ -456,11 +460,12 @@ def test_graph_ops_cache_ownership(spark, monkeypatch):
     """ADVICE r09 cache discipline: the iterative graph ops
     (connected_components, kcore_vertices, label_propagation, bfs_hops)
     materialize internally and release EVERY persist they take before
-    returning; the triangle family returns lazy data-sized results that
-    keep reading the persisted canonical edge set, so they expose the
-    handle as ``result.cached_deps`` (the q85 caller-owned contract)
-    instead of leaking it silently."""
+    returning; pagerank, connected_components_star and the triangle
+    family take no persist at all (their reused relations are lazy
+    local checkpoints owned by the result's lineage).  After every op
+    the session's CacheManager is empty, with no clearCache()."""
     from themis_tritonsort_spark.operators import components as C
+    from themis_tritonsort_spark.operators.pagerank import pagerank
 
     edges = spark.createDataFrame(
         [(1, 2), (2, 3), (1, 3), (3, 4), (5, 6)], ["src", "dst"]
@@ -484,6 +489,9 @@ def test_graph_ops_cache_ownership(spark, monkeypatch):
         lvl = df.storageLevel
         return lvl.useMemory or lvl.useDisk
 
+    def cache_empty():
+        return spark._jsparkSession.sharedState().cacheManager().isEmpty()
+
     # self-releasing ops: every persist taken is released on return
     for call in (
         lambda: C.connected_components(edges).collect(),
@@ -495,23 +503,34 @@ def test_graph_ops_cache_ownership(spark, monkeypatch):
         call()
         assert taken, "op stopped persisting its edge set?"
         assert not any(cached(h) for h in taken)
+        assert cache_empty()
 
-    # lazy triangle family: the edge persist is caller-owned and exposed
-    for op in (
-        lambda: C.triangle_counts(edges),
-        lambda: C.triangle_total_degree_oriented(edges),
-        lambda: C.local_clustering_coefficient(edges),
+    # checkpoint-only ops: no persist is taken at all
+    for call in (
+        lambda: pagerank(edges, iterations=3).collect(),
+        lambda: C.connected_components_star(edges).collect(),
+    ):
+        taken.clear()
+        call()
+        assert taken == []
+        assert cache_empty()
+
+    # lazy triangle family: no persist is taken, and the answer is the
+    # exact one (the single triangle {1, 2, 3}) on every read
+    for op, want in (
+        (lambda: C.triangle_counts(edges), [(1, 1)]),
+        (lambda: C.triangle_total_degree_oriented(edges), [(1,)]),
+        (
+            lambda: C.local_clustering_coefficient(edges),
+            [(1, 2, 1, 1_000_000), (2, 2, 1, 1_000_000), (3, 3, 1, 333_333)],
+        ),
     ):
         taken.clear()
         out = op()
-        assert out.cached_deps == taken  # the handle IS the exposure
-        first = out.collect()
-        assert all(cached(h) for h in out.cached_deps)
-        for h in out.cached_deps:
-            h.unpersist(blocking=True)
-        assert not any(cached(h) for h in out.cached_deps)
-        # releasing the cache must not change the answer (lineage intact)
-        assert sorted(map(tuple, out.collect())) == sorted(map(tuple, first))
+        assert sorted(map(tuple, out.collect())) == want
+        assert sorted(map(tuple, out.collect())) == want
+        assert taken == []
+        assert cache_empty()
 
 
 def test_triangle_total_doulion(spark):

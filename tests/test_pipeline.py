@@ -267,6 +267,41 @@ def test_key_range_recovery_recomputes_only_lost_ranges(spark, pipe_root):
     assert recovered == expected
 
 
+def test_recover_lost_ranges_leaves_session_conf(spark, pipe_root, monkeypatch):
+    """Recovery asks for dynamic partition overwrite on its own writer:
+    the session's partitionOverwriteMode is never written, and the
+    recovered stage still keeps every surviving range."""
+    from pyspark.sql.conf import RuntimeConfig
+
+    from themis_tritonsort_spark.plans.pipeline import (
+        Stage,
+        recover_lost_ranges,
+        run_ranged_stage,
+    )
+
+    key = "spark.sql.sources.partitionOverwriteMode"
+    stage = Stage("ids", lambda s, _inp: s.range(400).select("id"))
+    path = run_ranged_stage(spark, stage, {}, pipe_root, "id", [100, 200, 300])
+    shutil.rmtree(os.path.join(path, "__range=1"))
+    before = spark.conf.get(key)
+    writes = []
+    real_set = RuntimeConfig.set
+
+    def spy_set(self, k, v):
+        writes.append(k)
+        return real_set(self, k, v)
+
+    monkeypatch.setattr(RuntimeConfig, "set", spy_set)
+    recover_lost_ranges(
+        spark, stage, {}, pipe_root, "id", [100, 200, 300], lost=[1]
+    )
+    monkeypatch.undo()
+    assert key not in writes
+    assert spark.conf.get(key) == before
+    ids = sorted(r["id"] for r in spark.read.parquet(path).collect())
+    assert ids == list(range(400))
+
+
 def test_lost_range_predicate_validates(spark):
     from themis_tritonsort_spark.plans.pipeline import lost_range_predicate
 

@@ -22,6 +22,28 @@ def _plan(df, mode: str = "formatted") -> str:
     return buf.getvalue()
 
 
+def _with_checkpoint_plans(spark, monkeypatch, build):
+    """Build a frame while spying on localCheckpoint: returns the
+    frame's simple plan and the simple plan of every relation the
+    build checkpointed, captured before the checkpoint runs.  A
+    checkpoint reads as a ``Scan ExistingRDD`` leaf in its consumers'
+    plans, so its own subtree is printed (and counted) exactly once."""
+    # patch the CONCRETE class (pyspark 4: pyspark.sql.DataFrame is an
+    # abstract facade; classic sessions instantiate a subclass)
+    cls = type(spark.range(1))
+    orig = cls.localCheckpoint
+    inner: list[str] = []
+
+    def spy(self, *a, **k):
+        inner.append(_plan(self, "simple"))
+        return orig(self, *a, **k)
+
+    monkeypatch.setattr(cls, "localCheckpoint", spy)
+    df = build()
+    monkeypatch.undo()
+    return _plan(df, "simple"), inner
+
+
 def test_q14_filter_and_projection_reach_scan(spark):
     plan = _plan(q.q14_pricing_summary(spark, SF_SMOKE))
     assert "PushedFilters" in plan and "l_shipdate" in plan.split("PushedFilters", 1)[1]
@@ -43,16 +65,22 @@ def test_q16_topk_avoids_global_sort(spark):
     assert "TakeOrderedAndProject" in plan
 
 
-def test_q01_rank_without_single_partition_window(spark):
-    plan = _plan(q.q01_sort_events(spark, SF_SMOKE), mode="simple")
+def test_q01_rank_without_single_partition_window(spark, monkeypatch):
+    plan, inner = _with_checkpoint_plans(
+        spark, monkeypatch, lambda: q.q01_sort_events(spark, SF_SMOKE)
+    )
+    # the ranked relation is materialized once, as one lazy checkpoint
+    assert len(inner) == 1
+    ranked = inner[0]
     # global rank must come from range partition + per-partition offsets;
     # the only SinglePartition exchange allowed is the numPartitions-row
     # offsets aggregate, never a window over the data itself
-    assert "rangepartitioning" in plan
-    assert plan.count("SinglePartition") <= 1
-    # the ranked relation is materialized once — the offsets branch must
-    # read the cache, not re-run the scan + range shuffle
-    assert "InMemoryTableScan" in plan
+    assert "rangepartitioning" in ranked
+    assert ranked.count("SinglePartition") + plan.count("SinglePartition") <= 1
+    # the offsets branch and the main pass both read the checkpoint,
+    # never re-running the scan + range shuffle
+    assert "Scan ExistingRDD" in plan
+    assert "rangepartitioning" not in plan and "FileScan" not in plan
 
 
 def test_q36_asof_single_shuffle(spark):
@@ -199,16 +227,22 @@ def test_ivf_storage_probe_prunes_cells(spark, tmp_path):
     )
 
 
-def test_q73_prefix_sum_avoids_single_partition_window(spark):
+def test_q73_prefix_sum_avoids_single_partition_window(spark, monkeypatch):
     # The packing cumsum must be the two-level form: a range exchange
     # plus per-partition windows — never one global window that would
     # serialize the corpus through a single partition.
-    plan = _plan(q.q73_pack_sequences(spark, SF_SMOKE), mode="simple")
-    assert "rangepartitioning" in plan.lower()
+    plan, inner = _with_checkpoint_plans(
+        spark, monkeypatch, lambda: q.q73_pack_sequences(spark, SF_SMOKE)
+    )
+    assert len(inner) == 1
+    summed = inner[0]
+    assert "rangepartitioning" in summed.lower()
     # the only SinglePartition exchange allowed is the
     # numPartitions-row offsets aggregate (same shape as q01's rank)
-    assert plan.count("SinglePartition") <= 1
-    assert "InMemoryTableScan" in plan
+    assert summed.count("SinglePartition") + plan.count("SinglePartition") <= 1
+    # both branches read the one checkpoint instead of re-running it
+    assert "Scan ExistingRDD" in plan
+    assert "rangepartitioning" not in plan.lower() and "FileScan" not in plan
 
 
 def test_q75_bucketing_avoids_corpus_ntile(spark):
@@ -230,26 +264,23 @@ def test_q75_bucketing_avoids_corpus_ntile(spark):
             assert "Sort" not in line
 
 
-def test_q77_single_scan_feeds_all_signals(spark):
-    # the round-4 rewrite: ONE FileScan of documents (persisted) must
-    # feed quality/lang/dupes/repetition/decontamination.  Collapse the
-    # repeated cached-subtree printouts the way the plan audit does,
-    # then count real scans.
+def test_q77_single_scan_feeds_all_signals(spark, monkeypatch):
+    # the round-4 rewrite: ONE FileScan of documents (checkpointed) must
+    # feed quality/lang/dupes/repetition/decontamination.  Count real
+    # scans and exchanges over the result plan plus each checkpointed
+    # relation's own plan (each printed once: its consumers read it as
+    # a Scan ExistingRDD leaf).
     import re
-    import sys
 
-    sys.path.insert(0, __file__.rsplit("/tests/", 1)[0])
-    from tools.plan_audit import _dedup_cached
-
-    spark.catalog.clearCache()
-    df = q.q77_full_curation(spark, SF_SMOKE)
-    s = _dedup_cached(_plan(df, "simple"))
+    plan, inner = _with_checkpoint_plans(
+        spark, monkeypatch, lambda: q.q77_full_curation(spark, SF_SMOKE)
+    )
+    s = "\n".join([plan, *inner])
     assert s.count("FileScan") == 1
     exchanges = len(
         re.findall(r"(?<!Reused)Exchange (hash|range|Single|RoundRobin)", s)
     )
     assert exchanges <= 10  # was 16 as a five-scan composition
-    spark.catalog.clearCache()
 
 
 def test_q70_pmi_no_eager_count(spark):
@@ -286,6 +317,32 @@ def test_text_scoring_ops_launch_no_eager_jobs(spark):
     surprisal_mixture(docs, "doc_id", "text", n_buckets=4)
     after = len(tracker.getJobIdsForGroup(None))
     assert after == before
+
+
+def test_text_scoring_ops_tokenize_once(spark):
+    # With no cache and no checkpoint, tf-idf, unigram surprisal and the
+    # mixture still tokenize the corpus ONCE: every branch reads the
+    # same (doc, word) exchange, which the executed plan reuses.
+    from themis_tritonsort_spark.data import table
+    from themis_tritonsort_spark.operators.textstats import (
+        surprisal_mixture,
+        tf_idf_topk,
+        unigram_surprisal,
+    )
+
+    docs = table(spark, SF_SMOKE, "documents")
+    for df in (
+        tf_idf_topk(docs, "doc_id", "text", k=3),
+        unigram_surprisal(docs, "doc_id", "text"),
+        surprisal_mixture(docs, "doc_id", "text", n_buckets=4),
+    ):
+        df.collect()
+        final = (
+            df._jdf.queryExecution().executedPlan().toString()
+            .split("== Initial Plan ==")[0]
+        )
+        assert final.count("Generate explode") == 1
+        assert "ReusedExchange" in final
 
 
 def test_q95_fact_never_sort_merge_joined(spark):
@@ -459,14 +516,11 @@ def test_q140_scrub_spans_ride_a_doc_keyed_join(spark):
     assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan
 
 
-def test_q85_rerank_barrier_holds_in_both_modes(spark):
-    """ADVICE r07: pq_rerank_topk's tier-2 pushdown barrier has two
-    flavors — localCheckpoint (default; lineage-truncating, ~30-40 %
-    faster, the bench shape) and persist(MEMORY_AND_DISK) (lineage
-    intact: an executor loss recomputes instead of failing — the
-    cluster-deployment mode).  Pin that BOTH stop Catalyst from
-    inlining the micro-quantize fold below the shortlist join onto
-    every corpus row."""
+def test_q85_rerank_barrier_holds(spark, monkeypatch):
+    """ADVICE r07: pq_rerank_topk's tier-2 pushdown barrier (a lazy
+    local checkpoint) must stop Catalyst from inlining the
+    micro-quantize fold below the shortlist join onto every corpus
+    row."""
     from pyspark.sql import functions as F
 
     from themis_tritonsort_spark.data import table
@@ -479,53 +533,25 @@ def test_q85_rerank_barrier_holds_in_both_modes(spark):
     queries = emb.where(F.col("vec_id") < 3)
     cb = pq_codebook(emb, "vec_id", "embedding", m=8, k=16)
 
-    # default mode: the checkpoint boundary shows as an RDD-scan leaf;
-    # the quantize can only sit above it (the corpus parquet scan is
-    # sealed inside the deferred checkpoint computation)
+    # the checkpoint boundary shows as an RDD-scan leaf; the quantize
+    # can only sit above it (the corpus parquet scan is sealed inside
+    # the deferred checkpoint computation)
+    _, inner = _with_checkpoint_plans(
+        spark,
+        monkeypatch,
+        lambda: pq_rerank_topk(emb, queries, "vec_id", "embedding", cb, 5),
+    )
     df = pq_rerank_topk(emb, queries, "vec_id", "embedding", cb, 5)
     plan = df._jdf.queryExecution().executedPlan().toString()
     assert "InMemoryRelation" not in plan
+    assert "Scan ExistingRDD" in plan
     assert "FLOOR(((1000000.0" in plan  # tier-2 quantize is real
-
-    # persist mode: the cached subtree (every line indented deeper
-    # than the InMemoryRelation node) must carry NO quantize work
-    df2 = pq_rerank_topk(
-        emb, queries, "vec_id", "embedding", cb, 5, barrier="persist"
-    )
-    plan2 = df2._jdf.queryExecution().executedPlan().toString()
-    assert "InMemoryRelation" in plan2
-    lines = plan2.splitlines()
-    idx = next(i for i, l in enumerate(lines) if "InMemoryRelation" in l)
-    assert "disk" in lines[idx] and "memory" in lines[idx]
-    # The node may render as a '+-' or ':-' child (or change prefix
-    # across Spark versions) — locate the indent by regex and fail
-    # with a clear assert instead of a ValueError (ADVICE r08).
-    m = re.search(r"[+:]- InMemoryRelation", lines[idx])
-    assert m, (
-        "InMemoryRelation line has no recognizable tree prefix: "
-        + lines[idx]
-    )
-    indent = m.start()
-    cached = []
-    for l in lines[idx + 1:]:
-        body = l.rstrip()
-        if not body:
-            continue
-        pos = max(body.find("+-"), body.find(":-"))
-        if pos != -1 and pos <= indent:
-            break
-        cached.append(body)
-    assert cached, "InMemoryRelation subtree not found in plan text"
-    sub = "\n".join(cached)
-    assert "FLOOR(((1000000.0" not in sub and "raise_error" not in sub
-    assert "FLOOR(((1000000.0" in plan2
-
-    import pytest as _pytest
-
-    with _pytest.raises(ValueError, match="barrier"):
-        pq_rerank_topk(
-            emb, queries, "vec_id", "embedding", cb, 5, barrier="nope"
-        )
+    # the checkpointed survivors (the one relation joining the corpus
+    # scan to the shortlist ids) carry NO quantize work
+    surv = [p for p in inner if "FileScan" in p and "neighbor_id" in p]
+    assert surv, "survivor checkpoint not found"
+    for sub in surv:
+        assert "FLOOR(((1000000.0" not in sub and "raise_error" not in sub
 
 
 def test_triangle_family_never_broadcasts_data_sized_tables(spark):

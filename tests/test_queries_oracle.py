@@ -1,5 +1,6 @@
-"""Every declared query must match its DuckDB oracle at sf0.001 (the
-driver runs the same compare at sf0.01)."""
+"""Every declared query must match its DuckDB oracle at sf0.001, and
+must leave no Dataset cache behind in the session once its result is
+consumed."""
 
 from __future__ import annotations
 
@@ -14,3 +15,5 @@ from .oracle_harness import compare
 def test_query_matches_oracle(spark, sf_dir, name):
     result = compare(spark, sf_dir, QUERIES[name], ORACLES[name])
     assert result["ok"], f"{name}: {result}"
+    cache = spark._jsparkSession.sharedState().cacheManager()
+    assert cache.isEmpty(), f"{name} left a Dataset cache in the session"

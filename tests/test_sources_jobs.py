@@ -223,10 +223,19 @@ def test_wordcount_job_spec(spark):
 
 def test_shared_scan_multi_job(spark):
     # R12 MultiJobMapper semantics: several jobs over ONE scan of the
-    # same input.  Outputs must match running each job alone, the
-    # source must be cached while the batch lives, and release() must
-    # drop it.
+    # same input.  Outputs must match running each job alone, every
+    # output must read the SAME checkpoint of the source (one
+    # materialization, not one scan per job), and the batch must leave
+    # no Dataset cache behind for the caller to release.
     from themis_tritonsort_spark.plans.job import run_shared_scan
+
+    def checkpoint_rdds(out):
+        leaves = out._jdf.queryExecution().analyzed().collectLeaves()
+        return {
+            leaves.apply(i).rdd().id()
+            for i in range(leaves.length())
+            if leaves.apply(i).nodeName() == "LogicalRDD"
+        }
 
     df = spark.createDataFrame(
         [("w1", "the cat and the hat"), ("w2", "the cat")],
@@ -242,15 +251,16 @@ def test_shared_scan_multi_job(spark):
              "reduce_function": "SumValuesReduceFunction"}
         ),
     ]
-    run = run_shared_scan(spark, jobs, df=df)
-    assert run.source.storageLevel.useMemory
-    got = [sorted(map(tuple, out.collect())) for out in run.outputs]
+    outputs = run_shared_scan(spark, jobs, df=df)
+    assert len(outputs) == len(jobs)
+    shared = [checkpoint_rdds(out) for out in outputs]
+    assert len(shared[0]) == 1 and all(s == shared[0] for s in shared)
+    got = [sorted(map(tuple, out.collect())) for out in outputs]
     want = [
         sorted(map(tuple, run_job(spark, j, df=df).collect())) for j in jobs
     ]
     assert got == want
-    run.release(blocking=True)
-    assert not run.source.storageLevel.useMemory
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
 
     # mismatched sources are refused
     with pytest.raises(ValueError, match="share one input"):

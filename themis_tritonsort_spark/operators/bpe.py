@@ -18,7 +18,7 @@ Scale shape — the reason this distributes:
    applied map-side as a Catalyst ``aggregate`` fold over the symbol
    array: pure codegen, no Python UDF, no shuffle.
 3. Lineage is cut per round (localCheckpoint) so R rounds never build
-   an R-deep plan over the persisted vocab.
+   an R-deep plan over the checkpointed vocab.
 
 Determinism: the best pair breaks ties by (count DESC, left ASC,
 right ASC) — a pure function of the data, reproducible by any engine;
@@ -35,7 +35,6 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-from pyspark.storagelevel import StorageLevel
 
 from ..functions.text import tokens
 
@@ -101,9 +100,7 @@ def bpe_train(
     """
     if merges < 0:
         raise ValueError(f"merges must be >= 0, got {merges}")
-    words = word_frequency_table(df, text_col).persist(
-        StorageLevel.MEMORY_AND_DISK
-    )
+    words = word_frequency_table(df, text_col).localCheckpoint(eager=False)
     rules: list[tuple[str, str]] = []
     cur = words
     for _ in range(merges):

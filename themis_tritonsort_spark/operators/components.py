@@ -28,16 +28,9 @@ from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
 
-# Cached-row budget for one (long, long) edge row: 16 payload bytes
-# plus tungsten/cache overhead.  Only feeds a partition-count estimate;
-# within-2x accuracy is plenty.
-_EDGE_ROW_BYTES = 48
-
-
 def sized_edge_npart(
     relation: DataFrame,
     cap: int,
-    known_rows: int | None = None,
     target_bytes: int = 64 << 20,
 ) -> int:
     """Scale-adaptive partition count for a loop-persisted edge
@@ -47,9 +40,7 @@ def sized_edge_npart(
     the caller's defaultParallelism — the pre-r12 static choice, kept
     as the ceiling so an overestimate reproduces the old behavior.
 
-    ``known_rows`` sizes from an exact row count (when the caller just
-    materialized a persisted input); otherwise the optimizer's
-    estimate is used.  The estimate errs HIGH on join/explode
+    Sized from the optimizer's estimate, which errs HIGH on join/explode
     pipelines (q134's LSH-pair relation estimates ~300 GB at sf0.1),
     which clamps to cap — it never under-partitions a genuinely large
     graph; the scan/window pipelines the graph family feeds in here
@@ -59,20 +50,17 @@ def sized_edge_npart(
     from being task-launch-bound (measured: the q134 CC loop 4.1 s ->
     3.4 s at sf0.1 with identical output).
     """
-    if known_rows is not None:
-        est = known_rows * _EDGE_ROW_BYTES
-    else:
-        try:
-            est = int(
-                str(
-                    relation._jdf.queryExecution()
-                    .optimizedPlan()
-                    .stats()
-                    .sizeInBytes()
-                )
+    try:
+        est = int(
+            str(
+                relation._jdf.queryExecution()
+                .optimizedPlan()
+                .stats()
+                .sizeInBytes()
             )
-        except Exception:  # noqa: BLE001 — introspection surprise: old behavior
-            return cap
+        )
+    except Exception:  # noqa: BLE001 — introspection surprise: old behavior
+        return cap
     return max(1, min(cap, -(-est // target_bytes)))
 
 
@@ -80,8 +68,9 @@ def _undirected_edges(
     edges: DataFrame, src: str, dst: str, npart: int
 ) -> DataFrame:
     """Both-orientations (s, d) edge set of the undirected graph,
-    deduped, repartitioned on the propagation key and persisted — the
-    static side every iterative op here joins against each round.
+    deduped and repartitioned on the propagation key — the static side
+    every iterative op here persists for its loop and joins against
+    each round.
 
     Canonicalize-then-mirror (r11, guide §2.3/§2.4): the former
     ``union(half, half-flipped).distinct()`` evaluated the caller's
@@ -96,15 +85,8 @@ def _undirected_edges(
     rows only), so the resulting edge set is identical.
 
     ``npart`` is a CAP (r12): the actual partition count is
-    size-derived via :func:`sized_edge_npart`.  A persisted input (the
-    LSH-pair callers persist their candidate relation) is materialized
-    first — work the loop's first round needs anyway — so the sizing
-    uses its exact row count instead of a join-pipeline estimate.
+    size-derived via :func:`sized_edge_npart`.
     """
-    known = None
-    if edges.storageLevel != StorageLevel.NONE:
-        # mirrored rows <= 2 * input pairs (canonical dedup only shrinks)
-        known = 2 * edges.count()
     canon = (
         edges.select(
             F.least(F.col(src), F.col(dst)).alias("s"),
@@ -116,12 +98,7 @@ def _undirected_edges(
     mirrored = canon.unionByName(
         canon.select(F.col("d").alias("s"), F.col("s").alias("d"))
     )
-    return (
-        mirrored.repartition(
-            sized_edge_npart(mirrored, cap=npart, known_rows=known), "s"
-        )
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    )
+    return mirrored.repartition(sized_edge_npart(mirrored, cap=npart), "s")
 
 
 def connected_components(
@@ -147,7 +124,9 @@ def connected_components(
     # Undirected: materialize BOTH orientations once, partitioned by the
     # propagation source — each round is then ONE join (src side
     # co-located with the persisted partitioning) instead of two.
-    e = _undirected_edges(edges, src, dst, npart)
+    e = _undirected_edges(edges, src, dst, npart).persist(
+        StorageLevel.MEMORY_AND_DISK
+    )
 
     labels = e.select(F.col("s").alias("vid")).distinct().withColumn(
         "label", F.col("vid")
@@ -433,41 +412,16 @@ def dedup_clusters(
     return cc.select("vid", F.col("component").alias("canonical_id"))
 
 
-def _caller_owned_cache(result: DataFrame, *handles: DataFrame) -> DataFrame:
-    """Attach persisted upstream handles to a lazily-returned result —
-    the q85 persist-mode contract (ADVICE r08): ``result`` is lazy and
-    keeps reading the persisted ``handles``, so they CANNOT be
-    unpersisted here; the cached relations live until the CALLER
-    releases them.  The handles ride on the result as
-    ``result.cached_deps`` — in a long-lived session, after consuming
-    the result, call ``h.unpersist()`` for each (or
-    ``spark.catalog.clearCache()``) or repeated calls accumulate
-    cached edge sets.  bench.py clears the cache between passes;
-    library callers own this themselves.
-
-    CAVEAT (ADVICE r10): ``cached_deps`` is a plain Python attribute,
-    and every DataFrame transformation returns a NEW DataFrame — so
-    ``op(...).select(...)`` silently drops the handles.  Grab them
-    BEFORE wrapping (``r = op(...); deps = r.cached_deps;
-    r.select(...)``); if the original reference is gone,
-    ``spark.catalog.clearCache()`` is the recovery path."""
-    result.cached_deps = list(handles)
-    return result
-
-
 def _oriented_triangles(
     edges: DataFrame, src: str = "src", dst: str = "dst"
 ) -> tuple[DataFrame, DataFrame]:
     """Enumerate every triangle of the undirected graph EXACTLY ONCE as
     (u, w1, w2) — the three corners, with u the minimum corner in the
     (degree, id) total order and w1 < w2 — returning ``(triangles,
-    canonical_edges)`` so callers reuse the persisted canonical edge
-    set for their own degree work.  The canonical edge set is
-    persisted MEMORY_AND_DISK and, because every consumer returns a
-    lazy result, cannot be unpersisted here — the PUBLIC ops expose
-    it as ``cached_deps`` on their results via
-    :func:`_caller_owned_cache`; see its docstring for the ownership
-    contract.  The compact-forward
+    degrees)`` so callers reuse the checkpointed degree relation for
+    their own degree work.  The reused relations are lazy local
+    checkpoints: computed once, owned by the result's lineage.  The
+    compact-forward
     discipline shared by the per-vertex counts, the global count, and
     the clustering coefficient: orient each canonical edge from its
     lower-(degree, id) endpoint to the higher one, build wedges only
@@ -494,21 +448,20 @@ def _oriented_triangles(
         )
         .where(F.col("a") != F.col("b"))
         .distinct()
-        .persist(StorageLevel.MEMORY_AND_DISK)
+        .localCheckpoint(eager=False)
     )
-    # Persisted (r11, guide §5): the relation feeds BOTH degree-attach
+    # Checkpointed (r11, guide §5): the relation feeds BOTH degree-attach
     # builds, and the r11 plan audit showed the join-key renames (a vs
     # b) pushing different isnotnull filters into the two subtrees, so
     # neither exchange reuse nor cache-plan matching fired — the whole
-    # 2|E|-row union+aggregate (and its two cached-e scans) executed
-    # twice per query.  Vertex-sized; rides the caller-owned
-    # cached_deps contract like e itself.
+    # 2|E|-row union+aggregate (and its two e scans) executed twice per
+    # query.  Vertex-sized.
     degrees = (
         e.select(F.col("a").alias("v"))
         .unionAll(e.select(F.col("b").alias("v")))
         .groupBy("v")
         .agg(F.count(F.lit(1)).alias("deg"))
-        .persist(StorageLevel.MEMORY_AND_DISK)
+        .localCheckpoint(eager=False)
     )
     da = degrees.select(F.col("v").alias("a"), F.col("deg").alias("__da")).hint(
         "shuffle_hash"
@@ -520,15 +473,15 @@ def _oriented_triangles(
     a_first = (F.col("__da") < F.col("__db")) | (
         (F.col("__da") == F.col("__db")) & (F.col("a") < F.col("b"))
     )
-    # Persisted (r11, guide §5): BOTH sides of the wedge self-join are
-    # this relation under different aliases, and the r11 plan audit
+    # Checkpointed (r11, guide §5): BOTH sides of the wedge self-join
+    # are this relation under different aliases, and the r11 plan audit
     # showed the aliased sides defeating exchange reuse — the whole
     # degree-attach chain (two shuffled-hash joins over e) executed
-    # once PER SIDE.  Edge-sized, same class as e; rides cached_deps.
+    # once PER SIDE.  Edge-sized, same class as e.
     oriented = withdeg.select(
         F.when(a_first, F.col("a")).otherwise(F.col("b")).alias("u"),
         F.when(a_first, F.col("b")).otherwise(F.col("a")).alias("w"),
-    ).persist(StorageLevel.MEMORY_AND_DISK)
+    ).localCheckpoint(eager=False)
     o1 = oriented.select("u", F.col("w").alias("w1"))
     o2 = oriented.select("u", F.col("w").alias("w2")).hint("merge")
     # each unordered out-pair once; w1 < w2 makes the pair id-canonical,
@@ -551,7 +504,7 @@ def _oriented_triangles(
     closing = e.select(F.col("a").alias("w1"), F.col("b").alias("w2")).hint(
         "shuffle_hash"
     )
-    return pairs.join(closing, ["w1", "w2"], "left_semi"), e, degrees, oriented
+    return pairs.join(closing, ["w1", "w2"], "left_semi"), degrees
 
 
 def triangle_counts(
@@ -570,11 +523,10 @@ def triangle_counts(
     earlier raw-id node-iterator paid the sum-of-degrees-squared wedge
     blowup that degree orientation caps at O(sqrt(|E|)) per key.
     """
-    tris, e, degrees, oriented = _oriented_triangles(edges, src, dst)
-    out = tris.groupBy(
+    tris, _ = _oriented_triangles(edges, src, dst)
+    return tris.groupBy(
         F.least(F.col("u"), F.col("w1"), F.col("w2")).alias("vid")
     ).agg(F.count(F.lit(1)).alias("n_triangles"))
-    return _caller_owned_cache(out, e, degrees, oriented)
 
 
 def triangle_total_degree_oriented(
@@ -608,9 +560,8 @@ def triangle_total_degree_oriented(
     died building a >1 GB hashed relation.  The probe tool caught
     both; the only broadcast this operator should ever do is none.
     """
-    tris, e, degrees, oriented = _oriented_triangles(edges, src, dst)
-    out = tris.agg(F.count(F.lit(1)).cast("long").alias("n_triangles"))
-    return _caller_owned_cache(out, e, degrees, oriented)
+    tris, _ = _oriented_triangles(edges, src, dst)
+    return tris.agg(F.count(F.lit(1)).cast("long").alias("n_triangles"))
 
 
 def triangle_total_doulion(
@@ -647,9 +598,6 @@ def triangle_total_doulion(
     of the graph, independent of partitioning, and the DuckDB oracle
     replays it bit-for-bit.  ``p_ppm`` must divide 1e6 so the scale
     factor (1e6/p_ppm)^3 is integer-exact (hash-stable output).
-
-    Cache ownership: same caller-owned ``cached_deps`` contract as the
-    exact triangle ops (see :func:`_caller_owned_cache`).
     """
     if not 0 < p_ppm <= 1_000_000 or 1_000_000 % p_ppm:
         raise ValueError(
@@ -662,13 +610,12 @@ def triangle_total_doulion(
         F.substring(F.md5(F.concat_ws(":", a, b)), 1, 15), 16, 10
     ).cast("long")
     sampled = edges.where(hv % 1_000_000 < F.lit(p_ppm))
-    tris, e, degrees, oriented = _oriented_triangles(sampled, src, dst)
-    out = tris.agg(
+    tris, _ = _oriented_triangles(sampled, src, dst)
+    return tris.agg(
         (F.count(F.lit(1)) * F.lit(inv**3)).cast("long").alias(
             "n_triangles_est"
         )
     )
-    return _caller_owned_cache(out, e, degrees, oriented)
 
 
 def kcore_vertices(
@@ -717,7 +664,9 @@ def kcore_vertices(
         raise ValueError(f"k must be >= 1, got {k}")
     spark = edges.sparkSession
     npart = spark.sparkContext.defaultParallelism
-    e = _undirected_edges(edges, src, dst, npart)
+    e = _undirected_edges(edges, src, dst, npart).persist(
+        StorageLevel.MEMORY_AND_DISK
+    )
     deg = e.groupBy("s").agg(F.count(F.lit(1)).alias("deg")).localCheckpoint(
         eager=False
     )
@@ -815,7 +764,9 @@ def label_propagation(
         raise ValueError(f"rounds must be >= 0, got {rounds}")
     spark = edges.sparkSession
     npart = spark.sparkContext.defaultParallelism
-    e = _undirected_edges(edges, src, dst, npart)
+    e = _undirected_edges(edges, src, dst, npart).persist(
+        StorageLevel.MEMORY_AND_DISK
+    )
     labels = (
         e.select(F.col("s").alias("vid"))
         .distinct()
@@ -886,7 +837,9 @@ def bfs_hops(
         raise ValueError(f"rounds must be >= 0, got {rounds}")
     spark = edges.sparkSession
     npart = spark.sparkContext.defaultParallelism
-    e = _undirected_edges(edges, src, dst, npart)
+    e = _undirected_edges(edges, src, dst, npart).persist(
+        StorageLevel.MEMORY_AND_DISK
+    )
     dist = (
         seeds.select(F.col(seed_col).alias("vid"))
         .distinct()
@@ -936,10 +889,10 @@ def local_clustering_coefficient(
     triangle exactly once, per-key wedge fan-out capped at
     O(sqrt(|E|)) under any skew — the earlier node-iterator paid the
     sum-of-degrees-squared blowup) + a 3-way corner explode that is
-    triangle-sized, + one degree aggregate over the same persisted
+    triangle-sized, + one degree aggregate over the same checkpointed
     canonical edge set.
     """
-    tris, e, degrees, oriented = _oriented_triangles(edges, src, dst)
+    tris, degrees = _oriented_triangles(edges, src, dst)
     per_vertex = (
         tris.select(
             F.explode(
@@ -949,13 +902,13 @@ def local_clustering_coefficient(
         .groupBy("vid")
         .agg(F.count(F.lit(1)).alias("n_tri"))
     )
-    # The enumerator already built and persisted this exact relation
+    # The enumerator already built and checkpointed this exact relation
     # for its degree orientation — read it instead of re-aggregating
     # the edge set a third time (r11, guide §5).
     deg = degrees.select(F.col("v").alias("vid"), "deg")
     num = (F.col("n_tri") * F.lit(2_000_000)).cast("double")
     den = (F.col("deg") * (F.col("deg") - 1)).cast("double")
-    out = (
+    return (
         deg.where(F.col("deg") >= 2)
         .join(per_vertex, "vid", "left_outer")
         .na.fill({"n_tri": 0})
@@ -966,4 +919,3 @@ def local_clustering_coefficient(
             F.round(num / den).cast("long").alias("lcc_ppm"),
         )
     )
-    return _caller_owned_cache(out, e, degrees, oriented)

@@ -102,9 +102,11 @@ def jaccard_pairs(
     """
     # Tokenize/shingle each doc exactly ONCE: materialize the per-doc
     # shingle-set table and derive the exploded view, frequency table,
-    # and prefixes from it.  Without the persist, Spark's lazy DAG
+    # and prefixes from it.  Without the checkpoint, Spark's lazy DAG
     # re-runs the tokenize+ngram scan once per branch.
-    docsets = _doc_shingle_sets(df, id_col, text_col, n).persist()
+    docsets = _doc_shingle_sets(df, id_col, text_col, n).localCheckpoint(
+        eager=False
+    )
     sh = docsets.select("doc", F.explode("set").alias("shingle"))
 
     if max_df is not None:
@@ -122,7 +124,7 @@ def jaccard_pairs(
             .agg(F.array_sort(F.collect_set("shingle")).alias("set"))
             .withColumn("sz", F.size("set"))
             .where(F.col("sz") > 0)
-            .persist()
+            .localCheckpoint(eager=False)
         )
         sh = docsets.select("doc", F.explode("set").alias("shingle"))
 
@@ -135,18 +137,16 @@ def jaccard_pairs(
             ),
         )
         t = float(min_jaccard)
-        # Persisted for the same reason as lsh_candidate_pairs' buckets
-        # (r11): both sides of the candidate self-join are this
+        # Checkpointed for the same reason as lsh_candidate_pairs'
+        # buckets (r11): both sides of the candidate self-join are this
         # relation, and a broadcast build side means no exchange reuse —
-        # without the persist the df-rank window pipeline runs twice.
-        from pyspark.storagelevel import StorageLevel
-
+        # without the checkpoint the df-rank window pipeline runs twice.
         prefix = (
             ordered.join(docsets.select("doc", "sz"), "doc")
             .where(
                 F.col("r") <= F.col("sz") - F.ceil(F.lit(t) * F.col("sz")) + 1
             )
-            .persist(StorageLevel.MEMORY_AND_DISK)
+            .localCheckpoint(eager=False)
         )
         a = prefix.select(
             F.col("doc").alias("doc_a"), "shingle",
@@ -371,14 +371,10 @@ def lsh_candidate_pairs(
     # aggregate) executes once per side (seen in the r11 sf0.001 plan
     # audit: two complete scan->signature subtrees under the join).
     # The bucket relation is bands rows/doc of (long, long, 32-char) —
-    # tiny next to its recompute — so persist it and let both sides
-    # read the cache (guide §5: cache exactly the reused-and-expensive
-    # relation).  bench.py clears the cache between passes; long-lived
-    # sessions release with spark.catalog.clearCache() (q77's
-    # contract).
-    from pyspark.storagelevel import StorageLevel
-
-    buckets = buckets.persist(StorageLevel.MEMORY_AND_DISK)
+    # tiny next to its recompute — so checkpoint it and let both sides
+    # read the blocks (guide §5: materialize exactly the
+    # reused-and-expensive relation).
+    buckets = buckets.localCheckpoint(eager=False)
     a = buckets.alias("a")
     b = buckets.alias("b")
     return (
@@ -707,17 +703,14 @@ def duplicate_substring_spans(
     # The window relation feeds TWO consumers (the multiplicity
     # aggregate and the semi-join probe side) whose exchanges cannot be
     # reused (the aggregate's partial stage sits below its exchange), so
-    # without a persist the tokenize + O(n*w) window-string build + md5
+    # without a checkpoint the tokenize + O(n*w) window-string build + md5
     # scan runs twice — measured ~2x the query at sf0.1 (r11, guide
     # §5: cache only when recompute costs more than the memory
     # pressure; here recompute is the corpus's most expensive map).
     # (id, pos, fp) is far narrower than the window strings themselves;
-    # MEMORY_AND_DISK spills rather than evicting under pressure.
-    # bench.py clears the cache between passes; long-lived sessions
-    # release it with spark.catalog.clearCache() (q77's contract).
-    from pyspark.storagelevel import StorageLevel
-
-    wins = wins.persist(StorageLevel.MEMORY_AND_DISK)
+    # Checkpoint blocks spill to disk rather than evicting under
+    # pressure.
+    wins = wins.localCheckpoint(eager=False)
     # fingerprint multiplicity: groupBy + semi-join back (both sides
     # partial-aggregate; a window-function count would materialize
     # every hot fingerprint's rows in one task)

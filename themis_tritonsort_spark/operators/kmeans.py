@@ -154,11 +154,10 @@ def lloyd(
     canonical Lloyd optimization: without it every iteration's means
     job re-derives the corpus from source (at 100 TB, ``iterations``
     full re-scans; only the vector column is cached, not ids or
-    payload).  Unlike the lazy-result caches elsewhere (see
-    pq_rerank_topk), this one has NO caller-owned contract: every
-    iteration job is eager (the means collect), so the projection is
-    unpersisted before returning, and the returned assignments
-    DataFrame derives from the ORIGINAL ``df``, not the cache.
+    payload).  Every iteration job is eager (the means collect), so
+    the projection is unpersisted before returning, and the returned
+    assignments DataFrame derives from the ORIGINAL ``df``, not the
+    cache.
     """
     dim = len(initial_centers[0])
     centers = [list(map(float, c)) for c in initial_centers]

@@ -19,7 +19,7 @@ structural tuple" is a sum-aggregate joined full-outer with the vertex
 table (SURVEY §2.7 R8).  Adjacency stays a static, partitioned edge
 relation; only the small (vid, rank) relation iterates, exactly like
 the classic Spark PageRank, so each iteration is one shuffle on vid.
-At scale: pre-partition edges by src once and persist so every
+At scale: pre-partition edges by src once and checkpoint them so every
 iteration's join co-locates without re-shuffling the big side.
 """
 
@@ -27,7 +27,6 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.storagelevel import StorageLevel
 
 
 def pagerank(
@@ -54,7 +53,7 @@ def pagerank(
     from .components import sized_edge_npart
 
     npart = sized_edge_npart(e, cap=spark.sparkContext.defaultParallelism)
-    e = e.repartition(npart, "src").persist(StorageLevel.MEMORY_AND_DISK)
+    e = e.repartition(npart, "src").localCheckpoint(eager=False)
 
     deg = e.groupBy("src").agg(F.count(F.lit(1)).alias("deg"))
 

@@ -383,8 +383,8 @@ def importance_scores(
     aggregate vs the prefix-sum budget walk — can be measured
     independently (VERDICT r07 #4: the combined operator probed
     alpha 1.22 at 64x, and the decomposition names which term grows).
-    Returns (id, score_micro, n_tokens, __neg), persisted — see the
-    in-body comment for why the cache is load-bearing."""
+    Returns (id, score_micro, n_tokens, __neg), checkpointed — see the
+    in-body comment for why the checkpoint is load-bearing."""
     if buckets <= 0:
         raise ValueError(f"buckets must be positive, got {buckets}")
     from ..functions.text import tokens
@@ -399,10 +399,9 @@ def importance_scores(
         F.col(target_col).cast("boolean").alias("__t"),
         F.explode(tokens(F.col(text_col))).alias("__word"),
     ).select(F.col(id_col), "__t", bucket.alias("__b"))
-    from pyspark import StorageLevel
 
     # Collapse the token stream to per-(doc, bucket) counts FIRST and
-    # persist THAT (r11, guide §2.3 "aggregate before you shuffle" +
+    # checkpoint THAT (r11, guide §2.3 "aggregate before you shuffle" +
     # §5): the bucket-ratio aggregate and the per-doc score are both
     # exact integer sums over these counts, so the tokenize + md5 +
     # base-conv pipeline — the operator's dominant cost — runs ONCE
@@ -414,7 +413,7 @@ def importance_scores(
     tbc = (
         tb.groupBy(id_col, "__t", "__b")
         .agg(F.count(F.lit(1)).alias("__c"))
-        .persist(StorageLevel.MEMORY_AND_DISK)
+        .localCheckpoint(eager=False)
     )
     ratio = tbc.groupBy("__b").agg(
         F.sum(F.when(F.col("__t"), F.col("__c")).otherwise(0)).alias("__nt"),
@@ -423,10 +422,10 @@ def importance_scores(
         "__b",
         F.expr(f"((__nt + 1) * {scale}) div (__nr + {buckets})").alias("__r"),
     )
-    # persisted: the range partitioner's sampling pass AND the range
-    # shuffle both read the per-doc scores — without the cache the
+    # checkpointed: the range partitioner's sampling pass AND the range
+    # shuffle both read the per-doc scores — without the checkpoint the
     # join+aggregate lineage runs twice (measured alpha 1.3 at 64x;
-    # ~1 with the cache).  Four long columns per doc, tiny next to
+    # ~1 with the checkpoint).  Four long columns per doc, tiny next to
     # the corpus.
     scored = (
         tbc.join(F.broadcast(ratio), "__b")
@@ -441,6 +440,6 @@ def importance_scores(
             "n_tokens",
         )
         .withColumn("__neg", -F.col("score_micro"))
-        .persist(StorageLevel.MEMORY_AND_DISK)
+        .localCheckpoint(eager=False)
     )
     return scored

@@ -18,7 +18,6 @@ from __future__ import annotations
 import numpy as np
 import pandas as pd
 
-from pyspark import StorageLevel
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -538,8 +537,6 @@ def semdedup(
     Nearest-center assignment reuses operators/kmeans.py
     assign_clusters (strict-< argmin in center order,
     KMeansMapFunction.cc:188-214)."""
-    from pyspark import StorageLevel
-
     assigned = assign_clusters(
         df.select(F.col(id_col), F.col(vec_col)), vec_col, centers
     )
@@ -569,15 +566,12 @@ def semdedup(
         sided = sided.withColumn("__sub", F.lit(0).cast("long"))
     # The fully-derived per-row relation (assignment + quantize + split
     # window) feeds BOTH sides of the pair join AND the final output
-    # row set: persist HERE so the k*dim distance fold, the O(dim)
+    # row set: checkpoint HERE so the k*dim distance fold, the O(dim)
     # quantize, and the per-cluster count window each run once per row
     # — persisting only the assignment (the pre-r09 shape) recomputed
     # the quantize+window subtree once per join side, measured ~2x the
-    # whole-op wall-clock at 64x sf0.1.  Caller-owned cache, like
-    # pq_rerank_topk's persist mode: the result is lazy, so release
-    # with spark.catalog.clearCache() (or your own handle) in
-    # long-lived sessions.
-    sided = sided.persist(StorageLevel.MEMORY_AND_DISK)
+    # whole-op wall-clock at 64x sf0.1.
+    sided = sided.localCheckpoint(eager=False)
     nzs = sided.where(F.col("__n") > 0)
     a = nzs.select(
         F.col("__id").alias("__ida"),
@@ -1129,7 +1123,6 @@ def pq_rerank_topk(
     k: int,
     shortlist: int = 100,
     query_id_col: str | None = None,
-    barrier: str = "localCheckpoint",
 ) -> DataFrame:
     """Two-tier PQ search — the deployable shape: pq_topk produces a
     ``shortlist`` of candidates per query from codes alone, then ONLY
@@ -1142,18 +1135,7 @@ def pq_rerank_topk(
     (queries x shortlist)-row candidate set — broadcast — back to the
     corpus for full vectors, so full-precision math touches
     ~shortlist/N of the data.  Same output contract as the other
-    *_topk operators.
-
-    Cache ownership (``barrier="persist"``): the survivors DataFrame
-    is persisted MEMORY_AND_DISK and — because the result is lazy —
-    CANNOT be unpersisted here; the cached relation lives until the
-    CALLER releases it.  In a long-lived session, after consuming the
-    result call ``spark.catalog.clearCache()`` (or track and
-    ``unpersist()`` your own handles) or repeated persist-mode calls
-    accumulate cached relations.  The default ``localCheckpoint``
-    mode has no such contract (its blocks are owned by the lineage
-    and GC'd with the DataFrame).  bench.py clears the cache between
-    passes; library callers own this themselves (ADVICE r08)."""
+    *_topk operators."""
     qid = query_id_col or id_col
     # Materialized once (r12, guide §5): the shortlist feeds TWO
     # broadcasts below (its distinct neighbor ids against the corpus,
@@ -1184,36 +1166,21 @@ def pq_rerank_topk(
     # cache: without it Catalyst inlines _micro_sided's __n > 0 filter
     # (quantize + integer fold and all) and pushes it below the join
     # onto every corpus row — the exact O(N*dim) work this join order
-    # exists to avoid.  Two barrier flavors (ADVICE r07 tradeoff,
-    # A/B-measured at sf0.1):
-    #   - "localCheckpoint" (default): lineage-truncating, blocks are
-    #     non-replicated — an executor loss after materialization
-    #     fails the job (rerun the query).  ~30-40 % faster end-to-end
-    #     (measured 6.5 s vs 8.5 s at sf0.1; the persist flavor pays
-    #     columnar encode + CacheManager substitution).
-    #   - "persist" (MEMORY_AND_DISK): the CacheManager substitutes an
-    #     InMemoryRelation, which filters are never pushed through,
-    #     while LINEAGE STAYS INTACT — an executor loss recomputes the
-    #     lost partitions instead of failing the job.  Prefer this (or
-    #     reliable checkpointing) on a real cluster where executor
-    #     churn is routine and a tier-1 rerun is expensive.
-    # Survivors are <= queries x shortlist rows either way, so the
-    # materialization is tiny.  Same values in both modes; the oracle
-    # also filters nn > 0 after its shortlist join.
+    # exists to avoid.  The barrier is a lazy local checkpoint
+    # (ADVICE r07 tradeoff, A/B-measured at sf0.1: 6.5 s vs 8.5 s for a
+    # persisted InMemoryRelation, which pays columnar encode +
+    # CacheManager substitution).  Its blocks are non-replicated — an
+    # executor loss after materialization fails the job (rerun the
+    # query).  Survivors are <= queries x shortlist rows, so the
+    # materialization is tiny; the oracle also filters nn > 0 after its
+    # shortlist join.
     surv = (
         corpus.select(
             F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("__v")
         )
         .join(F.broadcast(short.select("neighbor_id").distinct()), "neighbor_id")
+        .localCheckpoint(eager=False)
     )
-    if barrier == "persist":
-        surv = surv.persist(StorageLevel.MEMORY_AND_DISK)
-    elif barrier == "localCheckpoint":
-        surv = surv.localCheckpoint(eager=False)
-    else:
-        raise ValueError(
-            f"barrier must be 'localCheckpoint' or 'persist', got {barrier!r}"
-        )
     vecs = _micro_sided(surv, "neighbor_id", "__v", "neighbor_id")
     qv = _micro_sided(queries, qid, vec_col, "query_id").select(
         "query_id", F.col("__q").alias("__qq"), F.col("__n").alias("__qn")
@@ -1272,24 +1239,23 @@ def margin_select(
     integer over cos_ppm, so the selection is engine-exact given
     engine-exact cos_ppm inputs.
 
-    Scale shape: the candidate table is persisted (it feeds the
+    Scale shape: the candidate table is checkpointed (it feeds the
     forward window, the backward window, and the final join); fwd and
     fwd_stats are ~k rows per query — the broadcast-sized side — while
     bwd_stats is neighbor-cardinality and therefore STREAMS through a
     hash join (never broadcast: at corpus scale it cannot fit)."""
     if k <= 0:
         raise ValueError(f"k must be positive, got {k}")
-    from pyspark import StorageLevel
 
     # positive candidates only: margin is meaningless across
     # anti-correlated pairs, and keeping every integer strictly
     # positive makes div/floor-div agree across engines
     scored = scored.where(F.col("cos_ppm") > 0)
-    # persisted: three consumers (forward ranks, backward stats, the
-    # margin join) — without the cache the scoring scan executes once
+    # checkpointed: three consumers (forward ranks, backward stats, the
+    # margin join) — without it the scoring scan executes once
     # per consumer (measured 18.5 s -> ~6 s at sf0.1 on the brute
     # path).  Three longs per candidate pair, tiny next to the vectors.
-    scored = scored.persist(StorageLevel.MEMORY_AND_DISK)
+    scored = scored.localCheckpoint(eager=False)
     wf = Window.partitionBy("query_id").orderBy(
         F.col("cos_ppm").desc(), F.col("neighbor_id").asc()
     )

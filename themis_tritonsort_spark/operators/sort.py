@@ -21,7 +21,6 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
-from pyspark.storagelevel import StorageLevel
 
 _PID = "__ts_pid"
 _RN = "__ts_rn"
@@ -34,19 +33,12 @@ def with_global_rank(
     order_cols: list[str | Column],
     rank_col: str = "pos",
     num_partitions: int | None = None,
-    release: list[DataFrame] | None = None,
 ) -> DataFrame:
     """Totally order ``df`` by ``order_cols`` (must be a total order —
     include a unique tiebreaker) and attach a global 1-based rank.
 
     Scale: one range shuffle + one tiny broadcast join.  No global
     window, no driver collect of data rows.
-
-    The plan persists an intermediate (see comment below).  Pass a
-    list as ``release`` to receive that intermediate: after running
-    your action, call ``.unpersist()`` on each element so chained
-    sorts in one long-lived session don't accumulate cached blocks
-    while waiting for the GC-driven ContextCleaner.
     """
     if num_partitions is None:
         num_partitions = df.sparkSession.sparkContext.defaultParallelism
@@ -54,20 +46,13 @@ def with_global_rank(
     ranged = df.repartitionByRange(num_partitions, *order_cols)
     ranged = ranged.withColumn(_PID, F.spark_partition_id())
     w = Window.partitionBy(_PID).orderBy(*order_cols)
-    # Materialize the ranked relation: the counts branch below otherwise
-    # re-executes the scan AND the range shuffle (physical-plan exchange
-    # reuse does not fire across the two branches).  The counts job runs
-    # first (broadcast subquery), populating the cache the main pass
-    # then reads — one scan, one shuffle total.  The cache cannot be
-    # unpersisted inside this lazy plan; Spark's ContextCleaner reclaims
-    # it when the DataFrame becomes unreachable, so repeated calls don't
-    # leak unboundedly, but callers looping over many sorts in one
-    # session can spark.catalog.clearCache() between them.
-    ranked = ranged.withColumn(_RN, F.row_number().over(w)).persist(
-        StorageLevel.MEMORY_AND_DISK
+    # Materialize the ranked relation once: the counts branch below
+    # otherwise re-executes the scan AND the range shuffle (physical-plan
+    # exchange reuse does not fire across the two branches) — one scan,
+    # one shuffle total.
+    ranked = ranged.withColumn(_RN, F.row_number().over(w)).localCheckpoint(
+        eager=False
     )
-    if release is not None:
-        release.append(ranked)
 
     counts = ranked.groupBy(_PID).agg(F.count(F.lit(1)).alias(_CNT))
     # numPartitions rows: a global window here is fine (it is the phase-0
@@ -96,7 +81,6 @@ def with_global_prefix_sum(
     value_col: str,
     out_col: str = "prefix_sum",
     num_partitions: int | None = None,
-    release: list[DataFrame] | None = None,
 ) -> DataFrame:
     """Attach the INCLUSIVE running sum of ``value_col`` over the total
     order given by ``order_cols`` (include a unique tiebreaker) —
@@ -115,11 +99,9 @@ def with_global_prefix_sum(
         .orderBy(*order_cols)
         .rowsBetween(Window.unboundedPreceding, 0)
     )
-    summed = ranged.withColumn(_RN, F.sum(value_col).over(w)).persist(
-        StorageLevel.MEMORY_AND_DISK
+    summed = ranged.withColumn(_RN, F.sum(value_col).over(w)).localCheckpoint(
+        eager=False
     )
-    if release is not None:
-        release.append(summed)
 
     totals = summed.groupBy(_PID).agg(F.sum(value_col).alias(_CNT))
     offsets = totals.withColumn(

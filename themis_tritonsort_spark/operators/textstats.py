@@ -339,13 +339,12 @@ def cooccurrence_pmi(
             ).alias("__ws"),
         )
     # The capped token-set relation feeds BOTH the pair generator and
-    # the per-word document counts; uncached, the tokenizer and the
+    # the per-word document counts; unmaterialized, the tokenizer and the
     # O(d*n) frequency-rank expression above evaluate twice (r11,
-    # guide §5).  Cached rows are (id, <=max_tokens_per_doc tokens) —
+    # guide §5).  Checkpointed rows are (id, <=max_tokens_per_doc tokens) —
     # tiny next to the corpus.
-    from pyspark import StorageLevel
 
-    words = words.persist(StorageLevel.MEMORY_AND_DISK)
+    words = words.localCheckpoint(eager=False)
     pairs = words.select(
         F.col(id_col),
         F.explode(
@@ -572,16 +571,16 @@ def tf_idf_topk(
     engine.  Ties break by word ascending; rank is total-ordered.
 
     Scale: one (doc, word) shuffle builds term frequencies; document
-    frequency is a word-keyed aggregate of that same relation (persisted
-    so the corpus is tokenized once) and is vocabulary-sized, so it
-    BROADCASTS back onto the tf relation; the final per-doc top-k is one
-    shuffle on the doc id — the same shuffle any per-group top-k pays.
-    N rides as a lazy 1-row aggregate broadcast onto the scored
-    relation (the cooccurrence_pmi discipline) — no eager driver-side
-    count(), so the whole query is ONE Spark job.
+    frequency is a word-keyed aggregate of that same relation (its
+    exchange is reused, so the corpus is tokenized once) and is
+    vocabulary-sized, so it BROADCASTS back onto the tf relation; the
+    final per-doc top-k is one shuffle on the doc id — the same shuffle
+    any per-group top-k pays.  N rides as a lazy 1-row aggregate
+    broadcast onto the scored relation (the cooccurrence_pmi
+    discipline) — no eager driver-side count(), so the whole query is
+    ONE Spark job.
     """
     from pyspark.sql import Window
-    from pyspark.storagelevel import StorageLevel
 
     if k <= 0:
         raise ValueError(f"k must be positive, got {k}")
@@ -594,9 +593,12 @@ def tf_idf_topk(
         df.select(F.col(id_col), F.explode(tokens(F.col(text_col))).alias("word"))
         .groupBy(id_col, "word")
         .agg(F.count(F.lit(1)).alias("tf"))
-        .persist(StorageLevel.MEMORY_AND_DISK)
     )
-    dfreq = tf.groupBy("word").agg(F.count(F.lit(1)).alias("dfreq"))
+    # count_if(tf > 0) == count(*), but reading tf keeps both branches'
+    # tf subtrees identical, so the (doc, word) exchange is reused
+    # instead of re-tokenizing (column pruning would strip tf's count
+    # from a count(*) branch and defeat the reuse).
+    dfreq = tf.groupBy("word").agg(F.count_if(F.col("tf") > 0).alias("dfreq"))
     scored = (
         tf.join(F.broadcast(dfreq), "word")
         .crossJoin(F.broadcast(n_docs_df))
@@ -638,8 +640,6 @@ def bigram_surprisal(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     broadcast; V rides in as a broadcast one-row aggregate (no eager
     driver count).
     """
-    from pyspark.storagelevel import StorageLevel
-
     from ..functions.text import ngrams as _ngrams
 
     base = df.select(F.col(id_col), tokens(F.col(text_col)).alias("__toks"))
@@ -649,7 +649,7 @@ def bigram_surprisal(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
         )
         .groupBy(id_col, "bg")
         .agg(F.count(F.lit(1)).alias("tf"))
-        .persist(StorageLevel.MEMORY_AND_DISK)
+        .localCheckpoint(eager=False)
     )
     cab = tf.groupBy("bg").agg(F.sum("tf").alias("cab"))
     ca = (
@@ -706,19 +706,17 @@ def unigram_surprisal(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     computed from the same two integers in any engine.
 
     Scale: word counts are one vocabulary-sized aggregate that
-    BROADCASTS back onto the (doc, word) tf relation (persisted, so the
-    corpus tokenizes once); the per-doc rollup is one shuffle on the doc
-    id.  Total corpus tokens rides as a lazy 1-row aggregate broadcast
-    onto the vocabulary (the cooccurrence_pmi discipline) — no eager
-    driver-side collect, so the whole query is ONE Spark job.
+    BROADCASTS back onto the (doc, word) tf relation (both read the same
+    reused exchange, so the corpus tokenizes once); the per-doc rollup
+    is one shuffle on the doc id.  Total corpus tokens rides as a lazy
+    1-row aggregate broadcast onto the vocabulary (the cooccurrence_pmi
+    discipline) — no eager driver-side collect, so the whole query is
+    ONE Spark job.
     """
-    from pyspark.storagelevel import StorageLevel
-
     tf = (
         df.select(F.col(id_col), F.explode(tokens(F.col(text_col))).alias("word"))
         .groupBy(id_col, "word")
         .agg(F.count(F.lit(1)).alias("tf"))
-        .persist(StorageLevel.MEMORY_AND_DISK)
     )
     wc = tf.groupBy("word").agg(F.sum("tf").alias("cnt"))
     # sum over an empty corpus is NULL; 1 keeps the (never-evaluated)
@@ -755,7 +753,6 @@ def surprisal_mixture(
     id_col: str,
     text_col: str,
     n_buckets: int = 4,
-    release: list[DataFrame] | None = None,
 ) -> DataFrame:
     """Perplexity-bucketed mixture accounting: split the corpus into
     ``n_buckets`` quality tiers by per-doc unigram surprisal and report
@@ -771,20 +768,13 @@ def surprisal_mixture(
     driver collect, one Spark job).  Bucket ASSIGNMENT is then a
     map-side comparison chain (no global window, no ntile over the
     corpus — an ntile would be a single-partition sort at 100 TB).
-    The surprisal relation is persisted so the boundary branch and
-    the classification branch share one computation; pass a list as
-    ``release`` to unpersist it after your action (with_global_rank's
-    cache-lifetime idiom).
+    The boundary branch and the classification branch read the same
+    surprisal subtree, whose exchanges are reused, so the corpus
+    tokenizes once.
     """
     if n_buckets < 2:
         raise ValueError(f"n_buckets must be >= 2, got {n_buckets}")
-    from pyspark.storagelevel import StorageLevel
-
-    s = unigram_surprisal(df, id_col, text_col).persist(
-        StorageLevel.MEMORY_AND_DISK
-    )
-    if release is not None:
-        release.append(s)
+    s = unigram_surprisal(df, id_col, text_col)
     fracs = [i / n_buckets for i in range(1, n_buckets)]
     bounds_df = s.groupBy().agg(
         *[
@@ -970,8 +960,6 @@ def bm25_topk(
     aggregate, and top-k compiles to TakeOrderedAndProject.  The
     inverted-index substrate is q05's.
     """
-    from pyspark.storagelevel import StorageLevel
-
     if k <= 0:
         raise ValueError(f"k must be positive, got {k}")
     if not query_terms:
@@ -979,13 +967,13 @@ def bm25_topk(
     tok = df.select(
         F.col(id_col), F.explode(tokens(F.col(text_col))).alias("__w")
     )
-    # persisted: doclen and the query-term hits both derive from it —
-    # without the persist each branch re-tokenizes the corpus (same
+    # checkpointed: doclen and the query-term hits both derive from it —
+    # without the checkpoint each branch re-tokenizes the corpus (same
     # lifecycle as tf_idf_topk's tf relation)
     postings = (
         tok.groupBy(id_col, "__w")
         .agg(F.count(F.lit(1)).alias("__tf"))
-        .persist(StorageLevel.MEMORY_AND_DISK)
+        .localCheckpoint(eager=False)
     )
     doclen = postings.groupBy(id_col).agg(F.sum("__tf").alias("__dl"))
     corpus = doclen.groupBy().agg(
@@ -1043,7 +1031,6 @@ def bm25_topk_multi(
     sort and no single-partition window at any corpus size.
     """
     from pyspark.sql import Window
-    from pyspark.storagelevel import StorageLevel
 
     if k <= 0:
         raise ValueError(f"k must be positive, got {k}")
@@ -1056,7 +1043,7 @@ def bm25_topk_multi(
     postings = (
         tok.groupBy(id_col, "__w")
         .agg(F.count(F.lit(1)).alias("__tf"))
-        .persist(StorageLevel.MEMORY_AND_DISK)
+        .localCheckpoint(eager=False)
     )
     doclen = postings.groupBy(id_col).agg(F.sum("__tf").alias("__dl"))
     corpus = doclen.groupBy().agg(
@@ -1297,7 +1284,7 @@ def nb_token_classifier(
     ``buckets`` rows out); the global prior is a second aggregate OVER
     THE BUCKET TABLE (buckets rows, not the corpus); scoring joins the
     corpus to the broadcast weight table and sums per doc.  The
-    tokenized frame is persisted so train + score read the corpus
+    tokenized frame is checkpointed so train + score read the corpus
     once.  No shuffle is corpus-wide except the per-doc score
     aggregate, which partial-aggregates map-side.
     """
@@ -1334,12 +1321,11 @@ def _nb_weight_frames(
     buckets: int,
 ):
     """Shared trainer for the NB-style classifier: returns
-    (token-bucket frame persisted, weight frame (__b, __w)) — the
+    (token-bucket frame checkpointed, weight frame (__b, __w)) — the
     batch classifier joins the weights back, the freezer collects
     them (buckets rows, centers-sized)."""
     if buckets <= 0:
         raise ValueError(f"buckets must be positive, got {buckets}")
-    from pyspark import StorageLevel
 
     scale = 1_000_000
     tb = (
@@ -1351,14 +1337,14 @@ def _nb_weight_frames(
         .select(
             F.col(id_col), "__y", _nb_bucket(F.col("__word"), buckets).alias("__b")
         )
-        .persist(StorageLevel.MEMORY_AND_DISK)
+        .localCheckpoint(eager=False)
     )
-    # persisted: the bucket table feeds BOTH the weights and the prior,
-    # so the corpus-wide aggregate runs once (buckets rows cached)
+    # checkpointed: the bucket table feeds BOTH the weights and the
+    # prior, so the corpus-wide aggregate runs once (buckets rows kept)
     counts = tb.groupBy("__b").agg(
         F.sum(F.when(F.col("__y"), 1).otherwise(0)).alias("__np"),
         F.count(F.lit(1)).alias("__n"),
-    ).persist(StorageLevel.MEMORY_AND_DISK)
+    ).localCheckpoint(eager=False)
     prior = counts.agg(
         F.sum("__np").alias("__gp"), F.sum("__n").alias("__gn")
     )

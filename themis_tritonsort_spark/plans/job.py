@@ -29,7 +29,6 @@ from typing import Any
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.storagelevel import StorageLevel
 
 from ..functions.text import tokens
 
@@ -637,8 +636,7 @@ def run_shared_scan(
     jobs: list[ThemisJob],
     df: DataFrame | None = None,
     sf_dir: str | None = None,
-    storage_level: StorageLevel | None = None,
-) -> "SharedScanRun":
+) -> list[DataFrame]:
     """Shared-scan multiplexing (R12): run several jobs' functions over
     ONE scan of the same input — the reference's
     ``MultiJobMapper``/``MultiJobDemux`` (``workers/mapper/
@@ -647,12 +645,11 @@ def run_shared_scan(
     a 100 TB input is read once, not once per job.
 
     Spark-first: all jobs must share one source (ThemisJob.input_table /
-    input_path must agree, or pass ``df``); the source is persisted, the
-    first job's action populates the cache, and every other job reads
-    the cached blocks instead of rescanning storage.  The caller runs
-    actions on the returned ``jobs`` outputs and then calls
-    ``release()`` — the explicit cache lifetime the per-op persist()
-    idiom could not offer.
+    input_path must agree, or pass ``df``); the source is a lazy local
+    checkpoint, so the first job's action materializes it and every
+    other job reads its blocks instead of rescanning storage.  Returns
+    the per-job outputs, in ``jobs`` order; the blocks belong to their
+    lineage and are freed with them.
     """
     if not jobs:
         raise ValueError("run_shared_scan needs at least one job")
@@ -671,18 +668,5 @@ def run_shared_scan(
             df = spark.read.parquet(probe.input_path)
         else:
             raise ValueError("shared-scan jobs need input_table or input_path")
-    shared = df.persist(storage_level or StorageLevel.MEMORY_AND_DISK)
-    outputs = [run_job(spark, job, df=shared, sf_dir=sf_dir) for job in jobs]
-    return SharedScanRun(source=shared, outputs=outputs)
-
-
-@dataclass
-class SharedScanRun:
-    """Handle for a shared-scan batch: per-job outputs plus the cached
-    source whose lifetime the caller now owns."""
-
-    source: DataFrame
-    outputs: list[DataFrame]
-
-    def release(self, blocking: bool = False) -> None:
-        self.source.unpersist(blocking=blocking)
+    shared = df.localCheckpoint(eager=False)
+    return [run_job(spark, job, df=shared, sf_dir=sf_dir) for job in jobs]

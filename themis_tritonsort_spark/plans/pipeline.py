@@ -238,11 +238,10 @@ def recover_lost_ranges(
         .withColumn("__range", _range_bucket(key_col, boundaries))
     )
     path = os.path.join(root, stage.name)
-    mode_key = "spark.sql.sources.partitionOverwriteMode"
-    old = spark.conf.get(mode_key, "static")
-    spark.conf.set(mode_key, "dynamic")
-    try:
-        out.write.mode("overwrite").partitionBy("__range").parquet(path)
-    finally:
-        spark.conf.set(mode_key, old)
+    (
+        out.write.mode("overwrite")
+        .option("partitionOverwriteMode", "dynamic")
+        .partitionBy("__range")
+        .parquet(path)
+    )
     return path

