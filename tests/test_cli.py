@@ -73,3 +73,13 @@ def test_driver_sim_staleness_report():
     assert not (flagged & set(names[:WINDOW]))
     # every flagged entry really is outside the window
     assert flagged <= set(names[WINDOW:])
+
+
+def test_scale_probe_powerlaw_generator_is_pinned(spark):
+    """tools/scale_probe.py's power-law graph is a pure function of
+    (n, seed): its canonical edge and oriented wedge counts at n = 500,
+    seed 7 stay those every committed powerlaw capture was built on."""
+    from tools.scale_probe import canonical_edge_count_and_wedges, powerlaw_graph
+
+    edges = powerlaw_graph(spark, 500, seed=7)
+    assert canonical_edge_count_and_wedges(edges) == (3967, 14551)

@@ -6,14 +6,14 @@ from __future__ import annotations
 
 import pytest
 
-from themis_tritonsort_spark.queries import ORACLES, QUERIES
+from themis_tritonsort_spark.queries import CATALOG, ORACLES
 
 from .oracle_harness import compare
 
 
-@pytest.mark.parametrize("name", sorted(QUERIES))
+@pytest.mark.parametrize("name", sorted(CATALOG))
 def test_query_matches_oracle(spark, sf_dir, name):
-    result = compare(spark, sf_dir, QUERIES[name], ORACLES[name])
+    result = compare(spark, sf_dir, CATALOG[name], ORACLES[name])
     assert result["ok"], f"{name}: {result}"
     cache = spark._jsparkSession.sharedState().cacheManager()
     assert cache.isEmpty(), f"{name} left a Dataset cache in the session"

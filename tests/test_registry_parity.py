@@ -11,6 +11,8 @@ ReduceFunctionFactory.cc:1-53 (11 names), PartitionFunctionFactory.cc
 
 from __future__ import annotations
 
+import os
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -150,38 +152,86 @@ def test_pagerank_two_iterations_via_job_chain(spark):
     assert got == want
 
 
-def test_driver_window_composition():
-    """The round driver gates the FIRST 50 entries of queries() — pin
-    that the window is exactly the rotation plan (round-12: the full
-    48-entry r09-stale block plus the q01/q19 get-ahead slots from
-    the r10 set), every windowed entry has an oracle, and nothing
-    outside the window lacks local oracle coverage."""
-    from themis_tritonsort_spark.queries import (
-        _WINDOW_PRIORITY,
-        ORACLES,
-        QUERIES,
-    )
+# The gate window derived from the CORRECTNESS history of rounds 1-12:
+# the 48 entries whose newest driver pass is r10, then the first two of
+# r11 (the r13 rotation plan, formerly kept by hand).
+DERIVED_WINDOW = [
+    "q24_window_funcs", "q25_customers_without_orders", "q26_distinct_agg",
+    "q27_parts_shipped_by_brand", "q28_json_extract", "q30_simhash",
+    "q32_above_avg_parts", "q33_late_ship_orders", "q34_region_share",
+    "q35_rollup_revenue", "q36_asof_join", "q37_range_join",
+    "q40_nation_market", "q41_token_counts", "q42_value_quantiles",
+    "q43_corpus_pipeline", "q44_salted_count", "q45_time_rollup",
+    "q47_gap_sessions", "q48_shipping_priority", "q49_stratified_sample",
+    "q73_pack_sequences", "q74_triangle_total", "q75_surprisal_mix",
+    "q76_shuffle_shards", "q77_full_curation", "q78_media_decode",
+    "q79_semdedup", "q80_bigram_perplexity", "q81_sq8_ann",
+    "q82_bloom_decontam", "q83_token_budget", "q84_pq_ann",
+    "q85_pq_rerank", "q86_kcore", "q87_length_batches",
+    "q88_cdc_snapshot", "q89_scd2_history", "q90_hll_distinct",
+    "q91_cms_heavy_hitters", "q92_zscore_outliers",
+    "q93_label_propagation", "q94_weighted_sample",
+    "q112_clustering_coeff", "q141_margin_pairs", "q142_ann_margin_pairs",
+    "q143_approx_triangles", "q144_chain_components",
+    "q02_sort_lineitem", "q03_wordcount",
+]
 
-    assert len(_WINDOW_PRIORITY) == 50
-    assert list(QUERIES)[:50] == _WINDOW_PRIORITY
-    missing = [n for n in _WINDOW_PRIORITY if n not in ORACLES]
-    assert missing == []
-    windowed_prefixes = {n.split("_")[0] for n in _WINDOW_PRIORITY}
-    # the 48 entries whose newest driver row is r09 (3 rounds old at
-    # the r12 gate) all rotate in: q04..q18 (incl. q10b), q20..q23,
-    # q29, q31, q38, q39, q50..q72, q132
-    stale_r09 = (
-        {f"q{i:02d}" for i in range(4, 19)}
-        | {"q10b"}
-        | {f"q{i}" for i in range(20, 24)}
-        | {"q29", "q31", "q38", "q39"}
-        | {f"q{i}" for i in range(50, 73)}
-        | {"q132"}
-    )
-    assert stale_r09 <= windowed_prefixes
-    # spares: get-ahead picks from the 50-entry r10 set (first two in
-    # catalog order), shrinking the r13-stale set from 50 to 48
-    assert {"q01", "q19"} <= windowed_prefixes
+
+def test_driver_window_composition(tmp_path, monkeypatch):
+    """The round driver gates the FIRST 50 entries of queries(): from
+    the round 1-12 gate history that window is the stalest block (newest
+    pass r10) in catalog order, then the oldest r11 passes; and every
+    entry of the live window has an oracle."""
+    import shutil
+
+    import __spark_entry__ as em
+
+    assert [n for n in list(em.queries())[:50] if n not in em.oracle_sql()] == []
+    root = os.path.dirname(os.path.abspath(em.__file__))
+    for rnd in range(1, 13):
+        name = f"CORRECTNESS_r{rnd:02d}.json"
+        shutil.copy(os.path.join(root, name), tmp_path / name)
+    history = em.newest_passes(str(tmp_path))
+    monkeypatch.setattr(em, "newest_passes", lambda: history)
+    assert list(em.queries())[:50] == DERIVED_WINDOW
+
+
+def test_driver_window_rotates_with_the_gate_history(tmp_path, monkeypatch):
+    """queries() orders the catalog by each entry's newest passing gate
+    round: never-gated entries first, then oldest pass first, ties in
+    catalog order.  A failing row (or a value-hash mismatch) does not
+    count as a pass, an unreadable gate file is skipped, and an empty
+    history leaves catalog order."""
+    import json
+
+    import __spark_entry__ as em
+    from themis_tritonsort_spark.queries import CATALOG
+
+    catalog = list(CATALOG)
+    read_history = em.newest_passes
+    assert read_history(str(tmp_path)) == {}
+    monkeypatch.setattr(em, "newest_passes", lambda: {})
+    assert list(em.queries()) == catalog
+
+    ok = {"rows_match": True, "schema_match": True, "hash_match": True}
+    first, second, third = catalog[:3]
+    gates = {
+        1: {first: ok, second: ok, third: ok},
+        2: {first: ok, second: {**ok, "hash_match": False},
+            third: {**ok, "hash_match": None}},
+        3: {second: {**ok, "rows_match": False}},
+    }
+    for rnd, rows in gates.items():
+        (tmp_path / f"CORRECTNESS_r{rnd:02d}.json").write_text(json.dumps(rows))
+    (tmp_path / "CORRECTNESS_notes.json").write_text("not a gate file")
+    (tmp_path / "CORRECTNESS_r04.json").write_text('{"truncated": ')
+    history = read_history(str(tmp_path))
+    assert history == {first: 2, second: 1, third: 2}
+
+    monkeypatch.setattr(em, "newest_passes", lambda: history)
+    order = list(em.queries())
+    assert order[-3:] == [second, first, third]
+    assert order[:-3] == catalog[3:]
 
 
 def test_bench_set_covers_the_catalog():
@@ -191,44 +241,40 @@ def test_bench_set_covers_the_catalog():
     per-round perf evidence; pin the coverage."""
     import bench
 
-    from themis_tritonsort_spark.queries import QUERIES
+    from themis_tritonsort_spark.queries import CATALOG
 
     def prefix(name: str) -> str:
         return name.split("_")[0]
 
     benched = {prefix(n) for n in bench.BENCH_QUERIES}
-    catalog = {prefix(n) for n in QUERIES}
+    catalog = {prefix(n) for n in CATALOG}
     missing = sorted(catalog - benched)
     assert missing == [], f"catalog queries without a bench row: {missing}"
 
 
 def test_query_catalog_structure():
     """One derived catalog feeds queries(), oracle_sql() and the bench:
-    148 entries, oracles in catalog order (number, then suffix), the
-    driver's gated first 50 entries are the rotation window followed
-    by the rest of the catalog in order, and the bench times every
-    catalog query, with the three renamed scale-variant stand-ins."""
+    148 entries, CATALOG and ORACLES in catalog order (number, then
+    suffix), queries() is a reordering of CATALOG bound to the same
+    functions, and the bench times every catalog query, with the three
+    renamed scale-variant stand-ins."""
     import re
 
     import bench
 
-    from themis_tritonsort_spark.queries import (
-        _WINDOW_PRIORITY,
-        ORACLES,
-        QUERIES,
-    )
+    import __spark_entry__ as em
+    from themis_tritonsort_spark.queries import CATALOG, ORACLES
 
     def catalog_order(name: str) -> tuple[int, str]:
         num, suffix = re.match(r"q(\d+)([a-z]?)_", name).groups()
         return int(num), suffix
 
-    catalog = sorted(QUERIES, key=catalog_order)
-    assert len(QUERIES) == len(ORACLES) == 148
-    assert list(ORACLES) == catalog
-    assert list(QUERIES)[:50] == _WINDOW_PRIORITY
-    assert list(QUERIES)[50:] == [
-        n for n in catalog if n not in _WINDOW_PRIORITY
-    ]
+    catalog = sorted(CATALOG, key=catalog_order)
+    assert len(CATALOG) == len(ORACLES) == 148
+    assert list(CATALOG) == list(ORACLES) == catalog
+    assert all(fn.__name__ == name for name, fn in CATALOG.items())
+    assert em.queries() == CATALOG
+    assert em.oracle_sql() == ORACLES
     renamed = {
         "q18_jaccard_pairs": "q18_jaccard3",
         "q19_minhash_lsh": "q19_minhash3",

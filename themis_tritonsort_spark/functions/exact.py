@@ -25,6 +25,14 @@ def ppm(col: Column | str) -> Column:
     return F.round(c * 1_000_000).cast("long")
 
 
+def md5_60(col: Column) -> Column:
+    """The 60-bit integer from the first 15 hex digits of md5(col): the
+    hash family of every deterministic sampler, sketch and MinHash here,
+    because any engine reproduces it (DuckDB spells it
+    ``('0x' || substr(md5(x), 1, 15))::BIGINT``)."""
+    return F.conv(F.substring(F.md5(col), 1, 15), 16, 10).cast("long")
+
+
 # DuckDB SQL spellings of the same conversions (sum(bigint) is HUGEINT in
 # DuckDB, so oracle SQL must CAST the final sum back to BIGINT).
 CENTS_SQL = "CAST(ROUND({col} * 100) AS BIGINT)"

@@ -27,6 +27,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
+from ..functions.exact import md5_60
+
 
 def sized_edge_npart(
     relation: DataFrame,
@@ -64,9 +66,7 @@ def sized_edge_npart(
     return max(1, min(cap, -(-est // target_bytes)))
 
 
-def _undirected_edges(
-    edges: DataFrame, src: str, dst: str, npart: int
-) -> DataFrame:
+def _undirected_edges(edges: DataFrame, src: str, dst: str) -> DataFrame:
     """Both-orientations (s, d) edge set of the undirected graph,
     deduped and repartitioned on the propagation key — the static side
     every iterative op here persists for its loop and joins against
@@ -84,8 +84,8 @@ def _undirected_edges(
     distinct == directed distinct of the undirected graph (a != b
     rows only), so the resulting edge set is identical.
 
-    ``npart`` is a CAP (r12): the actual partition count is
-    size-derived via :func:`sized_edge_npart`.
+    The partition count is size-derived via :func:`sized_edge_npart`,
+    capped at the session's defaultParallelism.
     """
     canon = (
         edges.select(
@@ -98,7 +98,8 @@ def _undirected_edges(
     mirrored = canon.unionByName(
         canon.select(F.col("d").alias("s"), F.col("s").alias("d"))
     )
-    return mirrored.repartition(sized_edge_npart(mirrored, cap=npart), "s")
+    cap = edges.sparkSession.sparkContext.defaultParallelism
+    return mirrored.repartition(sized_edge_npart(mirrored, cap=cap), "s")
 
 
 def connected_components(
@@ -119,12 +120,10 @@ def connected_components(
     localCheckpoint, so the returned labels read checkpoint blocks,
     not the edge lineage.  Nothing stays cached after the call.
     """
-    spark = edges.sparkSession
-    npart = spark.sparkContext.defaultParallelism
     # Undirected: materialize BOTH orientations once, partitioned by the
     # propagation source — each round is then ONE join (src side
     # co-located with the persisted partitioning) instead of two.
-    e = _undirected_edges(edges, src, dst, npart).persist(
+    e = _undirected_edges(edges, src, dst).persist(
         StorageLevel.MEMORY_AND_DISK
     )
 
@@ -606,9 +605,7 @@ def triangle_total_doulion(
     inv = 1_000_000 // p_ppm
     a = F.least(F.col(src), F.col(dst)).cast("string")
     b = F.greatest(F.col(src), F.col(dst)).cast("string")
-    hv = F.conv(
-        F.substring(F.md5(F.concat_ws(":", a, b)), 1, 15), 16, 10
-    ).cast("long")
+    hv = md5_60(F.concat_ws(":", a, b))
     sampled = edges.where(hv % 1_000_000 < F.lit(p_ppm))
     tris, _ = _oriented_triangles(sampled, src, dst)
     return tris.agg(
@@ -664,7 +661,7 @@ def kcore_vertices(
         raise ValueError(f"k must be >= 1, got {k}")
     spark = edges.sparkSession
     npart = spark.sparkContext.defaultParallelism
-    e = _undirected_edges(edges, src, dst, npart).persist(
+    e = _undirected_edges(edges, src, dst).persist(
         StorageLevel.MEMORY_AND_DISK
     )
     deg = e.groupBy("s").agg(F.count(F.lit(1)).alias("deg")).localCheckpoint(
@@ -764,7 +761,7 @@ def label_propagation(
         raise ValueError(f"rounds must be >= 0, got {rounds}")
     spark = edges.sparkSession
     npart = spark.sparkContext.defaultParallelism
-    e = _undirected_edges(edges, src, dst, npart).persist(
+    e = _undirected_edges(edges, src, dst).persist(
         StorageLevel.MEMORY_AND_DISK
     )
     labels = (
@@ -835,9 +832,7 @@ def bfs_hops(
     """
     if rounds < 0:
         raise ValueError(f"rounds must be >= 0, got {rounds}")
-    spark = edges.sparkSession
-    npart = spark.sparkContext.defaultParallelism
-    e = _undirected_edges(edges, src, dst, npart).persist(
+    e = _undirected_edges(edges, src, dst).persist(
         StorageLevel.MEMORY_AND_DISK
     )
     dist = (

@@ -30,6 +30,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..functions.exact import md5_60
 from ..functions.text import shingles_from_tokens, tokens
 
 
@@ -234,11 +235,7 @@ def minhash_signature(
     shuffle num_hashes times the data.
     """
     sh = shingle_sets(df, id_col, text_col, n)
-    base = (
-        F.conv(F.substring(F.md5(F.col("shingle")), 1, 15), 16, 10)
-        .cast("long")
-        % MINHASH_PRIME
-    )
+    base = md5_60(F.col("shingle")) % MINHASH_PRIME
     hashed = sh.select("doc", base.alias("x"))
     wide = hashed.groupBy("doc").agg(
         *[
@@ -301,11 +298,7 @@ def minhash_band_buckets(
         )
     rows_per_band = num_hashes // bands
     sh = shingle_sets(df, id_col, text_col, n)
-    base = (
-        F.conv(F.substring(F.md5(F.col("shingle")), 1, 15), 16, 10)
-        .cast("long")
-        % MINHASH_PRIME
-    )
+    base = md5_60(F.col("shingle")) % MINHASH_PRIME
     hashed = sh.select("doc", base.alias("x"))
     wide = hashed.groupBy("doc").agg(
         *[
@@ -453,7 +446,7 @@ def simhash64(
     if hasher == "xxhash64":
         hh, n_bits = F.xxhash64("w"), 64
     elif hasher == "md5":
-        hh = F.conv(F.substring(F.md5(F.col("w")), 1, 15), 16, 10).cast("long")
+        hh = md5_60(F.col("w"))
         n_bits = 60
     else:
         raise ValueError(f"unknown hasher {hasher!r} (md5 | xxhash64)")
@@ -492,13 +485,7 @@ def bloom_positions(text: Column, m_bits: int, k: int = BLOOM_K) -> Column:
     """array<long> of the ``k`` Bloom bit positions for one document's
     content: position_j = md5(text || ':' || j) as 60-bit int, mod m."""
     return F.array(
-        *[
-            F.conv(
-                F.substring(F.md5(F.concat(text, F.lit(f":{j}"))), 1, 15), 16, 10
-            ).cast("long")
-            % m_bits
-            for j in range(k)
-        ]
+        *[md5_60(F.concat(text, F.lit(f":{j}"))) % m_bits for j in range(k)]
     )
 
 

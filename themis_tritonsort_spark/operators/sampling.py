@@ -30,6 +30,8 @@ from collections.abc import Mapping
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..functions.exact import md5_60
+
 # md5-hex prefix of 15 nibbles = 60 bits, the same oracle-reproducible
 # integer family as operators.dedup (minhash / simhash).
 _HASH_MOD = 1_000_000
@@ -37,11 +39,7 @@ _HASH_MOD = 1_000_000
 
 def _row_hash(id_col: str):
     """Uniform deterministic bucket in [0, 1e6) from the row id."""
-    return (
-        F.conv(F.substring(F.md5(F.col(id_col).cast("string")), 1, 15), 16, 10)
-        .cast("long")
-        % _HASH_MOD
-    )
+    return md5_60(F.col(id_col).cast("string")) % _HASH_MOD
 
 
 def shuffle_shards(
@@ -67,9 +65,7 @@ def shuffle_shards(
 
     # full 60-bit md5-prefix hash (NOT the [0,1e6) bucket of _row_hash:
     # shard ordering needs the whole hash for a uniform permutation)
-    h = F.conv(
-        F.substring(F.md5(F.col(id_col).cast("string")), 1, 15), 16, 10
-    ).cast("long")
+    h = md5_60(F.col(id_col).cast("string"))
     w = Window.partitionBy("shard").orderBy("__h", id_col)
     return (
         df.select(F.col(id_col), h.alias("__h"))
@@ -201,19 +197,9 @@ def weighted_priority_sample(
     )
     draw = F.transform(
         F.sequence(F.lit(1), w),
-        lambda i: F.conv(
-            F.substring(
-                F.md5(
-                    F.concat_ws(
-                        ":", F.col(id_col).cast("string"), i.cast("string")
-                    )
-                ),
-                1,
-                15,
-            ),
-            16,
-            10,
-        ).cast("long"),
+        lambda i: md5_60(
+            F.concat_ws(":", F.col(id_col).cast("string"), i.cast("string"))
+        ),
     )
     return (
         df.select(
@@ -390,10 +376,7 @@ def importance_scores(
     from ..functions.text import tokens
 
     scale = 1_000_000
-    bucket = (
-        F.conv(F.substring(F.md5(F.col("__word")), 1, 15), 16, 10).cast("long")
-        % buckets
-    )
+    bucket = md5_60(F.col("__word")) % buckets
     tb = df.select(
         F.col(id_col),
         F.col(target_col).cast("boolean").alias("__t"),

@@ -23,18 +23,15 @@ from collections.abc import Sequence
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..functions.exact import md5_60
 from ..functions.names import sql_column
 
 # Deterministic-sketch hash discipline (shared with operators.dedup /
-# operators.sampling): the 60-bit integer from the first 15 hex chars
-# of md5 — reproducible by any engine, so the sketches below are
+# operators.sampling): ``md5_60``, the 60-bit integer from the first 15
+# hex chars of md5 — reproducible by any engine, so the sketches below are
 # oracle-checkable BIT-EXACTLY, unlike the built-in HLL++/KLL wrappers
 # above whose register layout is Spark-private.
 _HASH_BITS = 60
-
-
-def _md5_60(col: F.Column) -> F.Column:
-    return F.conv(F.substring(F.md5(col), 1, 15), 16, 10).cast("long")
 
 
 def approx_distinct(
@@ -129,7 +126,7 @@ def hll_bucket_rho(value_col: str, p: int) -> tuple[F.Column, F.Column]:
         raise ValueError(f"p must be in [7, 14], got {p}")
     m = 1 << p
     tail_bits = _HASH_BITS - p
-    h = _md5_60(F.col(value_col).cast("string"))
+    h = md5_60(F.col(value_col).cast("string"))
     w = F.shiftright(h, p)  # hash tail — bit shift, never float division
     # leading-one position within tail_bits (1-based); w == 0 -> cap
     rho = F.when(
@@ -202,7 +199,7 @@ def cms_row_bucket(item_col: str, width: int) -> F.Column:
     that keeps batch and streaming sketches bit-identical.  Expects a
     ``row`` column (the depth index) in scope."""
     return (
-        _md5_60(F.concat_ws(":", F.col(item_col), F.col("row").cast("string")))
+        md5_60(F.concat_ws(":", F.col(item_col), F.col("row").cast("string")))
         % width
     )
 

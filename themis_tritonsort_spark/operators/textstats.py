@@ -11,6 +11,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..functions.exact import md5_60
 from ..functions.text import STOP_WORDS, fingerprint, tokens
 
 # Tiny per-language marker sets for the heuristic language ID.  The
@@ -913,10 +914,7 @@ def hashed_linear_score(
     broadcast join without changing the plan: one map-side expression
     tree + one doc-key aggregate, corpus moves once.
     """
-    bucket = (
-        F.conv(F.substring(F.md5(F.col("__word")), 1, 15), 16, 10).cast("long")
-        % buckets
-    )
+    bucket = md5_60(F.col("__word")) % buckets
     w = (bucket * F.lit(2654435761)) % 1001 - 500
     return (
         df.select(F.col(id_col), F.explode(tokens(F.col(text_col))).alias("__word"))
@@ -1308,9 +1306,7 @@ def nb_token_classifier(
 def _nb_bucket(col, buckets: int):
     """md5 feature bucket in [0, buckets) — the module's oracle-
     reproducible hash family (same recipe as hashed_linear_score)."""
-    return (
-        F.conv(F.substring(F.md5(col), 1, 15), 16, 10).cast("long") % buckets
-    )
+    return md5_60(col) % buckets
 
 
 def _nb_weight_frames(

@@ -5718,7 +5718,12 @@ def _kcenter_sql(k: int) -> str:
     """Unrolled greedy trajectory: stage i picks the argmax of the
     running integer-micro min-distance, then folds the new center into
     the running distance with LEAST — the same zip-fold squared-L2 and
-    the same (md DESC, id ASC) tie-break as the Spark operator."""
+    the same (md DESC, id ASC) tie-break as the Spark operator.
+
+    Every CTE is MATERIALIZED: ``m{i}`` reads ``m{i-1}`` both directly
+    and through ``c{i}``, so DuckDB 1.0 would otherwise inline and
+    recompute the chain exponentially often in k (378 s at k = 8 on
+    sf0.001, 0.07 s materialized, rows identical)."""
 
     def d2(a: str, b: str) -> str:
         return (
@@ -5727,27 +5732,29 @@ def _kcenter_sql(k: int) -> str:
         )
 
     parts = [
-        "WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings)",
-        "c1 AS (SELECT vec_id, v FROM e ORDER BY vec_id LIMIT 1)",
-        "sel1 AS (SELECT 1 AS sel_rank, vec_id, CAST(0 AS BIGINT)"
+        "WITH e AS MATERIALIZED (SELECT vec_id, embedding::DOUBLE[] AS v"
+        " FROM embeddings)",
+        "c1 AS MATERIALIZED (SELECT vec_id, v FROM e ORDER BY vec_id LIMIT 1)",
+        "sel1 AS MATERIALIZED (SELECT 1 AS sel_rank, vec_id, CAST(0 AS BIGINT)"
         " AS dist_micro FROM c1)",
-        "m1 AS (SELECT e.vec_id, e.v, CAST(ROUND("
+        "m1 AS MATERIALIZED (SELECT e.vec_id, e.v, CAST(ROUND("
         + d2("e.v", "c.v")
         + " * 1000000) AS BIGINT) AS md FROM e, c1 c)",
     ]
     for i in range(2, k + 1):
         parts.append(
-            f"c{i} AS (SELECT vec_id, v, md FROM m{i - 1} "
+            f"c{i} AS MATERIALIZED (SELECT vec_id, v, md FROM m{i - 1} "
             f"WHERE vec_id NOT IN (SELECT vec_id FROM sel{i - 1}) "
             f"ORDER BY md DESC, vec_id ASC LIMIT 1)"
         )
         parts.append(
-            f"sel{i} AS (SELECT * FROM sel{i - 1} UNION ALL "
+            f"sel{i} AS MATERIALIZED (SELECT * FROM sel{i - 1} UNION ALL "
             f"SELECT {i}, vec_id, md FROM c{i})"
         )
         if i < k:
             parts.append(
-                f"m{i} AS (SELECT m.vec_id, m.v, LEAST(m.md, CAST(ROUND("
+                f"m{i} AS MATERIALIZED (SELECT m.vec_id, m.v, "
+                "LEAST(m.md, CAST(ROUND("
                 + d2("m.v", "c.v")
                 + f" * 1000000) AS BIGINT)) AS md FROM m{i - 1} m, c{i} c)"
             )
@@ -6460,43 +6467,3 @@ def _catalog(
 
 
 CATALOG, ORACLES = _catalog(globals())
-
-# Driver-window rotation (round 12).  The round driver gates the FIRST
-# 50 entries of queries() against their oracles.  This window executes
-# the plan written in r11: the 48 entries whose newest driver row is
-# r09 (3 rounds old at the r12 gate) — q04..q18 (incl. q10b),
-# q20..q23, q29, q31, q38, q39, q50..q72, q132 — all in front, catalog
-# order, confirmed by driver_sim's staleness report at the start of
-# this round.  The 2 spares are get-ahead picks from the r10-gated set
-# (its first two in catalog order: q01, q19).  Round-13 plan, written
-# now per the rotation-treadmill rule: gate the rest of the r10 set
-# (q24..q28, q30, q32..q37, q40..q45, q47..q49, q73..q94, q112,
-# q141..q144 — driver_sim's staleness report after this round's gate
-# lists them exactly), filling the window from the top of that report
-# in catalog order, spares from the r11 set.
-# Everything outside the window stays oracle-checked locally every
-# run by tests/test_queries_oracle.py, and tools/driver_sim.py flags
-# any entry whose newest driver row is >=2 rounds old.
-_WINDOW_PRIORITY = [
-    # the 48 r09-stale entries, catalog order
-    "q04_ngrams", "q05_inverted_index", "q06_sessionize",
-    "q07_pagerank", "q08_link_extract", "q09_kmeans_assign",
-    "q10_global_agg", "q10b_length_histogram", "q11_duplicate_keys",
-    "q12_merge_sorted", "q13_grep", "q14_pricing_summary",
-    "q15_revenue_by_nation", "q16_top_customers", "q17_exact_dedup",
-    "q18_jaccard_pairs", "q20_ann_topk", "q21_text_quality",
-    "q22_lang_id", "q23_fingerprint", "q29_kmeans_full",
-    "q31_ivf_ann", "q38_cosine_neardup", "q39_lsh_neardup",
-    "q50_mixture_sample", "q51_chunk_documents",
-    "q52_small_qty_revenue", "q53_order_count_distribution",
-    "q54_yearly_cohorts", "q55_returnflag_pivot", "q56_rolling_hour",
-    "q57_cube_revenue", "q58_repetition_stats", "q59_decontaminate",
-    "q60_encode_tokens", "q61_train_split", "q62_pii_scrub",
-    "q63_tfidf_topk", "q64_unigram_surprisal", "q65_dedup_spans",
-    "q66_blocklist_filter", "q67_gap_fill", "q68_triangle_counts",
-    "q69_funnel", "q70_cooccurrence_pmi", "q71_retention",
-    "q72_cheapest_supplier", "q132_hard_negatives",
-    # spares: get-ahead picks from the r10 set (first two, catalog order)
-    "q01_sort_events", "q19_minhash_lsh",
-]
-QUERIES = {**{name: CATALOG[name] for name in _WINDOW_PRIORITY}, **CATALOG}

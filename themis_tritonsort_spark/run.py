@@ -92,13 +92,13 @@ def main(argv: list[str] | None = None) -> int:
         return 0 if chk["sorted"] else 1
 
     if args.query:
-        from .queries import QUERIES
+        from .queries import CATALOG
 
-        if args.query not in QUERIES:
-            print(f"unknown query {args.query!r}; known: {', '.join(sorted(QUERIES))}",
+        if args.query not in CATALOG:
+            print(f"unknown query {args.query!r}; known: {', '.join(CATALOG)}",
                   file=sys.stderr)
             return 2
-        out = QUERIES[args.query](spark, args.sf_dir)
+        out = CATALOG[args.query](spark, args.sf_dir)
     else:
         from .plans.job import ThemisJob, run_in_sequence
 

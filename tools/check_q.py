@@ -22,7 +22,7 @@ ok = True
 for name in names:
     for sf in sfs:
         sf_dir = f"/root/testdata/sf{sf}"
-        r = compare(spark, sf_dir, Q.QUERIES[name], Q.ORACLES[name])
+        r = compare(spark, sf_dir, Q.CATALOG[name], Q.ORACLES[name])
         good = r["cols_match"] and r["rows_match"] and r["values_match"]
         ok &= good
         print(

@@ -12,10 +12,7 @@ Usage: python tools/driver_sim.py [sf_dir]   (default /root/testdata/sf0.01)
 
 from __future__ import annotations
 
-import glob
-import json
 import os
-import re
 import sys
 import time
 
@@ -30,38 +27,17 @@ WINDOW = 50  # the round driver gates the first 50 queries() entries
 
 
 def staleness_report(query_names: list[str]) -> list[str]:
-    """Per-entry driver-gate freshness from the CORRECTNESS_r*.json
-    history: the window rotation plan is only sound if every catalog
-    entry gets a driver row at least every other round.  Returns the
-    warning lines (also printed) so tests can pin the contract."""
-    newest: dict[str, int] = {}
-    rounds = []
-    for path in glob.glob(os.path.join(REPO, "CORRECTNESS_r*.json")):
-        m = re.search(r"CORRECTNESS_r(\d+)\.json$", path)
-        if not m:
-            continue
-        rnd = int(m.group(1))
-        rounds.append(rnd)
-        try:
-            with open(path) as f:
-                data = json.load(f)
-        except Exception:  # noqa: BLE001
-            continue
-        for name, row in data.items():
-            ok = bool(
-                row.get("rows_match")
-                and row.get("schema_match")
-                and (row.get("hash_match") is not False)
-            )
-            if ok:
-                newest[name] = max(newest.get(name, -1), rnd)
-    if not rounds:
+    """Per-entry driver-gate freshness from the gate history
+    (``__spark_entry__.newest_passes``): every catalog entry should get
+    a driver row at least every other round.  Returns the warning lines
+    so tests can pin the contract."""
+    newest = entrymod.newest_passes()
+    if not newest:
         return []
-    current = max(rounds) + 1  # the round in progress
-    windowed = set(query_names[:WINDOW])
+    current = max(newest.values()) + 1  # the round in progress
     warnings = []
-    for name in query_names:
-        eff = current if name in windowed else newest.get(name)
+    for name in query_names[WINDOW:]:  # the window is gated this round
+        eff = newest.get(name)
         if eff is None:
             warnings.append(
                 f"STALE {name}: never driver-gated and not in this "
@@ -89,14 +65,10 @@ def main() -> int:
     for name in sorted(queries):
         t0 = time.time()
         try:
-            if name in oracles:
-                r = compare(spark, sf_dir, queries[name], oracles[name])
-                ok, detail = r["ok"], f"{r['rows_spark']} rows"
-                if not r["ok"]:
-                    detail = str({k: v for k, v in r.items() if k != "ok"})[:300]
-            else:
-                n = queries[name](spark, sf_dir).count()
-                ok, detail = n >= 0, f"{n} rows (rows-only)"
+            r = compare(spark, sf_dir, queries[name], oracles[name])
+            ok, detail = r["ok"], f"{r['rows_spark']} rows"
+            if not r["ok"]:
+                detail = str({k: v for k, v in r.items() if k != "ok"})[:300]
         except Exception as e:  # noqa: BLE001
             ok, detail = False, f"EXC {type(e).__name__}: {e}"
         dt = time.time() - t0
@@ -109,10 +81,7 @@ def main() -> int:
     for line in warnings:
         print(line)
     if warnings:
-        print(
-            f"{len(warnings)} entries lack a fresh driver row — rotate "
-            "them into _WINDOW_PRIORITY next round"
-        )
+        print(f"{len(warnings)} entries lack a fresh driver row")
     else:
         print("driver-gate freshness: every entry current within 2 rounds")
     return 1 if failures else 0

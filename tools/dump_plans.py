@@ -28,13 +28,13 @@ def main() -> None:
     out_dir = REPO / "plans" / os.environ.get("SPARK_GRAFT_PLANS_ROUND", "r12")
     out_dir.mkdir(parents=True, exist_ok=True)
 
-    from themis_tritonsort_spark.queries import QUERIES
+    from themis_tritonsort_spark.queries import CATALOG
     from themis_tritonsort_spark.session import get_spark
 
     spark = get_spark("dump-plans")
     try:
         for name in names:
-            df = QUERIES[name](spark, sf_dir)
+            df = CATALOG[name](spark, sf_dir)
             buf = io.StringIO()
             with contextlib.redirect_stdout(buf):
                 df.explain("formatted")

@@ -66,7 +66,7 @@ def main() -> int:
     print()
     print("| query | shuffles | bcast joins | SMJ | pushed filters | WSCG spans |")
     print("|---|---|---|---|---|---|")
-    for name, fn in q.QUERIES.items():
+    for name, fn in q.CATALOG.items():
         try:
             df = fn(spark, sf_dir)
             simple = _plan_str(df, "simple")

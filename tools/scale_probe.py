@@ -1,21 +1,31 @@
 #!/usr/bin/env python
-"""Operator scaling probe: time the headline curation operators at
-1x/8x/64x replicas of the sf0.1 tables and report the empirical
-scaling exponent alpha (t ~ n^alpha) for each.
+"""Operator scaling probe: run operators at growing input sizes and
+report the empirical scaling exponent alpha (t ~ n^alpha) per row.
 
-The per-round bench (bench.py) proves absolute speed at sf0.1; this
-tool is the evidence for the DESIGN claims — that the dedup/ANN/
-sampling plans are near-linear in corpus size (alpha ~ 1, no hidden
-quadratic candidate blow-up), which is what "would still work at
-100 TB" means operationally.  Replicas are deterministic: ids are
-rekeyed per copy, text gets a per-copy prefix token (so near-dup
-candidates grow linearly, not quadratically across copies — the
-workload stays proportional to input), embeddings get a small
-per-copy deterministic offset.
+bench.py proves absolute speed at sf0.1; this tool is the evidence for
+the DESIGN claim that the plans are near-linear in input size (alpha ~
+1, no hidden quadratic blow-up).  The first argument picks the shape:
 
-Usage: python tools/scale_probe.py [sf_dir] [copies ...]
-       (default /root/testdata/sf0.1 at 1 8 64; writes markdown to
-        stdout — redirect to SCALE_PROBE.md)
+* ``replicas`` (default): the curation operators on 1x/8x/64x copies
+  of the sf0.1 tables.  Copies are deterministic and disjoint: ids are
+  rekeyed, text gets a per-copy prefix token (near-dup candidates grow
+  linearly, not quadratically), embeddings a small per-copy offset.
+* ``powerlaw``: ONE connected graph scaled in SIZE (a ring plus
+  deg ~ min(1024, 1/u) hash-random edges, the family of the
+  reference's GenPowerLawRandomNetworkMapFunction.cc).  It exposes
+  what replicas hide: the triangle enumerator's wedge volume (counted
+  directly) and star contraction's hot key (the component minimum
+  ends up owning all |V|-1 vertices).  Exponents are taken vs |E|.
+* ``chain``: one path graph 0-1-...-L, the diameter adversary behind
+  q144: star contraction needs O(log L) alternations, min-label L
+  rounds, so min-label capped at 20 rounds must raise.
+
+Usage: python tools/scale_probe.py [replicas|powerlaw|chain] [base] [scales ...]
+         replicas: base = sf dir (data.DEFAULT_SF_DIR, sf0.1), scales 1 8 64
+         powerlaw: base = vertices (125000), scales 1 4 16
+         chain:    base = chain length (1000), scales 1 8 64
+       SCALE_PROBE_ONLY=a,b runs just those probes.  Markdown goes to
+       stdout (redirect to SCALE_PROBE.md), progress to stderr.
 """
 
 from __future__ import annotations
@@ -24,30 +34,38 @@ import math
 import os
 import sys
 import time
+from collections.abc import Callable
+from typing import NamedTuple
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 if REPO not in sys.path:
     sys.path.insert(0, REPO)
 
+from pyspark.sql import DataFrame  # noqa: E402
 from pyspark.sql import functions as F  # noqa: E402
 
-from themis_tritonsort_spark.data import table  # noqa: E402
+from themis_tritonsort_spark.data import DEFAULT_SF_DIR, table  # noqa: E402
 from themis_tritonsort_spark.session import get_spark  # noqa: E402
 
 COPY_STRIDE = 1_000_000_000
 
 
+def _copy_index(copies: int):
+    """One row per (input row, copy), the copy number in ``__copy``."""
+    return F.explode(F.sequence(F.lit(0), F.lit(copies - 1))).alias("__copy")
+
+
+def _rekeyed(col: str):
+    """``col`` offset by the copy number, so no two copies share a key."""
+    return (F.col(col) + F.col("__copy").cast("long") * COPY_STRIDE).alias(col)
+
+
 def replicate_docs(docs, copies: int):
     if copies == 1:
         return docs
-    c = F.explode(F.sequence(F.lit(0), F.lit(copies - 1))).alias("__copy")
-    return docs.select("*", c).select(
-        (F.col("doc_id") + F.col("__copy").cast("long") * COPY_STRIDE).alias(
-            "doc_id"
-        ),
-        F.concat(F.lit("c"), F.col("__copy"), F.lit(" "), F.col("text")).alias(
-            "text"
-        ),
+    return docs.select("*", _copy_index(copies)).select(
+        _rekeyed("doc_id"),
+        F.concat(F.lit("c"), F.col("__copy"), F.lit(" "), F.col("text")).alias("text"),
         "lang",
         "source",
         "n_chars",
@@ -57,11 +75,8 @@ def replicate_docs(docs, copies: int):
 def replicate_emb(emb, copies: int):
     if copies == 1:
         return emb
-    c = F.explode(F.sequence(F.lit(0), F.lit(copies - 1))).alias("__copy")
-    return emb.select("*", c).select(
-        (F.col("vec_id") + F.col("__copy").cast("long") * COPY_STRIDE).alias(
-            "vec_id"
-        ),
+    return emb.select("*", _copy_index(copies)).select(
+        _rekeyed("vec_id"),
         F.transform(
             F.col("embedding").cast("array<double>"),
             lambda x: x + F.col("__copy").cast("double") * 1e-3,
@@ -73,11 +88,8 @@ def replicate_emb(emb, copies: int):
 def replicate_events(ev, copies: int):
     if copies == 1:
         return ev.select("user_id", F.unix_micros("ts").alias("ts_us"))
-    c = F.explode(F.sequence(F.lit(0), F.lit(copies - 1))).alias("__copy")
-    return ev.select("user_id", "ts", c).select(
-        (F.col("user_id") + F.col("__copy").cast("long") * COPY_STRIDE).alias(
-            "user_id"
-        ),
+    return ev.select("user_id", "ts", _copy_index(copies)).select(
+        _rekeyed("user_id"),
         # shift each copy by a second so boundary timestamps stay
         # distinct across copies (boundaries grow linearly)
         (F.unix_micros("ts") + F.col("__copy").cast("long")).alias("ts_us"),
@@ -92,16 +104,21 @@ def replicate_edges(edges, copies: int):
     work — exactly the 100 TB claim for the peel/propagate loops."""
     if copies == 1:
         return edges
-    c = F.explode(F.sequence(F.lit(0), F.lit(copies - 1))).alias("__copy")
-    off = F.col("__copy").cast("long") * COPY_STRIDE
-    return edges.select("src", "dst", c).select(
-        (F.col("src") + off).alias("src"),
-        (F.col("dst") + off).alias("dst"),
+    return edges.select("src", "dst", _copy_index(copies)).select(
+        _rekeyed("src"), _rekeyed("dst")
     )
 
 
-def probes(spark, sf_dir: str, copies: int):
-    from themis_tritonsort_spark.operators.components import dedup_clusters
+def replica_probes(spark, sf_dir: str, copies: int):
+    """The curation operators on ``copies`` disjoint replicas of the
+    tables in ``sf_dir`` (one DataFrame thunk per operator)."""
+    from themis_tritonsort_spark.operators.bpe import bpe_train
+    from themis_tritonsort_spark.operators.components import (
+        dedup_clusters,
+        kcore_vertices,
+        label_propagation,
+        triangle_total_degree_oriented,
+    )
     from themis_tritonsort_spark.operators.dedup import (
         duplicate_substring_spans,
         exact_duplicates,
@@ -110,14 +127,14 @@ def probes(spark, sf_dir: str, copies: int):
         lsh_candidate_pairs,
         minhash_signature,
     )
-    from themis_tritonsort_spark.operators.textstats import text_quality
+    from themis_tritonsort_spark.operators.kmeans import lloyd
+    from themis_tritonsort_spark.operators.pagerank import pagerank
     from themis_tritonsort_spark.operators.sampling import (
         importance_resample,
         importance_scores,
         leakage_safe_split,
         token_budget_sample,
     )
-    from themis_tritonsort_spark.operators.textstats import nb_token_classifier
     from themis_tritonsort_spark.operators.similarity import (
         hard_negative_topk,
         margin_pair_mine_ann,
@@ -126,26 +143,16 @@ def probes(spark, sf_dir: str, copies: int):
         semdedup,
         sq8_topk,
     )
-    from themis_tritonsort_spark.operators.textstats import (
-        chunk_documents,
-        pack_sequences,
-    )
-
-    from themis_tritonsort_spark.operators.bpe import bpe_train
     from themis_tritonsort_spark.operators.sketches import histogram_quantiles
     from themis_tritonsort_spark.operators.temporal import concurrency_sweep
     from themis_tritonsort_spark.operators.textstats import (
         bm25_topk_multi,
+        chunk_documents,
         hashed_linear_score,
+        nb_token_classifier,
+        pack_sequences,
+        text_quality,
     )
-
-    from themis_tritonsort_spark.operators.components import (
-        kcore_vertices,
-        label_propagation,
-        triangle_total_degree_oriented,
-    )
-    from themis_tritonsort_spark.operators.kmeans import lloyd
-    from themis_tritonsort_spark.operators.pagerank import pagerank
     from themis_tritonsort_spark.queries import _lineitem_edges
 
     docs = replicate_docs(table(spark, sf_dir, "documents"), copies)
@@ -155,6 +162,9 @@ def probes(spark, sf_dir: str, copies: int):
     )
     edges = replicate_edges(_lineitem_edges(spark, sf_dir), copies)
     queries = emb.where(F.col("vec_id") < 5)
+    targeted = docs.withColumn(
+        "__t", F.col("source").isin("src0", "src1", "src2", "src3")
+    )
 
     def lsh(d):
         sig = minhash_signature(d, "doc_id", "text", num_hashes=16)
@@ -236,23 +246,12 @@ def probes(spark, sf_dir: str, copies: int):
         # 64x; this row vs the full op shows whether the O(total
         # tokens) aggregate or the prefix-sum walk carries the growth)
         "importance_scores": lambda: importance_scores(
-            docs.withColumn(
-                "__t", F.col("source").isin("src0", "src1", "src2", "src3")
-            ),
-            "doc_id",
-            "text",
-            "__t",
+            targeted, "doc_id", "text", "__t"
         ),
         # ratio table bucket-bound + distributed prefix sum for the
         # budget walk (budget grows with copies so kept rows scale too)
         "importance_resample": lambda: importance_resample(
-            docs.withColumn(
-                "__t", F.col("source").isin("src0", "src1", "src2", "src3")
-            ),
-            "doc_id",
-            "text",
-            "__t",
-            budget_tokens=600 * copies,
+            targeted, "doc_id", "text", "__t", budget_tokens=600 * copies
         ),
         # components-bound like keep_best; the anchor join is the only
         # corpus-wide shuffle, the split itself is map-side
@@ -328,95 +327,255 @@ def probes(spark, sf_dir: str, copies: int):
     }
 
 
-def main() -> None:
-    sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.1"
-    copies = [int(c) for c in sys.argv[2:]] or [1, 8, 64]
-    # SCALE_PROBE_ONLY=a,b probes just those operators (targeted
-    # follow-ups, e.g. a 128x point for one flagged row, without
-    # re-running the whole 20-operator ladder).
-    only = {
-        s.strip()
-        for s in os.environ.get("SCALE_PROBE_ONLY", "").split(",")
-        if s.strip()
+def powerlaw_graph(spark, n_vertices: int, seed: int = 7):
+    """One connected graph: a Hamiltonian ring (connectivity) plus
+    deg ~ min(1024, floor(1/u)) hash-random out-edges per vertex,
+    endpoints hash-uniform — the heavy-tailed web-crawl shape.  Pure
+    function of (n_vertices, seed): u is xxhash64-derived, so the
+    graph is identical across runs, partitionings, and sessions."""
+    v = spark.range(n_vertices)
+    # u in (0,1]: (|xxhash64| % 2^40 + 1) / 2^40 — cheap and exact
+    denom = float(2**40)
+    u = (
+        (F.abs(F.xxhash64(F.col("id"), F.lit(seed))) % F.lit(2**40)) + 1
+    ) / F.lit(denom)
+    deg = F.least(F.lit(1024), F.floor(1.0 / u)).cast("int")  # tail cap
+    fan = v.select(F.col("id").alias("src"), deg.alias("__deg")).where(
+        F.col("__deg") > 0
+    )
+    random_edges = fan.select(
+        "src",
+        F.explode(F.sequence(F.lit(1), F.col("__deg"))).alias("__j"),
+    ).select(
+        "src",
+        (
+            F.abs(F.xxhash64(F.col("src"), F.col("__j"), F.lit(seed + 1)))
+            % F.lit(n_vertices)
+        ).alias("dst"),
+    )
+    ring = v.select(
+        F.col("id").alias("src"),
+        ((F.col("id") + 1) % F.lit(n_vertices)).alias("dst"),
+    )
+    return random_edges.unionByName(ring)
+
+
+def canonical_edge_count_and_wedges(edges):
+    """Return (|E|, oriented wedge count) for the canonicalized graph —
+    the exact work term of the degree-oriented enumerator: after
+    orienting each edge toward its higher-(degree, id) endpoint,
+    wedges = sum over vertices of C(outdeg, 2)."""
+    e = (
+        edges.select(
+            F.least("src", "dst").alias("a"),
+            F.greatest("src", "dst").alias("b"),
+        )
+        .where(F.col("a") != F.col("b"))
+        .distinct()
+    )
+    degrees = (
+        e.select(F.col("a").alias("v"))
+        .unionAll(e.select(F.col("b").alias("v")))
+        .groupBy("v")
+        .agg(F.count(F.lit(1)).alias("deg"))
+    )
+    da = degrees.select(F.col("v").alias("a"), F.col("deg").alias("__da"))
+    db = degrees.select(F.col("v").alias("b"), F.col("deg").alias("__db"))
+    withdeg = e.join(da, "a").join(db, "b")
+    a_first = (F.col("__da") < F.col("__db")) | (
+        (F.col("__da") == F.col("__db")) & (F.col("a") < F.col("b"))
+    )
+    out_deg = (
+        withdeg.select(
+            F.when(a_first, F.col("a")).otherwise(F.col("b")).alias("u")
+        )
+        .groupBy("u")
+        .agg(F.count(F.lit(1)).alias("od"))
+    )
+    row = out_deg.agg(
+        F.sum(F.col("od") * (F.col("od") - 1) / 2).cast("long").alias("w"),
+        F.sum("od").cast("long").alias("m"),
+    ).collect()[0]
+    return row["m"], row["w"]
+
+
+def powerlaw_probes(spark, base: int, scale: int):
+    """Triangle counting (exact and DOULION p=1/4) and star-contraction
+    CC on one power-law graph of ``base * scale`` vertices."""
+    from themis_tritonsort_spark.operators.components import (
+        connected_components_star,
+        triangle_total_degree_oriented,
+        triangle_total_doulion,
+    )
+
+    edges = powerlaw_graph(spark, base * scale)
+
+    def graph():
+        m, wedges = canonical_edge_count_and_wedges(edges)
+        return {"canonical edges": m, "oriented wedges": wedges}
+
+    def exact():
+        tri = triangle_total_degree_oriented(edges).collect()[0]
+        return {"exact triangles": tri["n_triangles"]}
+
+    def doulion():
+        est = triangle_total_doulion(edges, p_ppm=250_000).collect()[0]
+        return {"DOULION p=1/4 estimate": est["n_triangles_est"]}
+
+    def star_cc():
+        # one component: late large-star rounds group and join a
+        # deg ~ |V| hot key, so a straggler would show as alpha >> 1
+        out = connected_components_star(edges, max_iterations=40)
+        row = out.agg(
+            F.count(F.lit(1)).alias("nv"), F.countDistinct("component").alias("nc")
+        ).collect()[0]
+        return {"star-CC vertices": row["nv"], "star-CC components": row["nc"]}
+
+    return {
+        "graph": graph,
+        "triangle_exact": exact,
+        "triangle_doulion": doulion,
+        "star_cc": star_cc,
     }
 
-    def select(d):
-        if not only:
-            return d
-        unknown = only - set(d)
-        if unknown:
-            raise SystemExit(f"SCALE_PROBE_ONLY: unknown {sorted(unknown)}")
-        return {k: v for k, v in d.items() if k in only}
 
+def chain_probes(spark, base: int, scale: int):
+    """Star contraction and min-label capped at 20 rounds on one path
+    graph of ``base * scale`` edges."""
+    from themis_tritonsort_spark.operators.components import (
+        connected_components,
+        connected_components_star,
+    )
+
+    n = base * scale
+    edges = spark.range(n).select(
+        F.col("id").alias("src"), (F.col("id") + 1).alias("dst")
+    )
+
+    def star_cc():
+        row = connected_components_star(edges).agg(
+            F.count(F.lit(1)).alias("nv"), F.max("component").alias("mc")
+        ).collect()[0]
+        return {"star-CC vertices": row["nv"], "star-CC max component": row["mc"]}
+
+    def min_label():
+        try:
+            connected_components(edges, max_iterations=20).count()
+        except RuntimeError:
+            return {}  # needs ~n rounds, so the cap raises
+        raise AssertionError(f"min-label converged in 20 rounds on {n} edges")
+
+    return {"star_cc": star_cc, "min_label_20_rounds": min_label}
+
+
+class Mode(NamedTuple):
+    # (spark, base, scale) -> {name: () -> {row: value} or a DataFrame}
+    probes: Callable
+    base: object
+    scales: tuple[int, ...]
+    x_row: str | None  # the row alpha is taken against, else the scale
+    flag: float | None  # mark probe rows whose alpha_hi exceeds this
+    title: str
+
+
+MODES = {
+    "replicas": Mode(replica_probes, DEFAULT_SF_DIR, (1, 8, 64), None, 1.3,
+                     "operator wall-clock vs corpus replicas"),
+    "powerlaw": Mode(powerlaw_probes, 125_000, (1, 4, 16), "canonical edges",
+                     None, "one connected power-law graph scaled in size"),
+    "chain": Mode(chain_probes, 1_000, (1, 8, 64), None, None,
+                  "star contraction vs min-label on one chain"),
+}
+
+
+def ladder(mode: Mode, base, scales: list[int], only: set[str]):
+    """{row: {scale: value}}: every probe's wall-clock seconds under its
+    own name, and each quantity it reports under the quantity's name (a
+    probe that returns a DataFrame is drained to the noop sink instead).
+
+    Each scale runs in a FRESH SparkContext: localCheckpoint blocks are
+    not freed by clearCache(), so in one long session the earlier
+    scales' blocks pressure the later ones (r09: kcore x64 read 219 s
+    in the ladder session vs 48 s fresh, a false alpha_hi of 1.41).
+    The JVM and its JIT state survive, and an untimed 1x warm-up in
+    the same context keeps plan-compile cost out of the timing.  The
+    warm-up's own blocks (1x-sized, constant across scales) are freed
+    asynchronously by the ContextCleaner; they cancel in alpha."""
     results: dict[str, dict[int, float]] = {}
-    # One FRESH SparkContext per scale.  A single-session ladder leaks
-    # state into the later (heavier) scales: localCheckpoint blocks are
-    # NOT freed by catalog.clearCache(), so each earlier run's
-    # checkpointed rounds stay resident in the block manager and the
-    # 64x point runs under memory pressure it did not cause.  Measured
-    # r09: kcore x64 read 219 s inside the ladder session vs 48 s in a
-    # fresh session — a 4.6x inflation that manufactured alpha_hi 1.41
-    # for a linear loop.  Stopping the context between scales frees the
-    # block manager; the JVM (and its JIT/codegen state) survives, and
-    # each scale gets an untimed 1x warmup in its own session so
-    # plan-compile cost stays out of the timing either way.
-    for n in copies:
+    for n in scales:
         spark = get_spark(app_name=f"scale-probe-x{n}")
-        for name, thunk in select(probes(spark, sf_dir, 1)).items():
-            thunk().write.format("noop").mode("overwrite").save()
-            print(
-                f"<!-- warmup x{n} {name} done -->", file=sys.stderr, flush=True
-            )
-        # ACCEPTED RESIDUAL (ADVICE r09): the warmup's localCheckpoint
-        # blocks outlive it until the ContextCleaner frees them with
-        # their GC'd DataFrames (asynchronous).  The residue is 1x-sized
-        # and roughly CONSTANT across scales — it biases absolute times
-        # slightly but cancels in the alpha exponent, unlike the
-        # scale-proportional leak the fresh-context-per-scale fix
-        # removed.  Restarting the context between warmup and timing
-        # would also discard the JIT/codegen state the warmup exists to
-        # prime, so we keep the session and accept the 1x residue.
-        for name, thunk in select(probes(spark, sf_dir, n)).items():
-            t0 = time.time()
-            thunk().write.format("noop").mode("overwrite").save()
-            dt = time.time() - t0
-            results.setdefault(name, {})[n] = dt
-            print(
-                f"<!-- {name} x{n}: {dt:.2f}s -->", file=sys.stderr, flush=True
-            )
+        for phase, size in (("warmup", 1), ("timed", n)):
+            probes = mode.probes(spark, base, size)
+            if unknown := sorted(only - set(probes)):
+                raise SystemExit(f"SCALE_PROBE_ONLY: unknown {unknown}")
+            for name in [p for p in probes if not only or p in only]:
+                t0 = time.time()
+                quantities = probes[name]()
+                if isinstance(quantities, DataFrame):  # drain to the noop sink
+                    quantities.write.format("noop").mode("overwrite").save()
+                    quantities = {}
+                dt = time.time() - t0
+                print(f"<!-- {phase} x{n} {name}: {dt:.2f}s {quantities} -->",
+                      file=sys.stderr, flush=True)
+                if phase == "timed":
+                    results.setdefault(name, {})[n] = dt
+                    for row, value in quantities.items():
+                        results.setdefault(row, {})[n] = value
         spark.stop()
+    return results
 
-    lo, hi = copies[0], copies[-1]
-    mid = copies[-2] if len(copies) >= 3 else lo
-    print("# SCALE_PROBE — operator wall-clock vs corpus replicas")
+
+def print_table(mode: Mode, results, scales: list[int]) -> None:
+    """One markdown row per result row: its value at each scale, alpha
+    over the full range and alpha_hi over the largest two scales."""
+    xs = results.get(mode.x_row) or {n: n for n in scales}
+    lo, hi = scales[0], scales[-1]
+    mid = scales[-2] if len(scales) >= 3 else lo
+
+    def alpha(ys, a, b):
+        if min(ys[a], ys[b], xs[a], xs[b]) <= 0 or xs[a] == xs[b]:
+            return None
+        return math.log(ys[b] / ys[a]) / math.log(xs[b] / xs[a])
+
+    def fmt(v):
+        if v is None:
+            return "—"
+        return f"{v:,}" if isinstance(v, int) else f"{v:.2f}"
+
+    header = " | ".join(f"x{n}" for n in scales)
+    print(f"| quantity | {header} | alpha | alpha_hi |")
+    print("|---|" + "---|" * (len(scales) + 2))
+    for name, ys in results.items():
+        a, a_hi = alpha(ys, lo, hi), alpha(ys, mid, hi)
+        flagged = mode.flag and name.isidentifier() and (a_hi or 0) > mode.flag
+        row = " | ".join(fmt(ys[n]) for n in scales)
+        print(f"| {name} | {row} | {fmt(a)} | {fmt(a_hi)}{' ⚠' * bool(flagged)} |")
+
+
+def main() -> None:
+    args = sys.argv[1:]
+    name = args.pop(0) if args and args[0] in MODES else "replicas"
+    mode = MODES[name]
+    base = type(mode.base)(args.pop(0)) if args else mode.base
+    scales = [int(c) for c in args] or list(mode.scales)
+    # SCALE_PROBE_ONLY=a,b runs just those probes (a targeted follow-up,
+    # e.g. a 128x point for one flagged row, without the whole ladder)
+    only_env = os.environ.get("SCALE_PROBE_ONLY", "")
+    only = {p.strip() for p in only_env.split(",") if p.strip()}
+    results = ladder(mode, base, scales, only)
+
+    env = f"SCALE_PROBE_ONLY={only_env} " if only else ""
+    print(f"# SCALE_PROBE — {mode.title}\n")
+    print(f"Generated by `{env}python tools/scale_probe.py {name} {base} "
+          f"{' '.join(map(str, scales))}`.  Rows named like probes are")
+    print("wall-clock seconds.  alpha = log(y_hi / y_lo) / log(x_hi / x_lo)")
+    print(f"over the FULL range, x = {mode.x_row or 'the scale'}; alpha_hi is")
+    print("the same exponent over the LAST segment (largest two scales).")
+    if mode.flag:
+        print(f"**Flag on alpha_hi > {mode.flag}**: the smallest point runs partly")
+        print("inside fixed per-job overhead, which inflates the full range.")
     print()
-    print(f"Generated by `python tools/scale_probe.py {sf_dir} "
-          f"{' '.join(str(c) for c in copies)}`.")
-    print()
-    print("alpha = log(t_hi / t_lo) / log(n_hi / n_lo) over the FULL")
-    print("range; alpha_hi is the same exponent over only the LAST")
-    print("segment (largest two scales).  ~1 is linear, <1 means fixed")
-    print("overhead still dominates at this size.  **Flag on alpha_hi")
-    print("> 1.3**, not the full-range alpha: the smallest point runs")
-    print("warm and partly inside fixed per-job overhead, which")
-    print("deflates t_lo and inflates the full-range exponent — the")
-    print("r07 importance-1.22 / r08 importance_scores-1.37 false")
-    print("flags were exactly this artifact (both ops re-probed")
-    print("linear on the hi segment; VERDICT r08 #3).")
-    print()
-    header = " | ".join(f"{n}x (s)" for n in copies)
-    print(f"| operator | {header} | alpha | alpha_hi |")
-    print("|---|" + "---|" * (len(copies) + 2))
-    for name, times in results.items():
-        alpha = math.log(times[hi] / times[lo]) / math.log(hi / lo)
-        alpha_hi = (
-            math.log(times[hi] / times[mid]) / math.log(hi / mid)
-            if mid != lo
-            else alpha  # only two scales: the hi segment IS the range
-        )
-        row = " | ".join(f"{times[n]:.2f}" for n in copies)
-        flag = " ⚠" if alpha_hi > 1.3 else ""
-        print(f"| {name} | {row} | {alpha:.2f} | {alpha_hi:.2f}{flag} |")
+    print_table(mode, results, scales)
 
 
 if __name__ == "__main__":
