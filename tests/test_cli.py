@@ -54,10 +54,13 @@ def test_cli_gensort_checksum_only(capsys):
     assert "3f070c88a47" in capsys.readouterr().out
 
 
-def test_driver_sim_staleness_report():
+def test_driver_sim_staleness_report(monkeypatch):
     """tools/driver_sim.py's freshness audit: windowed entries always
-    count as current, never-gated non-window entries warn, and a row
-    within the last round stays quiet — the rotation-debt contract."""
+    count as current, and an entry outside the window is flagged once
+    its newest driver row is one window rotation old
+    (ceil(148 / 50) = 3 rounds), not before — the rotation-debt
+    contract.  The committed gate history reports nothing."""
+    import math
     import os
     import sys
 
@@ -67,12 +70,19 @@ def test_driver_sim_staleness_report():
     import __spark_entry__ as em
 
     names = list(em.queries())
+    assert staleness_report(names) == []
+
+    period = math.ceil(len(names) / WINDOW)
+    # synthetic history, current round 11: one entry outside the window
+    # one rotation old, one a round younger, one inside the window at 9
+    # rounds old (never flagged: this round gates it)
+    newest = {name: 10 for name in names}
+    newest[names[0]] = 11 - 9
+    newest[names[WINDOW]] = 11 - period
+    newest[names[WINDOW + 1]] = 11 - (period - 1)
+    monkeypatch.setattr(em, "newest_passes", lambda: newest)
     warnings = staleness_report(names)
-    flagged = {w.split()[1].rstrip(":") for w in warnings}
-    # nothing inside this round's window may be flagged
-    assert not (flagged & set(names[:WINDOW]))
-    # every flagged entry really is outside the window
-    assert flagged <= set(names[WINDOW:])
+    assert [w.split()[1].rstrip(":") for w in warnings] == [names[WINDOW]]
 
 
 def test_scale_probe_powerlaw_generator_is_pinned(spark):

@@ -275,6 +275,25 @@ def test_lloyd_converges_two_blobs(spark):
     assert abs(centers[0][0] - 2.0) < 1e-9 and abs(centers[1][0] - 102.0) < 1e-9
 
 
+def test_lloyd_nested_vector_column(spark):
+    """A ``struct<v: array<double>>`` column named ``s.v`` gives the same
+    centers and assignments as the same vectors in a flat column."""
+    pts = [(i, [float(i % 2 * 100 + (i % 5)), 0.0]) for i in range(40)]
+    flat = spark.createDataFrame(pts, "id long, v array<double>")
+    nested = spark.createDataFrame(
+        [(i, (v,)) for i, v in pts], "id long, s struct<v: array<double>>"
+    )
+    init = [[0.0, 0.0], [1.0, 0.0]]
+    a_flat, c_flat = lloyd(flat, "v", k=2, iterations=3, initial_centers=init)
+    a_nested, c_nested = lloyd(
+        nested, "s.v", k=2, iterations=3, initial_centers=init
+    )
+    assert c_nested == c_flat
+    assert sorted((r["id"], r["cluster"]) for r in a_nested.collect()) == sorted(
+        (r["id"], r["cluster"]) for r in a_flat.collect()
+    )
+
+
 def test_lloyd_iteration_cache_is_scoped_and_value_neutral(spark):
     """lloyd's iteration working set (vector-only projection) persists
     for the loop and is ALWAYS unpersisted before returning — no

@@ -1,5 +1,7 @@
 """Tests for the session-conf pinning in data._ensure_session_confs:
-the silent-timezone-shift class of bug (ADVICE r2) must stay loud."""
+the silent-timezone-shift class of bug (ADVICE r2) must stay loud.  That
+read-side pin is the one conf write in the package; operators write no
+session conf."""
 
 from __future__ import annotations
 
@@ -31,3 +33,42 @@ def test_override_of_foreign_timezone_warns_and_pins(spark):
         assert table(spark, SF_SMOKE, "events").select("ts").first() is not None
     finally:
         spark.conf.set("spark.sql.session.timeZone", "UTC")
+
+
+def test_star_cc_and_budget_replay_write_no_caller_conf(spark, monkeypatch):
+    """Neither star-contraction CC nor the token-budget replay writes
+    the caller's session conf: the replay sets its state-store count on
+    a session of its own, and star CC runs under the conf it is given."""
+    from pyspark.sql.conf import RuntimeConfig
+
+    from themis_tritonsort_spark.operators.components import (
+        connected_components_star,
+    )
+    from themis_tritonsort_spark.streaming.budget import token_budget_replay
+
+    edges = spark.createDataFrame(
+        [(1, 2), (2, 3), (3, 4), (7, 8)], "src long, dst long"
+    )
+    docs = spark.createDataFrame(
+        [(i, "w w w", "g0") for i in range(6)],
+        "doc_id long, text string, source string",
+    )
+    caller_conf = spark.conf
+    before = caller_conf.getAll
+    writes = []
+    real_set = RuntimeConfig.set
+
+    def spy_set(self, key, value):
+        if self is caller_conf:
+            writes.append(key)
+        return real_set(self, key, value)
+
+    monkeypatch.setattr(RuntimeConfig, "set", spy_set)
+    cc = sorted(tuple(r) for r in connected_components_star(edges).collect())
+    replayed = token_budget_replay(spark, docs, "doc_id", "text", "source", 8)
+    admitted = sorted(r["id"] for r in replayed.collect())
+    monkeypatch.undo()
+    assert writes == []
+    assert spark.conf.getAll == before
+    assert cc == [(1, 1), (2, 1), (3, 1), (4, 1), (7, 7), (8, 7)]
+    assert admitted == [0, 1, 2]

@@ -1041,18 +1041,39 @@ def test_token_budget_replay_carries_state_across_batches(spark):
     assert got == [(0, 10), (1, 20), (2, 30), (3, 40)]
 
 
+def _spy_new_sessions(monkeypatch) -> list:
+    """Record every session ``SparkSession.newSession`` hands out, so a
+    test can look at the replay's own session after the call."""
+    from pyspark.sql import SparkSession
+
+    sessions = []
+    real_new = SparkSession.newSession
+
+    def spy_new(self):
+        session = real_new(self)
+        sessions.append(session)
+        return session
+
+    monkeypatch.setattr(SparkSession, "newSession", spy_new)
+    return sessions
+
+
 def test_token_budget_replay_drops_its_sink_view(spark, monkeypatch):
     """The memory sink's budget_replay_<uuid> temp view must not outlive
-    the call, and the returned frame must still read every row after
-    the view is gone (also on the timeout path)."""
+    the call, in the caller's session or the replay's own, and the
+    returned frame must still read every row after the view is gone
+    (also on the timeout path)."""
     from pyspark.sql.streaming import StreamingQuery
 
     from themis_tritonsort_spark.streaming.budget import token_budget_replay
 
+    sessions = _spy_new_sessions(monkeypatch)
+
     def replay_views() -> list[str]:
         return [
             t.name
-            for t in spark.catalog.listTables()
+            for s in [spark, *sessions]
+            for t in s.catalog.listTables()
             if t.name.startswith("budget_replay_")
         ]
 
@@ -1061,6 +1082,7 @@ def test_token_budget_replay_drops_its_sink_view(spark, monkeypatch):
         "doc_id long, text string, source string",
     )
     out = token_budget_replay(spark, docs, "doc_id", "text", "source", 100)
+    assert len(sessions) == 1
     assert replay_views() == []
     assert out.count() == 5
 
@@ -1079,6 +1101,7 @@ def test_token_budget_replay_timeout_raises(spark, monkeypatch):
 
     from themis_tritonsort_spark.streaming.budget import token_budget_replay
 
+    sessions = _spy_new_sessions(monkeypatch)
     monkeypatch.setattr(
         StreamingQuery, "awaitTermination", lambda self, timeout=None: False
     )
@@ -1090,7 +1113,9 @@ def test_token_budget_replay_timeout_raises(spark, monkeypatch):
     with pytest.raises(TimeoutError):
         token_budget_replay(spark, docs, "doc_id", "text", "source", 3)
     assert spark.conf.get("spark.sql.shuffle.partitions") == prev
-    assert not any(q.isActive for q in spark.streams.active)
+    assert len(sessions) == 1
+    for s in [spark, *sessions]:
+        assert not any(q.isActive for q in s.streams.active)
 
 
 @pytest.mark.parametrize(

@@ -107,14 +107,3 @@ def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
                 )
             df = df.withColumn(c, F.col(c).cast("timestamp"))
     return df
-
-
-def load_all(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    return {name: table(spark, sf_dir, name) for name in TABLES}
-
-
-def register_views(spark: SparkSession, sf_dir: str) -> None:
-    """Register every table as a temp view so spark.sql() plans can
-    reference them by name (mirrors the DuckDB oracle's view setup)."""
-    for name in TABLES:
-        table(spark, sf_dir, name).createOrReplaceTempView(name)

@@ -14,11 +14,16 @@ tagged-union merge shape as operators.pagerank, and the same
 localCheckpoint lineage control.
 
 At 100 TB: the edge list is pre-partitioned and persisted once; only
-the (vid, label) relation iterates.  For adversarial long-chain graphs
-use :func:`connected_components_star` (alternating large-star/
-small-star contraction, O(log n) rounds); near-dup graphs do not need
-it — their near-clique components converge in 2-4 min-label rounds at
-a cheaper per-round cost.
+the (vid, label) relation iterates.  Persisted, not checkpointed: under
+AQE a checkpoint of the repartitioned edges reports no partitioning,
+so every round would exchange them again (measured on q46 at sf0.1:
+49 jobs instead of 38).  No loop here writes session conf.
+
+For adversarial long-chain graphs use
+:func:`connected_components_star` (alternating large-star/small-star
+contraction, O(log n) rounds); near-dup graphs do not need it — their
+near-clique components converge in 2-4 min-label rounds at a cheaper
+per-round cost.
 """
 
 from __future__ import annotations
@@ -251,7 +256,7 @@ def connected_components_star(
     (:func:`_release_local_checkpoint`), so live storage stays ~2
     edge-sized block sets regardless of round count; nothing leaks
     into the session (the same self-releasing discipline as the other
-    iterative ops here).
+    iterative ops here), and it writes no session conf.
     """
     half = edges.select(F.col(src).alias("a"), F.col(dst).alias("b")).where(
         F.col(src) != F.col(dst)
@@ -335,48 +340,27 @@ def connected_components_star(
             .localCheckpoint(eager=False)
         )
 
-    # Size-first AQE coalescing for the loop's jobs (r11, guide §2.2):
-    # with parallelismFirst (the Spark default) every per-round
-    # exchange fans a megabyte-scale contracted edge relation out to
-    # defaultParallelism micro-partitions — dozens of ~50 KB tasks per
-    # stage, 5 stages per alternation, launch overhead dominating.
-    # Respecting the advisory size instead is the documented
-    # production recommendation and is scale-neutral (big rounds
-    # coalesce to many advisory-sized partitions; only genuinely small
-    # rounds — late contractions — collapse, which is right at any
-    # scale).  Scoped to the loop with restore: the co-partitioned
-    # persisted-edge loops elsewhere (label prop, BFS, k-core) measure
-    # SLOWER under size-first coalescing (their cached 32-partition
-    # edge side then joins a 1-partition label side), so this is not a
-    # session-wide default.
-    spark = edges.sparkSession
-    _PF = "spark.sql.adaptive.coalescePartitions.parallelismFirst"
-    pf_before = spark.conf.get(_PF, "true")
-    spark.conf.set(_PF, "false")
-    try:
-        for _ in range(max_iterations):
-            e_new = star(star(e, large=True), large=False)
-            fp = fingerprint(e_new)
-            if fp == prev and e_new.exceptAll(e).limit(1).count() == 0:
-                # fingerprint match is necessary, the exceptAll probe
-                # makes it sufficient — run once, at the (apparent)
-                # fixed point
-                _release_local_checkpoint(e)
-                e = e_new
-                break
-            # the probe (when it ran) was this round's last read of the
-            # superseded e; only e_new's blocks stay live
+    for _ in range(max_iterations):
+        e_new = star(star(e, large=True), large=False)
+        fp = fingerprint(e_new)
+        if fp == prev and e_new.exceptAll(e).limit(1).count() == 0:
+            # fingerprint match is necessary, the exceptAll probe
+            # makes it sufficient — run once, at the (apparent)
+            # fixed point
             _release_local_checkpoint(e)
-            e, prev = e_new, fp
-        else:
-            raise RuntimeError(
-                f"connected_components_star did not converge in "
-                f"{max_iterations} alternations; star contraction needs "
-                "O(log^2 n) — check for id overflow or raise "
-                "max_iterations"
-            )
-    finally:
-        spark.conf.set(_PF, pf_before)
+            e = e_new
+            break
+        # the probe (when it ran) was this round's last read of the
+        # superseded e; only e_new's blocks stay live
+        _release_local_checkpoint(e)
+        e, prev = e_new, fp
+    else:
+        raise RuntimeError(
+            f"connected_components_star did not converge in "
+            f"{max_iterations} alternations; star contraction needs "
+            "O(log^2 n) — check for id overflow or raise "
+            "max_iterations"
+        )
 
     # fixed point: (root, leaf) stars.  Every vertex resolves through
     # the leaf->root map; roots (and any vertex whose edges contracted

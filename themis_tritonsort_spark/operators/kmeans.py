@@ -161,7 +161,9 @@ def lloyd(
     """
     dim = len(initial_centers[0])
     centers = [list(map(float, c)) for c in initial_centers]
-    vecs = df.select(vec_col)
+    # Projected under an internal alias: selecting a nested ``s.v``
+    # directly would surface it as a top-level ``v``.
+    vecs = df.select(F.col(vec_col).alias("__v"))
     cached = persist_input and iterations > 0
     if cached:
         from pyspark import StorageLevel
@@ -172,17 +174,16 @@ def lloyd(
     # client time; `array(avg(v[0]), ..)` is the same 64 independent
     # avg aggregates (identical partial/final arithmetic), only
     # projected into an array after aggregation.
-    vec = sql_column(vec_col)
     means_sql = (
         "array("
         + ",".join(
-            f"avg(CAST({vec} AS ARRAY<DOUBLE>)[{i}])" for i in range(dim)
+            f"avg(CAST(__v AS ARRAY<DOUBLE>)[{i}])" for i in range(dim)
         )
         + ") AS __ms"
     )
     try:
         for _ in range(iterations):
-            assigned = assign_clusters(vecs, vec_col, centers)
+            assigned = assign_clusters(vecs, "__v", centers)
             means = (
                 assigned.groupBy("cluster")
                 .agg(F.expr(means_sql))

@@ -16,11 +16,12 @@ Note: no damping factor and no normalization — plain power iteration.
 
 Spark-first formulation: the "reduce that merges rank tuples with the
 structural tuple" is a sum-aggregate joined full-outer with the vertex
-table (SURVEY §2.7 R8).  Adjacency stays a static, partitioned edge
-relation; only the small (vid, rank) relation iterates, exactly like
-the classic Spark PageRank, so each iteration is one shuffle on vid.
-At scale: pre-partition edges by src once and checkpoint them so every
-iteration's join co-locates without re-shuffling the big side.
+table (SURVEY §2.7 R8).  Adjacency stays a static edge relation; only
+the small (vid, rank) relation iterates, exactly like the classic
+Spark PageRank, so each iteration is one shuffle on vid.  The deduped
+edge relation is computed once (a lazy local checkpoint) and read by
+every iteration.  Under AQE the checkpoint reports no partitioning, so
+each iteration's join exchanges or broadcasts it again.
 """
 
 from __future__ import annotations
@@ -43,17 +44,15 @@ def pagerank(
     destinations without structure get created by the dangling rule on
     the first iteration, after which the vertex set is stable.
     """
-    spark = edges.sparkSession
-    e = edges.select(F.col(src).alias("src"), F.col(dst).alias("dst")).distinct()
-    # Static side of every iteration's join: pre-shuffle once on src and
-    # keep it materialized (cluster: bucketed table / co-partitioned).
-    # Partition count is size-derived (r12, guide §2.2) with the old
-    # static defaultParallelism as the cap — see
-    # components.sized_edge_npart for the estimate discipline.
-    from .components import sized_edge_npart
-
-    npart = sized_edge_npart(e, cap=spark.sparkContext.defaultParallelism)
-    e = e.repartition(npart, "src").localCheckpoint(eager=False)
+    # Static side of every iteration's join, computed once.  Under AQE
+    # the checkpoint reports no partitioning, so a hash repartition
+    # before it would be lost: each iteration's join shuffles (or
+    # broadcasts) this side either way.
+    e = (
+        edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
+        .distinct()
+        .localCheckpoint(eager=False)
+    )
 
     deg = e.groupBy("src").agg(F.count(F.lit(1)).alias("deg"))
 

@@ -902,18 +902,6 @@ def pq_codebook(
     ]
 
 
-def _pq_sub_l2(subv: Column, w: list[float]) -> Column:
-    """Sequential-fold squared L2 between a sliced sub-vector column
-    and a python codeword (same arithmetic order as assign_clusters'
-    literal-path distance fold)."""
-    code = F.array(*[F.lit(float(x)) for x in w])
-    return F.aggregate(
-        F.zip_with(subv, code, lambda x, y: (x - y) * (x - y)),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-
-
 def pq_encode(
     df: DataFrame, id_col: str, vec_col: str, codebook: list[list[list[float]]]
 ) -> DataFrame:

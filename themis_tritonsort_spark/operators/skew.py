@@ -4,13 +4,13 @@ The reference fights skew with sampled range boundaries (phase 0) and
 the combiner's in-map aggregation (AggregatingHashCounter.h:285-368).
 Spark gives us AQE skew-join splitting and partial aggregation for
 free; what AQE does NOT fix is a single hot GROUP BY key whose partial
-aggregates are still huge, or a hot join key on the *streamed* side.
-These helpers implement the standard salting patterns for those cases.
+aggregates are still huge.  This helper implements the standard salting
+pattern for that case.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
@@ -32,30 +32,3 @@ def salted_count(
         .agg(F.count(F.lit(1)).alias("__c"))
     )
     return partial.groupBy(*key_cols).agg(F.sum("__c").cast("long").alias(count_col))
-
-
-def salted_broadcast_join(
-    big: DataFrame,
-    hot_small: DataFrame,
-    key: str,
-    salt_buckets: int = 16,
-) -> DataFrame:
-    """Replicated-salt join: explode the SMALL side ``salt_buckets``
-    times, salt the big side randomly-but-deterministically by row, join
-    on (key, salt).  Spreads a hot join key across reducers when the
-    small side can't be broadcast wholesale and AQE's split isn't
-    available (e.g. pre-3.2 clusters or non-shuffle joins).
-    """
-    salts = F.broadcast(
-        hot_small.crossJoin(
-            hot_small.sparkSession.range(salt_buckets).select(
-                F.col("id").cast("int").alias("__salt")
-            )
-        )
-    )
-    big_salted = big.withColumn(
-        "__salt", (F.xxhash64(F.monotonically_increasing_id()) % salt_buckets)
-        .cast("int")
-    ).withColumn("__salt", F.abs("__salt"))
-    out = big_salted.join(salts, [key, "__salt"]).drop("__salt")
-    return out

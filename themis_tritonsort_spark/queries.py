@@ -306,6 +306,17 @@ FROM scan WHERE f_ts IS NOT NULL
 # tiebreak makes lag deterministic and identical in both engines).
 # One hash shuffle on l_orderkey; the former self-join formulation
 # shuffled the table twice and cross-multiplied duplicate linenumbers.
+# The SQL twin of _lineitem_edges: each lineitem's part is linked from
+# the previous line's part of the same order.  Oracles splice it after
+# SELECT or SELECT DISTINCT.
+_LINEITEM_EDGES_SQL = """src, l_partkey AS dst FROM (
+    SELECT l_partkey,
+           lag(l_partkey) OVER (PARTITION BY l_orderkey
+                                ORDER BY l_linenumber, l_partkey) AS src
+    FROM lineitem
+  ) WHERE src IS NOT NULL AND src <> l_partkey"""
+
+
 def _lineitem_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window
 
@@ -332,14 +343,9 @@ def q07_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     return ranks.select("vid", F.round(F.col("rank") * 1e6).cast("long").alias("rank_ppm"))
 
 
-_Q07_SQL = """
+_Q07_SQL = f"""
 WITH edges AS (
-  SELECT DISTINCT src, l_partkey AS dst FROM (
-    SELECT l_partkey,
-           lag(l_partkey) OVER (PARTITION BY l_orderkey
-                                ORDER BY l_linenumber, l_partkey) AS src
-    FROM lineitem
-  ) WHERE src IS NOT NULL AND src <> l_partkey
+  SELECT DISTINCT {_LINEITEM_EDGES_SQL}
 ),
 deg AS (SELECT src, count(*) AS d FROM edges GROUP BY src),
 r0 AS (SELECT src AS vid, 1.0 AS r FROM deg),
@@ -2287,14 +2293,9 @@ def q68_triangle_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     return triangle_counts(_lineitem_edges(spark, sf_dir))
 
 
-_Q68_SQL = """
+_Q68_SQL = f"""
 WITH raw AS (
-  SELECT src, l_partkey AS dst FROM (
-    SELECT l_partkey,
-           lag(l_partkey) OVER (PARTITION BY l_orderkey
-                                ORDER BY l_linenumber, l_partkey) AS src
-    FROM lineitem
-  ) WHERE src IS NOT NULL AND src <> l_partkey
+  SELECT {_LINEITEM_EDGES_SQL}
 ),
 edges AS (
   SELECT DISTINCT least(src, dst) AS a, greatest(src, dst) AS b FROM raw
@@ -2529,14 +2530,9 @@ def q74_triangle_total(spark: SparkSession, sf_dir: str) -> DataFrame:
     return triangle_total_degree_oriented(_lineitem_edges(spark, sf_dir))
 
 
-_Q74_SQL = """
+_Q74_SQL = f"""
 WITH raw AS (
-  SELECT src, l_partkey AS dst FROM (
-    SELECT l_partkey,
-           lag(l_partkey) OVER (PARTITION BY l_orderkey
-                                ORDER BY l_linenumber, l_partkey) AS src
-    FROM lineitem
-  ) WHERE src IS NOT NULL AND src <> l_partkey
+  SELECT {_LINEITEM_EDGES_SQL}
 ),
 edges AS (
   SELECT DISTINCT least(src, dst) AS a, greatest(src, dst) AS b FROM raw
@@ -3218,14 +3214,9 @@ def q86_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _kcore_oracle_sql(k: int, rounds: int) -> str:
     parts = [
-        """
+        f"""
 WITH raw AS (
-  SELECT DISTINCT src, l_partkey AS dst FROM (
-    SELECT l_partkey,
-           lag(l_partkey) OVER (PARTITION BY l_orderkey
-                                ORDER BY l_linenumber, l_partkey) AS src
-    FROM lineitem
-  ) WHERE src IS NOT NULL AND src <> l_partkey
+  SELECT DISTINCT {_LINEITEM_EDGES_SQL}
 ),
 e0 AS MATERIALIZED (
   SELECT src AS s, dst AS d FROM raw
@@ -3595,14 +3586,9 @@ def q93_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _lp_oracle_sql(rounds: int) -> str:
     parts = [
-        """
+        f"""
 WITH raw AS (
-  SELECT DISTINCT src, l_partkey AS dst FROM (
-    SELECT l_partkey,
-           lag(l_partkey) OVER (PARTITION BY l_orderkey
-                                ORDER BY l_linenumber, l_partkey) AS src
-    FROM lineitem
-  ) WHERE src IS NOT NULL AND src <> l_partkey
+  SELECT DISTINCT {_LINEITEM_EDGES_SQL}
 ),
 e0 AS MATERIALIZED (
   SELECT src AS s, dst AS d FROM raw
@@ -4141,12 +4127,7 @@ def _bfs_oracle_sql(rounds: int, seed_mod: int) -> str:
     parts = [
         f"""
 WITH raw AS (
-  SELECT DISTINCT src, l_partkey AS dst FROM (
-    SELECT l_partkey,
-           lag(l_partkey) OVER (PARTITION BY l_orderkey
-                                ORDER BY l_linenumber, l_partkey) AS src
-    FROM lineitem
-  ) WHERE src IS NOT NULL AND src <> l_partkey
+  SELECT DISTINCT {_LINEITEM_EDGES_SQL}
 ),
 e0 AS MATERIALIZED (
   SELECT src AS s, dst AS d FROM raw
@@ -4640,14 +4621,9 @@ def q112_clustering_coeff(spark: SparkSession, sf_dir: str) -> DataFrame:
     return local_clustering_coefficient(_lineitem_edges(spark, sf_dir))
 
 
-_Q112_SQL = """
+_Q112_SQL = f"""
 WITH raw AS (
-  SELECT src, l_partkey AS dst FROM (
-    SELECT l_partkey,
-           lag(l_partkey) OVER (PARTITION BY l_orderkey
-                                ORDER BY l_linenumber, l_partkey) AS src
-    FROM lineitem
-  ) WHERE src IS NOT NULL AND src <> l_partkey
+  SELECT {_LINEITEM_EDGES_SQL}
 ),
 e AS MATERIALIZED (
   SELECT DISTINCT least(src, dst) AS a, greatest(src, dst) AS b
@@ -6326,14 +6302,9 @@ def q143_approx_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
     return triangle_total_doulion(_lineitem_edges(spark, sf_dir), p_ppm=250_000)
 
 
-_Q143_SQL = """
+_Q143_SQL = f"""
 WITH raw AS (
-  SELECT src, l_partkey AS dst FROM (
-    SELECT l_partkey,
-           lag(l_partkey) OVER (PARTITION BY l_orderkey
-                                ORDER BY l_linenumber, l_partkey) AS src
-    FROM lineitem
-  ) WHERE src IS NOT NULL AND src <> l_partkey
+  SELECT {_LINEITEM_EDGES_SQL}
 ),
 edges AS (
   SELECT DISTINCT least(src, dst) AS a, greatest(src, dst) AS b FROM raw

@@ -193,38 +193,38 @@ def token_budget_replay(
         )
         cap = int(spark.conf.get("spark.sql.shuffle.partitions"))
         n_state = max(1, min(cap, -(-staged_bytes // advisory)))
-        prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-        spark.conf.set("spark.sql.shuffle.partitions", str(n_state))
-        try:
-            stream = (
-                spark.readStream.schema("group string, id long, n long")
-                .option("maxFilesPerTrigger", 1)
-                .parquet(src)
+        # The replay runs on its own session, so the state-store count
+        # is set there and the caller's conf is never written.  Sessions
+        # share the SparkContext, and the staged input is read by path.
+        replay = spark.newSession()
+        replay.conf.set("spark.sql.shuffle.partitions", str(n_state))
+        stream = (
+            replay.readStream.schema("group string, id long, n long")
+            .option("maxFilesPerTrigger", 1)
+            .parquet(src)
+        )
+        out = token_budget_stream(
+            stream, "id", None, "group", budget_tokens, n_col="n"
+        )
+        q = (
+            out.writeStream.format("memory")
+            .queryName(name)
+            .outputMode("append")
+            .trigger(availableNow=True)
+            .start()
+        )
+        finished = q.awaitTermination(300)
+        q.stop()
+        if not finished:
+            replay.catalog.dropTempView(name)
+            raise TimeoutError(
+                f"token budget replay {name} did not finish in 300 s"
             )
-            out = token_budget_stream(
-                stream, "id", None, "group", budget_tokens, n_col="n"
-            )
-            q = (
-                out.writeStream.format("memory")
-                .queryName(name)
-                .outputMode("append")
-                .trigger(availableNow=True)
-                .start()
-            )
-            finished = q.awaitTermination(300)
-            q.stop()
-            if not finished:
-                spark.catalog.dropTempView(name)
-                raise TimeoutError(
-                    f"token budget replay {name} did not finish in 300 s"
-                )
-        finally:
-            spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
     finally:
         shutil.rmtree(root, ignore_errors=True)
     # The frame keeps the sink's rows after its view is dropped.
-    out = spark.table(name)
-    spark.catalog.dropTempView(name)
+    out = replay.table(name)
+    replay.catalog.dropTempView(name)
     return out
 
 

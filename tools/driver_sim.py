@@ -12,6 +12,7 @@ Usage: python tools/driver_sim.py [sf_dir]   (default /root/testdata/sf0.01)
 
 from __future__ import annotations
 
+import math
 import os
 import sys
 import time
@@ -28,13 +29,16 @@ WINDOW = 50  # the round driver gates the first 50 queries() entries
 
 def staleness_report(query_names: list[str]) -> list[str]:
     """Per-entry driver-gate freshness from the gate history
-    (``__spark_entry__.newest_passes``): every catalog entry should get
-    a driver row at least every other round.  Returns the warning lines
-    so tests can pin the contract."""
+    (``__spark_entry__.newest_passes``): the window rotates through the
+    catalog in ``ceil(len(query_names) / WINDOW)`` rounds, so an entry
+    outside this round's window is stale once its newest driver row is
+    that many rounds old.  Returns the warning lines so tests can pin
+    the contract."""
     newest = entrymod.newest_passes()
     if not newest:
         return []
     current = max(newest.values()) + 1  # the round in progress
+    period = math.ceil(len(query_names) / WINDOW)
     warnings = []
     for name in query_names[WINDOW:]:  # the window is gated this round
         eff = newest.get(name)
@@ -43,7 +47,7 @@ def staleness_report(query_names: list[str]) -> list[str]:
                 f"STALE {name}: never driver-gated and not in this "
                 f"round's window"
             )
-        elif current - eff >= 2:
+        elif current - eff >= period:
             warnings.append(
                 f"STALE {name}: newest driver row r{eff:02d} is "
                 f"{current - eff} rounds old"
@@ -83,7 +87,10 @@ def main() -> int:
     if warnings:
         print(f"{len(warnings)} entries lack a fresh driver row")
     else:
-        print("driver-gate freshness: every entry current within 2 rounds")
+        print(
+            "driver-gate freshness: every entry current within one "
+            "window rotation"
+        )
     return 1 if failures else 0
 
 
