@@ -552,6 +552,97 @@ def test_graph_ops_cache_ownership(spark, monkeypatch):
         assert cache_empty()
 
 
+def test_persist_only_in_the_loop_helper():
+    """One owner for caches: ``.persist(`` appears in the package only
+    inside ``operators/loop.py``, whose ``persisted`` context manager
+    releases on every exit path.  Any other call site could leak."""
+    import re
+    from pathlib import Path
+
+    import themis_tritonsort_spark
+
+    root = Path(themis_tritonsort_spark.__file__).parent
+    sites = {
+        f"{path.relative_to(root)}:{n}"
+        for path in sorted(root.rglob("*.py"))
+        for n, line in enumerate(path.read_text().splitlines(), 1)
+        if re.search(r"\.persist\(", line)
+    }
+    assert sites and all(s.startswith("operators/loop.py:") for s in sites), (
+        sorted(sites)
+    )
+
+
+def test_until_converged_raises_only_when_rounds_run_out():
+    from themis_tritonsort_spark.operators.loop import until_converged
+
+    def first_at_least(limit, max_rounds):
+        for r in until_converged("probe", max_rounds):
+            if r >= limit:
+                return r
+
+    assert first_at_least(2, 5) == 2
+    seen = []
+    for r in until_converged("probe", 3):
+        seen.append(r)
+        if r == 2:
+            break
+    assert seen == [0, 1, 2]
+    with pytest.raises(RuntimeError, match="probe did not converge in 3 rounds"):
+        first_at_least(3, 3)
+    with pytest.raises(RuntimeError, match="probe did not converge in 0 rounds"):
+        list(until_converged("probe", 0))
+
+
+def test_star_cc_and_kcore_raise_when_out_of_rounds(spark):
+    """Both operators must raise, not return a partial answer, when
+    max_iterations is too small — and leave no cache behind."""
+    from themis_tritonsort_spark.operators.components import (
+        connected_components_star,
+        kcore_vertices,
+    )
+
+    def cache_empty():
+        return spark._jsparkSession.sharedState().cacheManager().isEmpty()
+
+    chain = spark.createDataFrame(
+        [(i, i + 1) for i in range(300)], ["src", "dst"]
+    )
+    with pytest.raises(
+        RuntimeError, match="connected_components_star did not converge in 1"
+    ):
+        connected_components_star(chain, max_iterations=1)
+    assert cache_empty()
+
+    # the cascade graph of test_kcore_peel_cascade_and_compaction: its
+    # pendant path peels one vertex per round
+    cycle = [(i, i + 1) for i in range(1, 6)] + [(6, 1)]
+    path = [(6, 100)] + [(100 + i, 101 + i) for i in range(12)]
+    edges = spark.createDataFrame(cycle + path, ["src", "dst"])
+    with pytest.raises(RuntimeError, match="kcore_vertices did not converge in 2"):
+        kcore_vertices(edges, k=2, max_iterations=2)
+    assert cache_empty()
+
+
+def test_kcenter_select_releases_its_cache_when_the_loop_raises(
+    spark, monkeypatch
+):
+    from themis_tritonsort_spark.operators import kmeans
+    from themis_tritonsort_spark.operators.similarity import kcenter_select
+
+    def boom(x):
+        raise ValueError("injected")
+
+    monkeypatch.setattr(kmeans, "sql_double", boom)
+    df = spark.createDataFrame(
+        [(1, [0.0, 1.0]), (2, [1.0, 0.0]), (3, [1.0, 1.0])],
+        "vec_id long, embedding array<double>",
+    )
+    with pytest.raises(ValueError, match="injected"):
+        kcenter_select(df, id_col="vec_id", vec_col="embedding", k=3)
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
+
+
 def test_triangle_total_doulion(spark):
     """DOULION sparsified triangle count: p=1 degenerates to the exact
     count; p<1 counts triangles on the md5-deterministic subgraph and

@@ -1094,6 +1094,35 @@ def test_token_budget_replay_drops_its_sink_view(spark, monkeypatch):
     assert replay_views() == []
 
 
+def test_token_budget_replay_returns_rows_in_the_callers_session(
+    spark, monkeypatch
+):
+    """The replay runs on its own session, but the frame it returns
+    must belong to the caller's: a join or aggregate built on it then
+    runs with the caller's shuffle partition count, not the replay
+    session's state-store count."""
+    from themis_tritonsort_spark.streaming.budget import token_budget_replay
+
+    sessions = _spy_new_sessions(monkeypatch)
+    docs = spark.createDataFrame(
+        [(i, "w w w", "g0") for i in range(8)],
+        "doc_id long, text string, source string",
+    )
+    out = token_budget_replay(
+        spark, docs, "doc_id", "text", "source", 100, n_batches=2
+    )
+    assert len(sessions) == 1
+    assert out.sparkSession is spark
+    assert out.sparkSession.conf.get(
+        "spark.sql.shuffle.partitions"
+    ) == spark.conf.get("spark.sql.shuffle.partitions")
+    assert sessions[0].conf.get("spark.sql.shuffle.partitions") != (
+        spark.conf.get("spark.sql.shuffle.partitions")
+    )
+    got = sorted((r["id"], r["cum_tokens"]) for r in out.collect())
+    assert got == [(i, 3 * (i + 1)) for i in range(8)]
+
+
 def test_token_budget_replay_timeout_raises(spark, monkeypatch):
     """A replay that does not finish in time must raise, not return the
     partial memory table it has so far."""

@@ -28,11 +28,13 @@ per-round cost.
 
 from __future__ import annotations
 
+from contextlib import ExitStack
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.storagelevel import StorageLevel
 
 from ..functions.exact import md5_60
+from .loop import persisted, until_converged
 
 
 def sized_edge_npart(
@@ -119,40 +121,33 @@ def connected_components(
     Converges early when a round changes no label (checked against a
     driver-side count of changed labels — a scalar, not data).
 
-    Cache lifecycle: the both-orientations edge set is persisted for
-    the duration of the loop and unpersisted on exit — safe because
-    every round's convergence count materializes that round's
-    localCheckpoint, so the returned labels read checkpoint blocks,
-    not the edge lineage.  Nothing stays cached after the call.
+    Cache lifecycle: the both-orientations edge set is held by
+    :func:`~.loop.persisted` for the loop only; every round's count
+    materializes its checkpoint, so the result never reads it.
     """
     # Undirected: materialize BOTH orientations once, partitioned by the
     # propagation source — each round is then ONE join (src side
     # co-located with the persisted partitioning) instead of two.
-    e = _undirected_edges(edges, src, dst).persist(
-        StorageLevel.MEMORY_AND_DISK
-    )
-
-    labels = e.select(F.col("s").alias("vid")).distinct().withColumn(
-        "label", F.col("vid")
-    )
-    # Frontier (delta) propagation — r11, guide §2.2 (shuffle fewer
-    # bytes): only vertices whose label CHANGED last round need to
-    # offer this round.  Labels are min-monotone, so an offer from an
-    # unchanged u is always dominated: by induction every neighbor v
-    # already satisfies label(v) <= u's previous (= current) label from
-    # the round u last offered.  Per-round labels are therefore
-    # BIT-IDENTICAL to the all-offers form (the omitted terms never win
-    # the min), and so are the round count and the convergence path —
-    # but late rounds join |delta|-many probe rows against the edge set
-    # instead of |V| (near-clique dedup graphs converge exponentially:
-    # measured changed-counts 2337/2301/1777/293/15/1/0, so rounds 4+
-    # shuffled edge-sized offers for an almost-empty frontier).  Round
-    # 1 offers from every vertex, as before.
-    active = labels
-
-    changed = -1
-    try:
-        for _ in range(max_iterations):
+    with persisted(_undirected_edges(edges, src, dst)) as e:
+        labels = e.select(F.col("s").alias("vid")).distinct().withColumn(
+            "label", F.col("vid")
+        )
+        # Frontier (delta) propagation — r11, guide §2.2 (shuffle fewer
+        # bytes): only vertices whose label CHANGED last round need to
+        # offer this round.  Labels are min-monotone, so an offer from an
+        # unchanged u is always dominated: by induction every neighbor v
+        # already satisfies label(v) <= u's previous (= current) label
+        # from the round u last offered.  Per-round labels are therefore
+        # BIT-IDENTICAL to the all-offers form (the omitted terms never
+        # win the min), and so are the round count and the convergence
+        # path — but late rounds join |delta|-many probe rows against the
+        # edge set instead of |V| (near-clique dedup graphs converge
+        # exponentially: measured changed-counts 2337/2301/1777/293/15/
+        # 1/0, so rounds 4+ shuffled edge-sized offers for an
+        # almost-empty frontier).  Round 1 offers from every vertex, as
+        # before.
+        active = labels
+        for _ in until_converged("connected_components", max_iterations):
             # Each active vertex offers its label to its neighbors; every
             # vertex keeps its own.  The keep row carries the previous
             # label in `old`, so after the min-groupBy the convergence
@@ -173,27 +168,14 @@ def connected_components(
                 .localCheckpoint(eager=False)
             )
             changed_rows = merged.where(F.col("label") != F.col("old"))
-            changed = changed_rows.count()
             labels = merged.select("vid", "label")
             # next round's frontier: a filtered read of the SAME
             # checkpoint blocks labels reads — no extra materialization
             active = changed_rows.select("vid", "label")
-            if changed == 0:
+            # The count materializes this round's checkpoint, so labels
+            # no longer read the edge lineage once the edges are freed.
+            if changed_rows.count() == 0:
                 break
-        else:
-            # Silent truncation would return labels that are NOT
-            # components (a >max_iterations-diameter chain keeps
-            # non-minimal labels) — surface it instead.
-            raise RuntimeError(
-                f"connected_components did not converge in "
-                f"{max_iterations} iterations ({changed} labels still "
-                "changing); raise max_iterations (graph diameter bounds "
-                "the rounds needed)"
-            )
-    finally:
-        # The per-round count already materialized the final round's
-        # checkpoint, so labels no longer reads the edge lineage.
-        e.unpersist()
 
     return labels.select("vid", F.col("label").alias("component"))
 
@@ -340,7 +322,7 @@ def connected_components_star(
             .localCheckpoint(eager=False)
         )
 
-    for _ in range(max_iterations):
+    for _ in until_converged("connected_components_star", max_iterations):
         e_new = star(star(e, large=True), large=False)
         fp = fingerprint(e_new)
         if fp == prev and e_new.exceptAll(e).limit(1).count() == 0:
@@ -354,13 +336,6 @@ def connected_components_star(
         # superseded e; only e_new's blocks stay live
         _release_local_checkpoint(e)
         e, prev = e_new, fp
-    else:
-        raise RuntimeError(
-            f"connected_components_star did not converge in "
-            f"{max_iterations} alternations; star contraction needs "
-            "O(log^2 n) — check for id overflow or raise "
-            "max_iterations"
-        )
 
     # fixed point: (root, leaf) stars.  Every vertex resolves through
     # the leaf->root map; roots (and any vertex whose edges contracted
@@ -645,16 +620,13 @@ def kcore_vertices(
         raise ValueError(f"k must be >= 1, got {k}")
     spark = edges.sparkSession
     npart = spark.sparkContext.defaultParallelism
-    e = _undirected_edges(edges, src, dst).persist(
-        StorageLevel.MEMORY_AND_DISK
-    )
-    deg = e.groupBy("s").agg(F.count(F.lit(1)).alias("deg")).localCheckpoint(
-        eager=False
-    )
-    dropped_since_compact = 0
-
-    try:
-        for _ in range(max_iterations):
+    with ExitStack() as held:
+        e = held.enter_context(persisted(_undirected_edges(edges, src, dst)))
+        deg = e.groupBy("s").agg(F.count(F.lit(1)).alias("deg")).localCheckpoint(
+            eager=False
+        )
+        dropped_since_compact = 0
+        for _ in until_converged("kcore_vertices", max_iterations):
             # ONE driver action per round: alive + frontier size off the
             # checkpointed vertex relation (scalars, not data).  `drop`
             # itself is a re-filter of the same cached RDD — cheap, and
@@ -694,23 +666,17 @@ def kcore_vertices(
             dropped_since_compact += n_drop
             if alive and dropped_since_compact >= alive:
                 survivors = deg.select("s")
-                e_new = (
+                kept = (
                     e.join(survivors, "s", "semi")
                     .join(survivors.withColumnRenamed("s", "d"), "d", "semi")
                     .repartition(npart, "s")
-                    .persist(StorageLevel.MEMORY_AND_DISK)
                 )
+                e_new = held.enter_context(persisted(kept))
                 e_new.count()
+                # free the superseded set now, not when the stack unwinds
                 e.unpersist()
                 e = e_new
                 dropped_since_compact = 0
-        raise RuntimeError(
-            f"kcore_vertices did not converge in {max_iterations} rounds; "
-            "raise max_iterations (each round removes at least one vertex, "
-            "so rounds are bounded by the vertex count)"
-        )
-    finally:
-        e.unpersist()
 
 
 def label_propagation(
@@ -732,11 +698,15 @@ def label_propagation(
     in near-dup/link graphs stabilize in 3-5 rounds.
 
     Scale shape: the both-orientations edge set is materialized ONCE,
-    partitioned by the neighbor-reading side, and persisted; each round
-    is one co-located join (labels arrive partitioned by vid from the
-    previous round's aggregate) + one (dst, label) count + one per-dst
-    argmax, all in the same key space — two exchanges per round of
-    (vertex x avg-degree) rows, never the corpus.  The argmax is
+    partitioned by the neighbor-reading side, and persisted.  Each
+    round joins it against the previous round's labels, a lazy
+    checkpoint that reports no partitioning, so they do NOT arrive
+    partitioned by vid.  One round's final plan (lineitem edges, sf0.01
+    and sf0.1, local[4]) reads the edges from the cache with no
+    exchange, broadcasts the vertex-sized labels, and shows ONE
+    shuffle: hashpartitioning(vid) of the (vertex x avg-degree)
+    neighbor rows, on which the (vid, label) count and the per-vid
+    argmax both run — never the corpus.  The argmax is
     max(struct(cnt, -label)), a partial-aggregatable expression — no
     row_number window, so a celebrity vertex's neighbor list partial-
     aggregates map-side instead of sorting on one executor.
@@ -745,15 +715,12 @@ def label_propagation(
         raise ValueError(f"rounds must be >= 0, got {rounds}")
     spark = edges.sparkSession
     npart = spark.sparkContext.defaultParallelism
-    e = _undirected_edges(edges, src, dst).persist(
-        StorageLevel.MEMORY_AND_DISK
-    )
-    labels = (
-        e.select(F.col("s").alias("vid"))
-        .distinct()
-        .withColumn("label", F.col("vid"))
-    )
-    try:
+    with persisted(_undirected_edges(edges, src, dst)) as e:
+        labels = (
+            e.select(F.col("s").alias("vid"))
+            .distinct()
+            .withColumn("label", F.col("vid"))
+        )
         for _ in range(rounds):
             # One exchange per round: repartition the neighbor-label rows
             # by vid ONCE; HashPartitioning(vid) satisfies the clustering
@@ -774,18 +741,13 @@ def label_propagation(
                 .select("vid", (-F.col("__best.__neg")).alias("label"))
                 .localCheckpoint(eager=False)
             )
-        # The intermediate rounds checkpoint lazily (one job computes the
-        # whole chain, truncating lineage as it goes); the FINAL
-        # checkpoint is eager so the result reads vertex-sized blocks and
-        # the edge persist can be released HERE instead of leaking into
-        # the session (ADVICE r09).  The caller's action would have done
-        # this exact work anyway — the cost moves, it doesn't grow.
-        out = labels.select(
+        # The intermediate rounds checkpoint lazily; the FINAL one is
+        # eager so the result reads vertex-sized blocks, not the edges
+        # released on exit.  The caller's action would have done this
+        # exact work anyway — the cost moves, it doesn't grow.
+        return labels.select(
             F.col("vid").cast("long"), F.col("label").cast("long")
         ).localCheckpoint(eager=True)
-    finally:
-        e.unpersist()
-    return out
 
 
 def bfs_hops(
@@ -816,17 +778,14 @@ def bfs_hops(
     """
     if rounds < 0:
         raise ValueError(f"rounds must be >= 0, got {rounds}")
-    e = _undirected_edges(edges, src, dst).persist(
-        StorageLevel.MEMORY_AND_DISK
-    )
-    dist = (
-        seeds.select(F.col(seed_col).alias("vid"))
-        .distinct()
-        .withColumn("hop", F.lit(0))
-        .localCheckpoint(eager=False)
-    )
-    frontier = dist.select("vid")
-    try:
+    with persisted(_undirected_edges(edges, src, dst)) as e:
+        dist = (
+            seeds.select(F.col(seed_col).alias("vid"))
+            .distinct()
+            .withColumn("hop", F.lit(0))
+            .localCheckpoint(eager=False)
+        )
+        frontier = dist.select("vid")
         for i in range(1, rounds + 1):
             reached = (
                 e.join(frontier.withColumnRenamed("vid", "s"), "s")
@@ -840,15 +799,10 @@ def bfs_hops(
             )
             dist = dist.unionByName(fresh).localCheckpoint(eager=False)
             frontier = fresh.select("vid")
-        # Eager final checkpoint (vertex-sized) so the edge persist can
-        # be released here instead of leaking into the session — same
-        # contract as label_propagation (ADVICE r09).
-        out = dist.select(
+        # Eager final checkpoint, as in label_propagation.
+        return dist.select(
             F.col("vid").cast("long"), F.col("hop").cast("int")
         ).localCheckpoint(eager=True)
-    finally:
-        e.unpersist()
-    return out
 
 
 def local_clustering_coefficient(

@@ -15,6 +15,8 @@ avg.  Only k*dim scalars ever hit the driver.
 
 from __future__ import annotations
 
+from contextlib import nullcontext
+
 import numpy as np
 import pandas as pd
 
@@ -23,6 +25,7 @@ from pyspark.sql import functions as F
 
 from ..functions.names import sql_column
 from ..functions.vectors import as_double
+from .loop import persisted
 
 # Above this many center*dim literals the expression-tree form costs
 # more in analysis/codegen than the Arrow round-trip of the numpy form.
@@ -149,26 +152,18 @@ def lloyd(
     clusters keep their previous center (reference behavior: a center
     with no points simply gets no update appended for it).
 
-    ``persist_input`` (default True) caches a VECTOR-ONLY projection
-    of the input MEMORY_AND_DISK for the iteration loop — the
-    canonical Lloyd optimization: without it every iteration's means
-    job re-derives the corpus from source (at 100 TB, ``iterations``
-    full re-scans; only the vector column is cached, not ids or
-    payload).  Every iteration job is eager (the means collect), so
-    the projection is unpersisted before returning, and the returned
-    assignments DataFrame derives from the ORIGINAL ``df``, not the
-    cache.
+    ``persist_input`` (default True) holds a VECTOR-ONLY projection
+    of the input (:func:`~.loop.persisted`) for the iteration loop —
+    the canonical Lloyd optimization: without it every iteration's
+    means job re-derives the corpus from source.  Every iteration job
+    is eager (the means collect), so the projection is released before
+    returning; the returned assignments derive from the ORIGINAL ``df``.
     """
     dim = len(initial_centers[0])
     centers = [list(map(float, c)) for c in initial_centers]
     # Projected under an internal alias: selecting a nested ``s.v``
     # directly would surface it as a top-level ``v``.
     vecs = df.select(F.col(vec_col).alias("__v"))
-    cached = persist_input and iterations > 0
-    if cached:
-        from pyspark import StorageLevel
-
-        vecs = vecs.persist(StorageLevel.MEMORY_AND_DISK)
     # Per-dimension means as ONE expr string (r12, guide §4): the
     # 64-call `F.avg(v[i])` construction cost ~0.5 s/iteration of py4j
     # client time; `array(avg(v[0]), ..)` is the same 64 independent
@@ -181,7 +176,8 @@ def lloyd(
         )
         + ") AS __ms"
     )
-    try:
+    held = persisted(vecs) if persist_input else nullcontext(vecs)
+    with held as vecs:
         for _ in range(iterations):
             assigned = assign_clusters(vecs, "__v", centers)
             means = (
@@ -195,7 +191,4 @@ def lloyd(
                     float(x) for x in row["__ms"]
                 ]
             centers = new_centers
-    finally:
-        if cached:
-            vecs.unpersist()
     return assign_clusters(df, vec_col, centers), centers

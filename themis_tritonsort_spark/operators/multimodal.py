@@ -5,14 +5,15 @@ The DECODE step is REAL for the common formats: pure-python decoders
 for PPM (P6), BMP (24-bit uncompressed), PNG (8-bit gray/RGB/RGBA,
 all five scanline filters, via stdlib zlib), baseline JPEG (full
 T.81 sequential decode — see operators/jpeg.py) and WAV (PCM via
-stdlib wave), with PIL preferred for any image type when it is
-importable.  Video: concatenated-P6 streams AND true MJPEG
+stdlib wave); the decoders are the same in every environment, so
+the pixels behind a feature never depend on an installed library.
+Video: concatenated-P6 streams AND true MJPEG
 (concatenated baseline JPEGs, marker-exact walk) are walked and
 decoded per-frame (frame_sample).  Payloads no decoder can handle
 fall back to a deterministic hash stand-in (or raise, if ``strict``)
 — the seam is still explicit, but it only covers
-genuinely-unsupported codecs (progressive JPEG, MP3, real MP4
-containers), not the whole decode path.
+genuinely-unsupported codecs (progressive JPEG, GIF, WebP, MP3, real
+MP4 containers), not the whole decode path.
 
 Schema convention for a media table:
     id          long        -- join key back to the source row
@@ -96,8 +97,7 @@ def _fake_decode(payload: bytes) -> list[float]:
 
 # ---------------------------------------------------------------------------
 # Real decoders.  Pure-python implementations of the simple container
-# formats; PIL is preferred for images when importable (it covers
-# JPEG/GIF/WebP too).  Each returns None if the payload is not its
+# formats.  Each returns None if the payload is not its
 # format — dispatch sniffs magic bytes, never trusts media_type alone.
 # ---------------------------------------------------------------------------
 
@@ -295,7 +295,7 @@ def _decode_png(payload: bytes) -> np.ndarray | None:
     """8-bit non-interlaced PNG (gray / gray+alpha / RGB / RGBA) ->
     HxWx3 uint8.  Pure python + stdlib zlib; per-scanline filter undo
     is O(pixels) python for filters 1/3/4 — fine for the Arrow-batch
-    sizes this runs on, and PIL takes over when present."""
+    sizes this runs on."""
     sig = b"\x89PNG\r\n\x1a\n"
     if not payload.startswith(sig):
         return None
@@ -364,28 +364,12 @@ def _decode_wav(payload: bytes) -> np.ndarray | None:
     return x
 
 
-def _pil_decode(payload: bytes) -> np.ndarray | None:
-    """PIL path: any format PIL recognizes -> HxWx3 uint8."""
-    try:
-        import PIL.Image
-    except Exception:
-        return None
-    try:  # pragma: no cover - PIL absent in this container
-        with PIL.Image.open(io.BytesIO(payload)) as im:
-            return np.asarray(im.convert("RGB"))
-    except Exception:  # pragma: no cover
-        return None
-
-
 def decode_image(payload: bytes) -> np.ndarray | None:
     """Decode an image payload to HxWx3 uint8, or None if no available
-    decoder handles it.  PIL first (fastest when installed), then the
-    pure-python PNG/BMP/PPM/baseline-JPEG decoders by magic bytes."""
+    decoder handles it: the pure-python PNG/BMP/PPM/baseline-JPEG
+    decoders, chosen by magic bytes."""
     from .jpeg import decode_jpeg
 
-    arr = _pil_decode(payload)
-    if arr is not None:
-        return arr
     for dec in (_decode_png, _decode_bmp, _decode_ppm, decode_jpeg):
         arr = dec(payload)
         if arr is not None:
@@ -448,8 +432,7 @@ def _audio_features(samples: np.ndarray) -> list[float]:
 def decode_media(payload: bytes, media_type: str, strict: bool = False) -> list[float]:
     """Decode a payload to a FEATURE_DIM feature vector.
 
-    Images (any format an available decoder handles — PIL when
-    installed, pure-python PPM/BMP/PNG always): 4x4 block-mean
+    Images (PPM/BMP/PNG/baseline JPEG): 4x4 block-mean
     brightness.  PCM WAV audio: windowed RMS energy.  Anything else —
     or a payload that fails to decode — falls back to the
     deterministic hash stand-in, or raises when ``strict``."""

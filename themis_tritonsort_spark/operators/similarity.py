@@ -23,6 +23,29 @@ from pyspark.sql import functions as F
 
 from ..functions.vectors import as_double, icos_ppm, idot, micro_quantize
 from .kmeans import assign_clusters
+from .loop import persisted
+
+
+def _top_k(
+    candidates: DataFrame, score: Column, k: int, *extra: Column
+) -> DataFrame:
+    """The *_topk tail: rank each query's candidates 1..k by descending
+    ``score`` (kept as ``__cos``), ties by ascending neighbor id, and
+    return (query_id, neighbor_id, rank, *extra)."""
+    w = Window.partitionBy("query_id").orderBy(
+        F.col("__cos").desc(), F.col("neighbor_id").asc()
+    )
+    return (
+        candidates.withColumn("__cos", score)
+        .withColumn("rank", F.row_number().over(w))
+        .where(F.col("rank") <= k)
+        .select(
+            "query_id",
+            "neighbor_id",
+            F.col("rank").cast("long").alias("rank"),
+            *extra,
+        )
+    )
 
 
 def brute_force_topk(
@@ -60,17 +83,10 @@ def brute_force_topk(
         F.broadcast(q)
     )
     joined = joined.where(F.col("neighbor_id") != F.col("query_id"))
-    scored = joined.withColumn(
-        "__cos",
+    return _top_k(
+        joined,
         icos_ppm(F.col("__q"), F.col("__n"), F.col("__qq"), F.col("__qn")),
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("__cos").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", F.col("rank").cast("long").alias("rank"))
+        k,
     )
 
 
@@ -126,22 +142,11 @@ def hard_negative_topk(
         .crossJoin(F.broadcast(q))
         .where(F.col("__clab") != F.col("__qlab"))
     )
-    scored = joined.withColumn(
-        "__cos",
+    return _top_k(
+        joined,
         icos_ppm(F.col("__q"), F.col("__n"), F.col("__qq"), F.col("__qn")),
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("__cos").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.col("rank").cast("long").alias("rank"),
-            F.col("__cos").alias("cos_ppm"),
-        )
+        k,
+        F.col("__cos").alias("cos_ppm"),
     )
 
 
@@ -180,37 +185,31 @@ def kcenter_select(
     base = df.select(
         F.col(id_col).alias("__id"), as_double(F.col(vec_col)).alias("__v")
     ).where(F.col("__v").isNotNull())
-    base = base.persist()
-    seed = base.orderBy("__id").limit(1).collect()
-    if not seed:
-        base.unpersist()
-        return df.sparkSession.createDataFrame(
-            [], schema="sel_rank long, id long, dist_micro long"
-        )
-    chosen = [(1, int(seed[0]["__id"]), 0)]
-    center = seed[0]["__v"]
-
-    cur = base.withColumn("__md", F.lit(None).cast("long"))
-    for step in range(2, k + 1):
-        c_sql = "array(" + ",".join(sql_double(x) for x in center) + ")"
-        d_new = F.expr(
-            f"CAST(round(aggregate(zip_with(CAST(`__v` AS ARRAY<DOUBLE>), "
-            f"{c_sql}, (x, y) -> (x - y) * (x - y)), CAST(0.0 AS DOUBLE), "
-            f"(acc, x) -> acc + x) * 1000000.0D, 0) AS BIGINT)"
-        )
-        cur = cur.withColumn("__md", F.least(F.coalesce("__md", d_new), d_new))
-        cur = cur.where(~F.col("__id").isin([c[1] for c in chosen[-1:]]))
-        # lineage stays k-deep (k is small); localCheckpoint if k grows
-        top = cur.orderBy(F.col("__md").desc(), F.col("__id").asc()).limit(1).collect()
-        if not top:
-            break  # fewer than k rows: the whole corpus is selected
-        chosen.append((step, int(top[0]["__id"]), int(top[0]["__md"])))
-        center = top[0]["__v"]
-    base.unpersist()
     spark = df.sparkSession
-    return spark.createDataFrame(
-        chosen, schema="sel_rank long, id long, dist_micro long"
-    )
+    schema = "sel_rank long, id long, dist_micro long"
+    with persisted(base) as base:
+        seed = base.orderBy("__id").limit(1).collect()
+        if not seed:
+            return spark.createDataFrame([], schema=schema)
+        chosen = [(1, int(seed[0]["__id"]), 0)]
+        center = seed[0]["__v"]
+        cur = base.withColumn("__md", F.lit(None).cast("long"))
+        for step in range(2, k + 1):
+            c_sql = "array(" + ",".join(sql_double(x) for x in center) + ")"
+            d_new = F.expr(
+                f"CAST(round(aggregate(zip_with(CAST(`__v` AS ARRAY<DOUBLE>), "
+                f"{c_sql}, (x, y) -> (x - y) * (x - y)), CAST(0.0 AS DOUBLE), "
+                f"(acc, x) -> acc + x) * 1000000.0D, 0) AS BIGINT)"
+            )
+            cur = cur.withColumn("__md", F.least(F.coalesce("__md", d_new), d_new))
+            cur = cur.where(~F.col("__id").isin([c[1] for c in chosen[-1:]]))
+            # lineage stays k-deep (k is small); localCheckpoint if k grows
+            top = cur.orderBy(F.col("__md").desc(), F.col("__id").asc()).limit(1).collect()
+            if not top:
+                break  # fewer than k rows: the whole corpus is selected
+            chosen.append((step, int(top[0]["__id"]), int(top[0]["__md"])))
+            center = top[0]["__v"]
+    return spark.createDataFrame(chosen, schema=schema)
 
 
 def sq8_topk(
@@ -252,18 +251,11 @@ def sq8_topk(
     joined = c.crossJoin(F.broadcast(q)).where(
         F.col("neighbor_id") != F.col("query_id")
     )
-    scored = joined.withColumn(
-        "__cos",
+    return _top_k(
+        joined,
         idot(F.col("__cq"), F.col("__qq")).cast("double")
         / (F.sqrt(F.col("__cn").cast("double")) * F.sqrt(F.col("__qn").cast("double"))),
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("__cos").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", F.col("rank").cast("long").alias("rank"))
+        k,
     )
 
 
@@ -363,17 +355,10 @@ def ivf_topk(
     joined = cells.join(F.broadcast(probed), "cell").where(
         F.col("neighbor_id") != F.col("query_id")
     )
-    scored = joined.withColumn(
-        "__cos",
+    return _top_k(
+        joined,
         icos_ppm(F.col("__q"), F.col("__n"), F.col("__qq"), F.col("__qn")),
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("__cos").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", F.col("rank").cast("long").alias("rank"))
+        k,
     )
 
 
@@ -1073,22 +1058,15 @@ def pq_codebook_refined(
     the seeded variant exists for oracle replay.  Deterministic for a
     fixed input + seed set, so recall comparisons are reproducible.
 
-    The double-cast vector column is persisted ONCE and shared by all
-    m subspace loops (m * iterations means jobs read the cache instead
-    of re-deriving the corpus from source each time); every inner job
-    is eager, so the cache is unpersisted before returning — no
-    caller-owned contract."""
-    from pyspark import StorageLevel
-
+    The double-cast vector column is held ONCE (:func:`~.loop.persisted`)
+    for all m subspace loops, whose every job is eager, so nothing
+    stays cached after the call."""
     from .kmeans import lloyd
 
     seeded = pq_codebook(df, id_col, vec_col, m, k)
     sub = len(seeded[0][0])
     refined = []
-    base = df.select(as_double(F.col(vec_col)).alias("__fv")).persist(
-        StorageLevel.MEMORY_AND_DISK
-    )
-    try:
+    with persisted(df.select(as_double(F.col(vec_col)).alias("__fv"))) as base:
         for s in range(m):
             subdf = base.select(
                 F.slice(F.col("__fv"), s * sub + 1, sub).alias("__sv")
@@ -1097,8 +1075,6 @@ def pq_codebook_refined(
                 subdf, "__sv", k, iterations, seeded[s], persist_input=False
             )
             refined.append(centers)
-    finally:
-        base.unpersist()
     return refined
 
 
@@ -1176,17 +1152,10 @@ def pq_rerank_topk(
     cand = vecs.join(F.broadcast(short), "neighbor_id").join(
         F.broadcast(qv), "query_id"
     )
-    scored = cand.withColumn(
-        "__cos",
+    return _top_k(
+        cand,
         icos_ppm(F.col("__q"), F.col("__n"), F.col("__qq"), F.col("__qn")),
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("__cos").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", F.col("rank").cast("long").alias("rank"))
+        k,
     )
 
 

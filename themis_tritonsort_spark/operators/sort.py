@@ -28,6 +28,50 @@ _CNT = "__ts_cnt"
 _OFF = "__ts_off"
 
 
+def _with_partition_offset(
+    df: DataFrame,
+    order_cols: list[str | Column],
+    local: Column,
+    total: Column,
+    out_col: str,
+    num_partitions: int | None,
+) -> DataFrame:
+    """Range-partition ``df`` by ``order_cols``, evaluate the
+    partition-local running value ``local`` (a window over ``_PID``),
+    and add to it the exclusive running sum of the per-partition
+    ``total`` over the preceding partitions: one range shuffle + one
+    broadcast join of a numPartitions-row offset table."""
+    if num_partitions is None:
+        num_partitions = df.sparkSession.sparkContext.defaultParallelism
+
+    ranged = df.repartitionByRange(num_partitions, *order_cols)
+    ranged = ranged.withColumn(_PID, F.spark_partition_id())
+    # Materialize the locally ranked relation once: the totals branch
+    # below otherwise re-executes the scan AND the range shuffle
+    # (physical-plan exchange reuse does not fire across the two
+    # branches) — one scan, one shuffle total.
+    ranked = ranged.withColumn(_RN, local).localCheckpoint(eager=False)
+
+    totals = ranked.groupBy(_PID).agg(total.alias(_CNT))
+    # numPartitions rows: a global window here is fine (it is the phase-0
+    # boundary metadata, not data).
+    offsets = totals.withColumn(
+        _OFF,
+        F.coalesce(
+            F.sum(_CNT).over(
+                Window.orderBy(_PID).rowsBetween(Window.unboundedPreceding, -1)
+            ),
+            F.lit(0),
+        ),
+    ).select(_PID, _OFF)
+
+    return (
+        ranked.join(F.broadcast(offsets), _PID)
+        .withColumn(out_col, (F.col(_OFF) + F.col(_RN)).cast("long"))
+        .drop(_PID, _RN, _OFF)
+    )
+
+
 def with_global_rank(
     df: DataFrame,
     order_cols: list[str | Column],
@@ -40,39 +84,11 @@ def with_global_rank(
     Scale: one range shuffle + one tiny broadcast join.  No global
     window, no driver collect of data rows.
     """
-    if num_partitions is None:
-        num_partitions = df.sparkSession.sparkContext.defaultParallelism
-
-    ranged = df.repartitionByRange(num_partitions, *order_cols)
-    ranged = ranged.withColumn(_PID, F.spark_partition_id())
     w = Window.partitionBy(_PID).orderBy(*order_cols)
-    # Materialize the ranked relation once: the counts branch below
-    # otherwise re-executes the scan AND the range shuffle (physical-plan
-    # exchange reuse does not fire across the two branches) — one scan,
-    # one shuffle total.
-    ranked = ranged.withColumn(_RN, F.row_number().over(w)).localCheckpoint(
-        eager=False
+    return _with_partition_offset(
+        df, order_cols, F.row_number().over(w), F.count(F.lit(1)), rank_col,
+        num_partitions,
     )
-
-    counts = ranked.groupBy(_PID).agg(F.count(F.lit(1)).alias(_CNT))
-    # numPartitions rows: a global window here is fine (it is the phase-0
-    # boundary metadata, not data).
-    offsets = counts.withColumn(
-        _OFF,
-        F.coalesce(
-            F.sum(_CNT).over(
-                Window.orderBy(_PID).rowsBetween(Window.unboundedPreceding, -1)
-            ),
-            F.lit(0),
-        ),
-    ).select(_PID, _OFF)
-
-    out = (
-        ranked.join(F.broadcast(offsets), _PID)
-        .withColumn(rank_col, (F.col(_OFF) + F.col(_RN)).cast("long"))
-        .drop(_PID, _RN, _OFF)
-    )
-    return out
 
 
 def with_global_prefix_sum(
@@ -89,35 +105,10 @@ def with_global_prefix_sum(
     offsets.  No global window, no driver data collect; the offset
     table is numPartitions rows.
     """
-    if num_partitions is None:
-        num_partitions = df.sparkSession.sparkContext.defaultParallelism
-
-    ranged = df.repartitionByRange(num_partitions, *order_cols)
-    ranged = ranged.withColumn(_PID, F.spark_partition_id())
-    w = (
-        Window.partitionBy(_PID)
-        .orderBy(*order_cols)
-        .rowsBetween(Window.unboundedPreceding, 0)
-    )
-    summed = ranged.withColumn(_RN, F.sum(value_col).over(w)).localCheckpoint(
-        eager=False
-    )
-
-    totals = summed.groupBy(_PID).agg(F.sum(value_col).alias(_CNT))
-    offsets = totals.withColumn(
-        _OFF,
-        F.coalesce(
-            F.sum(_CNT).over(
-                Window.orderBy(_PID).rowsBetween(Window.unboundedPreceding, -1)
-            ),
-            F.lit(0),
-        ),
-    ).select(_PID, _OFF)
-
-    return (
-        summed.join(F.broadcast(offsets), _PID)
-        .withColumn(out_col, (F.col(_OFF) + F.col(_RN)).cast("long"))
-        .drop(_PID, _RN, _OFF)
+    w = Window.partitionBy(_PID).orderBy(*order_cols)
+    running = F.sum(value_col).over(w.rowsBetween(Window.unboundedPreceding, 0))
+    return _with_partition_offset(
+        df, order_cols, running, F.sum(value_col), out_col, num_partitions
     )
 
 

@@ -112,14 +112,13 @@ def main(argv: list[str] | None = None) -> int:
         out.write.mode("overwrite").parquet(args.output)
         print(f"wrote {args.output}")
     else:
+        from .operators.loop import persisted
+
         # One execution for both the preview and the count (show() and
         # count() would otherwise each run the full plan).
-        out = out.persist()
-        try:
-            out.show(args.show, truncate=False)
-            print(f"{out.count()} rows")
-        finally:
-            out.unpersist()
+        with persisted(out) as held:
+            held.show(args.show, truncate=False)
+            print(f"{held.count()} rows")
     return 0
 
 

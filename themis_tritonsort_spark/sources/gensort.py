@@ -73,6 +73,10 @@ _GENSORT_XOR10 = (
     (0xC8C4C2C198949291 << 16) | 0x8CE0,
     (0x170F332E2D2B271E << 16) | 0x1D1B,
 )
+# The same ten constants as one 800-bit mask over a whole record.
+_GENSORT_XOR800 = int.from_bytes(
+    b"".join(x.to_bytes(10, "big") for x in _GENSORT_XOR10), "big"
+)
 
 # Skew_binary[129][6] from gensort.c: candidate high-order key bytes for
 # the Daytona skewed-data mode, indexed by ~log2(record_number).
@@ -160,25 +164,26 @@ def _skew_index(n: int) -> int:
 def _gensort_stream(start: int, count: int, skewed: bool = False):
     """Yield ``count`` byte-exact 100-byte gensort records starting at
     record number ``start``.  O(log start) seek + O(1) amortized LCG
-    work per record; a 10-deep sliding window of LCG values mirrors the
-    reference's rand_queue."""
+    work per record.  The reference's 10-deep rand_queue is one 800-bit
+    integer ``w`` holding the top 80 bits of the last ten LCG values
+    (oldest highest), so a record is one XOR and one ``to_bytes``."""
     a, c, mask = _GENSORT_A, _GENSORT_C, _GENSORT_MASK
-    xor10 = _GENSORT_XOR10
+    xor800, keep720, keep54 = _GENSORT_XOR800, (1 << 720) - 1, (1 << 54) - 1
     v = _lcg_skip(start)
-    win: list[int] = []
+    w = sk = 0
     for _ in range(10):
         v = (a * v + c) & mask
-        win.append(v)
+        w = (w << 80) | (v >> 48)
+        # bits 32..37 of the same ten values, for the skewed mode
+        sk = (sk << 6) | ((v >> 32) & 0x3F)
     for rec_no in range(start, start + count):
-        rec = b"".join(
-            (((win[j] >> 48) ^ xor10[j]).to_bytes(10, "big")) for j in range(10)
-        )
+        rec = (w ^ xor800).to_bytes(RECORD_LEN, "big")
         if skewed:
             # gen_skewed_rec: overlay the top skew_bits bits of the key
             # with the Skew_binary row for ~log2(rec_no); 6 bits of the
-            # first window value choose skew_bits (values > 48 -> 0).
+            # oldest window value choose skew_bits (values > 48 -> 0).
             skew = _SKEW_BYTES[_skew_index(rec_no)]
-            skew_bits = (win[0] >> 32) & 0x3F
+            skew_bits = sk >> 54
             if skew_bits > 48:
                 skew_bits = 0
             if skew_bits:
@@ -191,7 +196,9 @@ def _gensort_stream(start: int, count: int, skewed: bool = False):
                 rec = bytes(key) + rec[KEY_LEN:]
         yield rec
         v = (a * v + c) & mask
-        win = win[1:] + [v]
+        w = ((w & keep720) << 80) | (v >> 48)
+        if skewed:
+            sk = ((sk & keep54) << 6) | ((v >> 32) & 0x3F)
 
 
 def _spans(n: int, start: int, num_partitions: int) -> list[tuple[int, int]]:

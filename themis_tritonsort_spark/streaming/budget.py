@@ -134,9 +134,10 @@ def token_budget_replay(
     tuple) is genuinely exercised: admissions in batch k+1 resume from
     batch k's consumed total.
 
-    Returns a batch DataFrame (group, id, n_tokens, cum_tokens) read
-    back from the memory sink after the availableNow run terminates;
-    the sink's temp view is dropped before returning.
+    Returns a batch DataFrame (group, id, n_tokens, cum_tokens) of the
+    memory sink's rows after the availableNow run terminates, bound to
+    the caller's ``spark``; the sink's temp view is dropped before
+    returning.
     """
     # Pre-tokenize BEFORE the replay write (guide §2.3/§8: move
     # metadata, not payloads): the stream's only consumers are the
@@ -222,8 +223,10 @@ def token_budget_replay(
             )
     finally:
         shutil.rmtree(root, ignore_errors=True)
-    # The frame keeps the sink's rows after its view is dropped.
-    out = replay.table(name)
+    # The sink's rows are already on the driver; rebuilt in the caller's
+    # session, anything built on them runs under the caller's conf.
+    sink = replay.table(name)
+    out = spark.createDataFrame(sink.collect(), sink.schema)
     replay.catalog.dropTempView(name)
     return out
 
