@@ -1123,6 +1123,18 @@ def test_token_budget_replay_returns_rows_in_the_callers_session(
     assert got == [(i, 3 * (i + 1)) for i in range(8)]
 
 
+def test_q145_result_scans_no_python_rdd(spark, sf_dir):
+    """The replay's rows go back to the caller's session inside the
+    JVM: q145's result is a local relation, not a Python-backed RDD
+    whose scan would need a Python worker."""
+    from themis_tritonsort_spark.queries import q145_budget_stream_replay
+
+    qe = q145_budget_stream_replay(spark, sf_dir)._jdf.queryExecution()
+    plans = qe.optimizedPlan().toString() + qe.executedPlan().toString()
+    assert "LocalRelation" in plans
+    assert "LogicalRDD" not in plans and "ExistingRDD" not in plans
+
+
 def test_token_budget_replay_timeout_raises(spark, monkeypatch):
     """A replay that does not finish in time must raise, not return the
     partial memory table it has so far."""

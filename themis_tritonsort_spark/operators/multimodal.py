@@ -60,9 +60,12 @@ def spread_decode_input(df: DataFrame, floor: int = 16) -> DataFrame:
     splits keeps its partitioning untouched (no shuffle at all), so the
     decode parallelism scales with the data instead of being pinned at
     ``floor`` tasks.  The floor defaults to 16 because the chained
-    mapInPandas pair spawns TWO Python workers per task and cold worker
-    spawn (~0.2 s each, measured after idle reaping between bench
-    passes) dominates small inputs long before 32 partitions pay off.
+    mapInPandas pair runs TWO Python workers per task, and every Python
+    task pays a fixed preamble before its first record, in reused
+    workers too.  It was 0.12-0.26 s of worker CPU while each task
+    re-read pyspark.zip's directory (CPython 3.11, local[4]), and is
+    0.012-0.022 s with the daemon in ``pydaemon.py``.  On small inputs
+    that preamble dominates long before 32 partitions pay off.
     """
     current = df.rdd.getNumPartitions()
     target = min(floor, df.sparkSession.sparkContext.defaultParallelism)

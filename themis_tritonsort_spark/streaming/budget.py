@@ -223,10 +223,16 @@ def token_budget_replay(
             )
     finally:
         shutil.rmtree(root, ignore_errors=True)
-    # The sink's rows are already on the driver; rebuilt in the caller's
-    # session, anything built on them runs under the caller's conf.
-    sink = replay.table(name)
-    out = spark.createDataFrame(sink.collect(), sink.schema)
+    # The sink's rows are already in the driver's JVM; rebuilt there in
+    # the caller's session (a LocalRelation, no Python round trip),
+    # anything built on them runs under the caller's conf.
+    sink = replay.table(name)._jdf
+    out = DataFrame(
+        spark._jsparkSession.createDataFrame(
+            sink.collectAsList(), sink.schema()
+        ),
+        spark,
+    )
     replay.catalog.dropTempView(name)
     return out
 
