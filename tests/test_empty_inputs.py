@@ -6,7 +6,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from themis_tritonsort_spark.operators.dedup import jaccard_pairs, minhash_signature
+from themis_tritonsort_spark.operators.dedup import jaccard_pairs, minhash_band_buckets
 from themis_tritonsort_spark.operators.sessionize import sessionize
 from themis_tritonsort_spark.operators.similarity import (
     cosine_neardup_pairs,
@@ -24,7 +24,10 @@ def test_empty_inputs_yield_empty_outputs(spark):
     no_iv = spark.createDataFrame([], "user_id long, lo long, hi long")
 
     assert jaccard_pairs(no_docs, "doc_id", "text", n=1, min_jaccard=0.5).count() == 0
-    assert minhash_signature(no_docs, "doc_id", "text", n=1, num_hashes=4).count() == 0
+    assert (
+        minhash_band_buckets(no_docs, "doc_id", "text", n=1, num_hashes=4, bands=2).count()
+        == 0
+    )
     assert cosine_neardup_pairs(no_vecs, "vec_id", "embedding", 0.5).count() == 0
     assert (
         hyperplane_lsh_neardup(

@@ -573,6 +573,63 @@ def test_persist_only_in_the_loop_helper():
     )
 
 
+def _package_sites(match) -> list[str]:
+    """"path:function" of every AST node of the package's code (not its
+    strings) that ``match`` accepts, named by the outermost enclosing
+    function."""
+    import ast
+    from pathlib import Path
+
+    import themis_tritonsort_spark
+
+    root = Path(themis_tritonsort_spark.__file__).parent
+    sites = []
+
+    def walk(node, owner, where):
+        for child in ast.iter_child_nodes(node):
+            fn = owner
+            if owner is None and isinstance(
+                child, (ast.FunctionDef, ast.AsyncFunctionDef)
+            ):
+                fn = child.name
+            if match(child):
+                sites.append(f"{where}:{fn}")
+            walk(child, fn, where)
+
+    for path in sorted(root.rglob("*.py")):
+        walk(ast.parse(path.read_text()), None, str(path.relative_to(root)))
+    return sites
+
+
+def test_each_lsh_decision_exists_once():
+    """One LSH candidate path: the MinHash affine family (its 7919
+    constant), the hot-bucket cap window and the sign-LSH Arrow band
+    kernel each live in exactly one function of the package.  (The
+    oracle SQL in queries.py spells the family in strings, which this
+    AST scan does not read.)"""
+    import ast
+
+    def call(node, attr, first):
+        return (
+            isinstance(node, ast.Call)
+            and isinstance(node.func, ast.Attribute)
+            and node.func.attr == attr
+            and bool(node.args)
+            and isinstance(node.args[0], ast.Constant)
+            and node.args[0].value == first
+        )
+
+    assert set(
+        _package_sites(lambda n: isinstance(n, ast.Constant) and n.value == 7919)
+    ) == {"operators/dedup.py:_minhash"}
+    assert _package_sites(lambda n: call(n, "partitionBy", "band")) == [
+        "operators/dedup.py:cap_hot_buckets"
+    ]
+    assert _package_sites(lambda n: call(n, "pandas_udf", "array<long>")) == [
+        "operators/similarity.py:sign_band_rows"
+    ]
+
+
 def test_until_converged_raises_only_when_rounds_run_out():
     from themis_tritonsort_spark.operators.loop import until_converged
 
@@ -819,40 +876,77 @@ def test_connected_components_star_releases_checkpoint_blocks(spark):
     assert n_stored() - base <= 2
 
 
-# --- fused minhash band buckets == composed signature->bands (r11)
-def test_minhash_band_buckets_matches_composed(spark):
+# --- the MinHash family, pinned against a pure-Python reference
+def _reference_band_sigs(
+    text: str, n: int, num_hashes: int, bands: int
+) -> dict[int, str]:
+    """{band: band_sig} for one document, in plain Python: reference-F1
+    tokens, distinct word n-gram shingles, base hash md5[:15] mod
+    2^31-1, affine mins h_i(x) = ((2i+1)x + 7919i) mod (2^31-1), and
+    band digest md5("hh:mh|hh:mh|...").  No shingle: no bands."""
+    import hashlib
+    import re
+
+    from themis_tritonsort_spark.functions.text import TOKEN_SPLIT_REGEX
+
+    prime = 2147483647
+    toks = [
+        w for w in re.split(TOKEN_SPLIT_REGEX, text.replace("\\n", "\x01n")) if w
+    ]
+    shingles = {" ".join(toks[i : i + n]) for i in range(len(toks) - n + 1)}
+    xs = [
+        int(hashlib.md5(s.encode()).hexdigest()[:15], 16) % prime
+        for s in shingles
+    ]
+    if not xs:
+        return {}
+    mh = [
+        min(((2 * h + 1) * x + 7919 * h) % prime for x in xs)
+        for h in range(num_hashes)
+    ]
+    rpb = num_hashes // bands
+    return {
+        b: hashlib.md5(
+            "|".join(
+                f"{h:02d}:{mh[h]}" for h in range(b * rpb, (b + 1) * rpb)
+            ).encode()
+        ).hexdigest()
+        for b in range(bands)
+    }
+
+
+def test_minhash_band_buckets_matches_python_reference(spark):
+    """The batch aggregate and the per-row (stream) form of the MinHash
+    family both equal the pure-Python reference, band for band."""
     from themis_tritonsort_spark.operators.dedup import (
-        lsh_band_buckets,
         minhash_band_buckets,
-        minhash_signature,
+        minhash_doc_bands,
     )
 
+    texts = {
+        1: "the quick brown fox jumps over the lazy dog",
+        2: "the quick brown fox jumps over the lazy cat",
+        3: "pack my box with five dozen liquor jugs",
+        4: "",  # empty doc: no bands on any path
+        5: "the quick brown fox jumps over the lazy dog",
+        6: 'mixed."punct",/cases(x)?y;z a\\nb café',
+        7: "single",  # fewer tokens than n: no shingle, no bands
+    }
     docs = spark.createDataFrame(
-        [
-            (1, "the quick brown fox jumps over the lazy dog"),
-            (2, "the quick brown fox jumps over the lazy cat"),
-            (3, "pack my box with five dozen liquor jugs"),
-            (4, ""),  # empty doc: dropped by both paths
-            (5, "the quick brown fox jumps over the lazy dog"),
-        ],
-        "doc_id long, text string",
+        sorted(texts.items()), "doc_id long, text string"
     )
-    composed = lsh_band_buckets(
-        minhash_signature(docs, "doc_id", "text", n=2, num_hashes=8),
-        bands=4,
-        num_hashes=8,
-    )
-    fused = minhash_band_buckets(
-        docs, "doc_id", "text", n=2, num_hashes=8, bands=4
+    want = sorted(
+        (d, b, sig)
+        for d, t in texts.items()
+        for b, sig in _reference_band_sigs(t, 2, 8, 4).items()
     )
     key = lambda r: (r["doc"], r["band"], r["band_sig"])  # noqa: E731
-    assert sorted(map(key, fused.collect())) == sorted(
-        map(key, composed.collect())
-    )
-    # identical docs still collide in every band through the fused path
-    sigs = {
-        (r["doc"], r["band"]): r["band_sig"] for r in fused.collect()
-    }
+    for build in (minhash_band_buckets, minhash_doc_bands):
+        got = build(docs, "doc_id", "text", n=2, num_hashes=8, bands=4)
+        assert sorted(map(key, got.collect())) == want, build.__name__
+    # identical docs collide in every band
+    sigs = {(d, b): sig for d, b, sig in want}
+    assert len(want) == 5 * 4
     assert all(sigs[(1, b)] == sigs[(5, b)] for b in range(4))
 
 

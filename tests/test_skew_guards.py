@@ -13,9 +13,8 @@ from pyspark.sql import functions as F
 
 from themis_tritonsort_spark.operators.dedup import (
     jaccard_pairs,
-    lsh_band_buckets,
     lsh_candidate_pairs,
-    minhash_signature,
+    minhash_band_buckets,
 )
 
 N_HOT = 20  # 10% of the corpus is one identical hot document
@@ -37,8 +36,9 @@ def _skewed_docs(spark):
 
 def test_hot_band_bucket_cap_bounds_candidates(spark):
     docs = _skewed_docs(spark)
-    sig = minhash_signature(docs, "doc_id", "text", n=2, num_hashes=8)
-    buckets = lsh_band_buckets(sig, bands=4, num_hashes=8)
+    buckets = minhash_band_buckets(
+        docs, "doc_id", "text", n=2, num_hashes=8, bands=4
+    )
 
     uncapped = lsh_candidate_pairs(buckets).count()
     capped_df = lsh_candidate_pairs(buckets, max_bucket=10)
@@ -62,8 +62,9 @@ def test_hot_bucket_cap_keeps_normal_buckets(spark):
     rows.append((1000, "a genuinely duplicated document body here"))
     rows.append((1001, "a genuinely duplicated document body here"))
     docs = spark.createDataFrame(rows, "doc_id long, text string")
-    sig = minhash_signature(docs, "doc_id", "text", n=2, num_hashes=8)
-    buckets = lsh_band_buckets(sig, bands=4, num_hashes=8)
+    buckets = minhash_band_buckets(
+        docs, "doc_id", "text", n=2, num_hashes=8, bands=4
+    )
     pairs = {
         (r["doc_a"], r["doc_b"])
         for r in lsh_candidate_pairs(buckets, max_bucket=10).collect()

@@ -304,6 +304,51 @@ def test_neardup_candidates_stream(spark, stream_dir):
     assert all(not (a < 1000 and b >= 2000) for a, b in pairs)
 
 
+def test_neardup_candidates_stream_matches_batch(spark, stream_dir):
+    """Dedup-on-ingest is the batch LSH candidate stage, restated: with
+    no bucket over the cap, the stream's distinct unordered pairs equal
+    lsh_candidate_pairs(minhash_band_buckets(...)) over the same corpus
+    — including that empty documents have no band keys and never pair
+    with each other."""
+    from themis_tritonsort_spark.operators.dedup import (
+        lsh_candidate_pairs,
+        minhash_band_buckets,
+    )
+    from themis_tritonsort_spark.streaming.dedup import (
+        neardup_candidates_stream,
+    )
+
+    rows = [(i, f"unique words u{i}a u{i}b u{i}c u{i}d u{i}e") for i in range(20)]
+    rows += [
+        (100, "a genuinely duplicated document body right here ok"),
+        (101, "a genuinely duplicated document body right here ok"),
+        (102, "a genuinely duplicated document body right there ok"),
+        (200, ""),
+        (201, ""),
+    ]
+    src = os.path.join(stream_dir, "neardup_src")
+    spark.createDataFrame(rows, "doc_id long, text string").coalesce(
+        1
+    ).write.mode("overwrite").parquet(src)
+    kw = dict(n=2, num_hashes=8, bands=4)
+
+    stream = spark.readStream.schema("doc_id long, text string").parquet(src)
+    _run_to_memory(
+        neardup_candidates_stream(stream, "doc_id", "text", **kw),
+        "stream_neardup_pin",
+    )
+    got = {
+        (min(r["id"], r["prior_id"]), max(r["id"], r["prior_id"]))
+        for r in spark.sql("SELECT * FROM stream_neardup_pin").collect()
+    }
+    batch = lsh_candidate_pairs(
+        minhash_band_buckets(spark.read.parquet(src), "doc_id", "text", **kw)
+    )
+    want = {(r["doc_a"], r["doc_b"]) for r in batch.collect()}
+    assert (100, 101) in want and (200, 201) not in want
+    assert got == want
+
+
 def test_bloom_decontam_stream(spark, stream_dir):
     from themis_tritonsort_spark.operators.dedup import (
         bloom_position_set,
@@ -813,78 +858,6 @@ def test_media_decode_streams_match_batch(spark, stream_dir):
         ).collect()
     }
     assert got == want and len(got) == 20 * 2  # frames 0, 2 per doc
-
-
-def test_ewma_tws_matches_v1_and_batch(spark, stream_dir):
-    """The Spark 4 transformWithStateInPandas EWMA (state-store v2,
-    RocksDB provider) emits exactly what the v1 applyInPandasWithState
-    twin and the batch operator produce — including the HALF_UP .5-tie
-    row.  Skipped where the protobuf package (pyspark's v2 state
-    protocol) is unavailable; the ImportError contract is asserted
-    instead so the gate itself stays tested."""
-    pytest.importorskip("google.protobuf")
-    from themis_tritonsort_spark.operators.temporal import ewma_halving
-    from themis_tritonsort_spark.streaming.temporal import ewma_stream_tws
-
-    src = os.path.join(stream_dir, "src")
-    rows = [
-        (1, 10, 100, 8), (1, 20, 101, 4), (1, 30, 102, 10),
-        (1, 40, 103, 3), (2, 5, 200, 7), (2, 6, 201, 7),
-    ]
-    spark.createDataFrame(
-        rows, "user_id long, ts_us long, event_id long, value_cents long"
-    ).coalesce(1).write.mode("overwrite").parquet(src)
-
-    prev = spark.conf.get(
-        "spark.sql.streaming.stateStore.providerClass", None
-    )
-    spark.conf.set(
-        "spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state."
-        "RocksDBStateStoreProvider",
-    )
-    try:
-        stream = spark.readStream.schema(
-            "user_id long, ts_us long, event_id long, value_cents long"
-        ).parquet(src)
-        _run_to_memory(ewma_stream_tws(stream), "ewma_tws", mode="append")
-        got = {
-            r["event_id"]: r["ewma_micro"]
-            for r in spark.sql("SELECT * FROM ewma_tws").collect()
-        }
-    finally:
-        if prev is None:
-            spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-        else:
-            spark.conf.set(
-                "spark.sql.streaming.stateStore.providerClass", prev
-            )
-
-    batch = ewma_halving(
-        spark.read.parquet(src), "user_id", "ts_us", "event_id", "value_cents"
-    )
-    exp = {r["event_id"]: r["ewma_micro"] for r in batch.collect()}
-    assert got == exp
-    assert exp[103] == 5_500_000  # the HALF_UP tie
-
-
-def test_ewma_tws_import_gate_without_protobuf(spark):
-    """In containers without protobuf, the v2 operator must fail FAST
-    with a message pointing at the v1 twin — not crash the streaming
-    python runner mid-query."""
-    try:
-        import google.protobuf  # noqa: F401
-
-        pytest.skip("protobuf present: the v2 path runs for real")
-    except ImportError:
-        pass
-    from themis_tritonsort_spark.streaming.temporal import ewma_stream_tws
-
-    df = spark.createDataFrame(
-        [], "user_id long, ts_us long, event_id long, value_cents long"
-    )
-    with pytest.raises(ImportError, match="ewma_stream"):
-        ewma_stream_tws(df)
 
 
 def test_compression_ratio_streams_match_batch(spark, stream_dir):

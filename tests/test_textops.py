@@ -159,26 +159,6 @@ def test_cooccurrence_pmi_hand_computed(spark):
     assert r["pmi_micronat"] == round(1_000_000 * math.log(2 * 4 / (3 * 3)))
 
 
-def test_py_tokens_mirrors_spark_tokens(spark):
-    from themis_tritonsort_spark.functions.text import py_tokens, tokens
-
-    samples = [
-        "the quick, brown fox. (jumps)/over? the; lazy \"dog\"",
-        "",
-        "....",
-        "a\\nb c\\n d",   # literal backslash-n: consumed, n kept
-        "one  two   three",
-        'mixed."punct",/cases(x)?y;z',
-    ]
-    df = spark.createDataFrame([(i, s) for i, s in enumerate(samples)], "i long, t string")
-    got = {
-        r["i"]: list(r["toks"])
-        for r in df.select("i", tokens("t").alias("toks")).collect()
-    }
-    for i, s in enumerate(samples):
-        assert got[i] == py_tokens(s), (i, s)
-
-
 def test_compression_ratio_signal(spark):
     """zlib compressibility: stdlib-reference parity per row, the
     semantic ordering (repetitive text compresses harder than

@@ -150,12 +150,12 @@ def test_zero_and_subquantization_vectors_drop_identically(spark):
 
 def test_iband_buckets_parity_with_oracle_fragment(spark):
     """q142's candidate-set contract: the Arrow int64-matmul signature
-    kernel (similarity._iband_rows) and the SQL literal fragment the
+    kernel (similarity.sign_band_rows) and the SQL literal fragment the
     oracle interpolates (queries._iband_sig_sql) must bucket every
     vector identically — THE precondition for the gated recall claim."""
     from themis_tritonsort_spark.operators.similarity import (
-        _iband_rows,
         _micro_sided,
+        sign_band_rows,
         micro_planes,
     )
     from themis_tritonsort_spark.queries import (
@@ -170,8 +170,8 @@ def test_iband_buckets_parity_with_oracle_fragment(spark):
     df = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
     sided = _micro_sided(df, "vec_id", "embedding", "vec_id")
     got = {
-        (r["vec_id"], r["band"], r["bucket"])
-        for r in _iband_rows(sided, "vec_id", planes, bands=4).collect()
+        (r["vec_id"], r["band"], r["band_sig"])
+        for r in sign_band_rows(sided, "vec_id", "__q", planes, bands=4).collect()
     }
 
     con = duckdb.connect()

@@ -57,23 +57,6 @@ def tokens(col: Column | str) -> Column:
     return F.filter(F.split(replaced, TOKEN_SPLIT_REGEX), lambda w: w != F.lit(""))
 
 
-_PY_SPLIT = None
-
-
-def py_tokens(text: str) -> list[str]:
-    """Row-side python mirror of ``tokens`` — same replace + split +
-    drop-empty semantics, for the per-row streaming/stateful paths that
-    cannot use a Column expression (parity-tested against the Spark
-    form in tests/test_textops.py)."""
-    global _PY_SPLIT
-    if _PY_SPLIT is None:
-        import re
-
-        _PY_SPLIT = re.compile(TOKEN_SPLIT_REGEX)
-    replaced = text.replace("\\n", _SENTINEL + "n")
-    return [w for w in _PY_SPLIT.split(replaced) if w]
-
-
 def ngrams(tokens_col: Column, n: int, sep: str = " ") -> Column:
     """Sliding word n-grams over a token array (reference
     NGramMapFunction.cc:58-100).  Returns array<string>; empty array when

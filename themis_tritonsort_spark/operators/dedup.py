@@ -11,10 +11,10 @@ DataFrame plans:
                  (pairs with jaccard >= t MUST share a shingle, so the
                  join prunes without losing candidates).
   minhash/LSH  — banded min-hash signatures; candidate pairs = docs
-                 colliding in any band bucket.  Hash = md5 (string min),
-                 chosen because the DuckDB oracle computes the identical
-                 digest — lexicographic min over uniformly distributed
-                 hex digests is a valid min-hash.
+                 colliding in any band bucket.  One md5-based affine
+                 family (_minhash), chosen because the DuckDB oracle
+                 computes the identical integers; the hot-bucket cap
+                 and the candidate self-join are shared with sign-LSH.
   simhash      — sign-sum fingerprint over token hashes (60-bit
                  md5-derived by default so the oracle reproduces it;
                  64-bit xxhash64 as the cheapest-per-token variant).
@@ -213,59 +213,45 @@ def jaccard_pairs(
 MINHASH_PRIME = 2147483647  # 2^31 - 1
 
 
-def minhash_signature(
-    df: DataFrame,
-    id_col: str,
-    text_col: str,
-    n: int = 3,
-    num_hashes: int = 16,
-) -> DataFrame:
-    """(doc, h, mh): per-doc min-hash component for h in [0, num_hashes).
-
-    Hash family: ONE md5 per shingle (60 bits hex -> bigint, mod the
-    Mersenne prime 2^31-1), then num_hashes affine transforms
+def _minhash(h: int, x: Column) -> Column:
+    """Component h of the min-hash family over a shingle's base hash x
+    (md5 60 bits hex -> bigint, mod the Mersenne prime 2^31-1):
     h_i(x) = ((2i+1)*x + 7919*i) mod (2^31-1) — the classic universal
-    min-hash family.  This is 16x fewer digest computations than
-    hashing (i, shingle) pairs, and md5 keeps the DuckDB oracle able to
-    reproduce the exact integers ('0x'||hex)::BIGINT.
+    min-hash family.  ONE md5 per shingle instead of one per
+    (i, shingle), and md5 keeps the DuckDB oracle able to reproduce the
+    exact integers ('0x'||hex)::BIGINT."""
+    return (F.lit(2 * h + 1) * x + F.lit(7919 * h)) % MINHASH_PRIME
 
-    Plan shape: all num_hashes mins are computed in ONE groupBy(doc)
-    pass (num_hashes min-aggregates over the shingle rows), then
-    unpivoted — instead of crossJoining shingles x hashes, which would
-    shuffle num_hashes times the data.
-    """
-    sh = shingle_sets(df, id_col, text_col, n)
-    base = md5_60(F.col("shingle")) % MINHASH_PRIME
-    hashed = sh.select("doc", base.alias("x"))
-    wide = hashed.groupBy("doc").agg(
+
+def _band_rows(keyed: DataFrame, mins: list[Column], bands: int) -> DataFrame:
+    """(doc, band, band_sig) from one row per doc carrying its min-hash
+    components ``mins`` (h order): band b's digest is the md5 of
+    "hh:mh" for its rows, 2-digit zero-padded h, joined by "|"."""
+    if len(mins) % bands:
+        raise ValueError(
+            f"bands ({bands}) must divide num_hashes ({len(mins)})"
+        )
+    rpb = len(mins) // bands
+    band_structs = F.array(
         *[
-            F.min(
-                (F.lit(2 * h + 1) * F.col("x") + F.lit(7919 * h)) % MINHASH_PRIME
-            ).alias(f"mh{h}")
-            for h in range(num_hashes)
+            F.struct(
+                F.lit(b).cast("long").alias("band"),
+                F.md5(
+                    F.concat_ws(
+                        "|",
+                        *[
+                            F.concat_ws(
+                                ":", F.lit(f"{h:02d}"), mins[h].cast("string")
+                            )
+                            for h in range(b * rpb, (b + 1) * rpb)
+                        ],
+                    )
+                ).alias("band_sig"),
+            )
+            for b in range(bands)
         ]
     )
-    stack = ", ".join(f"{h}L, mh{h}" for h in range(num_hashes))
-    return wide.selectExpr(
-        "doc", f"stack({num_hashes}, {stack}) AS (h, mh)"
-    )
-
-
-def lsh_band_buckets(
-    sig: DataFrame, bands: int, num_hashes: int
-) -> DataFrame:
-    """Fold signature components into band buckets: (doc, band, band_sig)."""
-    rows_per_band = num_hashes // bands
-    # Zero-pad h so the lexicographic array_sort equals numeric h order
-    # (collect_list order is nondeterministic; the sort restores it).
-    elem = F.concat_ws(
-        ":", F.lpad(F.col("h").cast("string"), 2, "0"), F.col("mh").cast("string")
-    )
-    return (
-        sig.withColumn("band", F.floor(F.col("h") / rows_per_band).cast("long"))
-        .groupBy("doc", "band")
-        .agg(F.md5(F.concat_ws("|", F.array_sort(F.collect_list(elem)))).alias("band_sig"))
-    )
+    return keyed.select("doc", F.inline(band_structs))
 
 
 def minhash_band_buckets(
@@ -276,88 +262,79 @@ def minhash_band_buckets(
     num_hashes: int = 16,
     bands: int = 4,
 ) -> DataFrame:
-    """Fused ``minhash_signature`` + ``lsh_band_buckets``: (doc, band,
-    band_sig), bit-identical to composing the two, with the second
-    shuffle removed (r11, guide §2.4).
+    """Banded min-hash buckets: (doc, band, band_sig), one row per doc
+    and band; documents with no shingle have no rows.
 
-    The composed form unpivots the wide per-doc signature to
-    (doc, h, mh) rows and re-aggregates them by (doc, band) — a full
-    extra exchange of num_hashes rows/doc plus a collect_list, spent
-    only to regroup values that were ALL present in the wide row
-    already.  Here the band digests are computed map-side directly
-    from the wide aggregate's columns: the band string is assembled in
-    numeric h order (identical to the zero-padded lexicographic sort of
-    the composed form — 2-digit zero-padding makes the orders equal),
-    md5'd, and the (band, band_sig) pairs exploded out.  One shuffle
-    (the per-doc min aggregate) instead of two; same output, so every
-    LSH query's oracle is untouched.
+    Plan shape: all num_hashes mins are computed in ONE groupBy(doc)
+    pass (num_hashes min-aggregates over the shingle rows), and the band
+    digests are built map-side from the wide aggregate's columns and
+    exploded out — one shuffle, never a crossJoin of shingles x hashes
+    or a second regrouping of (doc, h) rows by band.  The mins stay
+    aggregates on purpose: the per-row array-lambda form
+    (``minhash_doc_bands``) runs interpreted, which is right for a
+    stream's single rows and wrong for a corpus scan.
     """
-    if num_hashes % bands:
-        raise ValueError(
-            f"bands ({bands}) must divide num_hashes ({num_hashes})"
-        )
-    rows_per_band = num_hashes // bands
-    sh = shingle_sets(df, id_col, text_col, n)
     base = md5_60(F.col("shingle")) % MINHASH_PRIME
-    hashed = sh.select("doc", base.alias("x"))
+    hashed = shingle_sets(df, id_col, text_col, n).select("doc", base.alias("x"))
     wide = hashed.groupBy("doc").agg(
-        *[
-            F.min(
-                (F.lit(2 * h + 1) * F.col("x") + F.lit(7919 * h)) % MINHASH_PRIME
-            ).alias(f"mh{h}")
-            for h in range(num_hashes)
-        ]
+        *[F.min(_minhash(h, F.col("x"))).alias(f"mh{h}") for h in range(num_hashes)]
     )
-    band_structs = F.array(
-        *[
-            F.struct(
-                F.lit(b).cast("long").alias("band"),
-                F.md5(
-                    F.concat_ws(
-                        "|",
-                        *[
-                            F.concat_ws(
-                                ":",
-                                F.lit(f"{h:02d}"),
-                                F.col(f"mh{h}").cast("string"),
-                            )
-                            for h in range(
-                                b * rows_per_band, (b + 1) * rows_per_band
-                            )
-                        ],
-                    )
-                ).alias("band_sig"),
-            )
-            for b in range(bands)
-        ]
+    return _band_rows(wide, [F.col(f"mh{h}") for h in range(num_hashes)], bands)
+
+
+def minhash_doc_bands(
+    df: DataFrame,
+    id_col: str,
+    text_col: str,
+    n: int = 3,
+    num_hashes: int = 16,
+    bands: int = 4,
+) -> DataFrame:
+    """``minhash_band_buckets`` computed per ROW, with no shuffle: each
+    document's mins come from array lambdas over its own shingle set,
+    so the same (doc, band, band_sig) rows come out of a map-only plan
+    — the form a stream can use (one arriving document is one row)."""
+    xs = _doc_shingle_sets(df, id_col, text_col, n).select(
+        "doc",
+        F.transform("set", lambda s: md5_60(s) % MINHASH_PRIME).alias("__xs"),
     )
-    return wide.select(
-        "doc", F.explode(band_structs).alias("__bb")
-    ).select("doc", F.col("__bb.band").alias("band"), F.col("__bb.band_sig").alias("band_sig"))
+
+    def component(h: int) -> Column:
+        return F.array_min(F.transform("__xs", lambda x: _minhash(h, x)))
+
+    return _band_rows(xs, [component(h) for h in range(num_hashes)], bands)
+
+
+def cap_hot_buckets(
+    buckets: DataFrame, max_bucket: int | None
+) -> DataFrame:
+    """Drop every (band, band_sig) bucket holding more than
+    ``max_bucket`` rows — the hot-bucket skew guard of every LSH
+    candidate join.  A band bucket holding k docs emits k(k-1)/2 pairs,
+    so one boilerplate cluster (an empty string, a licence header, a
+    cluster of identical embeddings) can turn the join quadratic at
+    corpus scale; production near-dup pipelines treat such buckets as
+    degenerate (they are trivially all-duplicates; exact dedup, which is
+    linear, owns them).  The count window partitions on the join's own
+    key, so the guard costs no extra shuffle.  ``None`` keeps all."""
+    if max_bucket is None:
+        return buckets
+    w = Window.partitionBy("band", "band_sig")
+    return (
+        buckets.withColumn("__bsz", F.count(F.lit(1)).over(w))
+        .where(F.col("__bsz") <= max_bucket)
+        .drop("__bsz")
+    )
 
 
 def lsh_candidate_pairs(
     buckets: DataFrame, max_bucket: int | None = None
 ) -> DataFrame:
-    """Distinct candidate pairs (doc_a < doc_b) sharing any band bucket.
-
-    ``max_bucket`` is the hot-bucket skew guard: a band bucket holding
-    k docs emits k(k-1)/2 pairs, so one boilerplate cluster (an empty
-    string, a licence header) can turn the self-join quadratic at
-    corpus scale.  Buckets larger than ``max_bucket`` are dropped
-    BEFORE the join — production near-dup pipelines treat such buckets
-    as degenerate (they are trivially all-duplicates; handle them with
-    exact dedup, which is linear, not with pairwise LSH).  The bucket
-    count reuses the join's own (band, band_sig) partitioning, so the
-    guard costs no extra shuffle.
+    """Distinct candidate pairs (doc_a < doc_b) sharing any band bucket
+    of a (doc, band, band_sig) relation — MinHash or sign-LSH alike.
+    Buckets over ``max_bucket`` are dropped first (cap_hot_buckets).
     """
-    if max_bucket is not None:
-        w = Window.partitionBy("band", "band_sig")
-        buckets = (
-            buckets.withColumn("__bsz", F.count(F.lit(1)).over(w))
-            .where(F.col("__bsz") <= max_bucket)
-            .drop("__bsz")
-        )
+    buckets = cap_hot_buckets(buckets, max_bucket)
     # Both sides of the self-join are THIS relation, and when the
     # planner broadcasts one side there is no exchange to reuse — the
     # whole upstream pipeline (tokenize + shingle + md5 + the signature
@@ -394,7 +371,7 @@ def lsh_probe_candidates(
     historical corpus with itself.
 
     Both inputs are (doc, band, band_sig) as produced by
-    lsh_band_buckets (the index side is typically materialized once as
+    minhash_band_buckets (the index side is typically materialized once as
     a table, bucketed on (band, band_sig), and reused across incoming
     shards).  Returns distinct (doc_new, doc_old).
 
@@ -405,13 +382,7 @@ def lsh_probe_candidates(
     lsh_candidate_pairs.  The count runs over the index's own
     (band, band_sig) partitioning — no extra shuffle; the probe side
     is never windowed (a shard is small relative to the index)."""
-    if max_bucket is not None:
-        w = Window.partitionBy("band", "band_sig")
-        index_buckets = (
-            index_buckets.withColumn("__bsz", F.count(F.lit(1)).over(w))
-            .where(F.col("__bsz") <= max_bucket)
-            .drop("__bsz")
-        )
+    index_buckets = cap_hot_buckets(index_buckets, max_bucket)
     i = index_buckets.alias("i")
     p = probe_buckets.alias("p")
     return (

@@ -22,6 +22,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..functions.vectors import as_double, icos_ppm, idot, micro_quantize
+from .dedup import cap_hot_buckets, lsh_candidate_pairs
 from .kmeans import assign_clusters
 from .loop import persisted
 
@@ -616,7 +617,6 @@ def hyperplane_lsh_neardup(
     n_planes: int = 16,
     bands: int = 4,
     seed: int = 13,
-    verify: str = "numpy",
     max_bucket: int | None = None,
 ) -> DataFrame:
     """Approximate near-duplicate pairs via sign-random-projection LSH.
@@ -630,9 +630,6 @@ def hyperplane_lsh_neardup(
     scale that is a hash shuffle of n_rows * bands small rows instead of
     the O(n^2) cross product.
 
-    The hyperplanes ship to executors inside the UDF closure (dim *
-    n_planes doubles — a broadcast-sized constant, like kmeans centers).
-
     Tuning: recall for a pair at angle θ is 1-(1-p^r)^bands with
     p = 1-θ/π and r = n_planes/bands bits per band.  Few bits per band
     (the default 16/4) means high recall even at low thresholds but
@@ -643,49 +640,38 @@ def hyperplane_lsh_neardup(
     2^-8 — the candidate set stays ~linear instead of quadratic.
 
     Scale shape: the band join carries ONLY (id, band, bucket) rows —
-    vectors never enter the shuffle; candidates are deduped as bare id
-    pairs and the vectors are fetched back by two hash joins for the
-    exact verify.  Signature and verify are Arrow-vectorized numpy
-    (one (batch x dim) @ (dim x n_planes) matmul per batch) — the
-    n_planes-fold Catalyst expression this replaces evaluated
-    higher-order functions per element and was ~10x slower; this is the
-    sanctioned Pandas-UDF exception for genuinely numeric kernels.
-
-    ``verify`` selects the exact-cosine arithmetic for the candidate
-    verification step: "numpy" (default) uses an Arrow-batched INTEGER
-    einsum kernel — the throughput path; "fold" uses the JVM
-    integer fold (functions.vectors.icos_ppm).  Both paths compute
-    the identical micro-quantized integer cosine — exact int64 dots,
-    then the same single IEEE sqrt/div/floor — so their cos_ppm is
-    BIT-IDENTICAL to each other AND to cosine_neardup_pairs (float
-    summation order, the one thing that used to distinguish them, no
-    longer exists anywhere in the arithmetic).
-
-    ``max_bucket`` is the hot-bucket skew guard (same failure mode and
-    same fix as the MinHash path, operators/dedup.py
-    lsh_candidate_pairs): a band bucket holding k vectors — a cluster
-    of identical embeddings, or the all-positive-signature bucket a
-    biased corpus produces — emits k(k-1)/2 candidates.  Buckets over
-    the cap are dropped before the self-join via a count window on the
-    join's own (band, bucket) partitioning (no extra shuffle); the
-    degenerate cluster belongs to exact dedup, which is linear.
+    vectors never enter the shuffle; candidates are the MinHash path's
+    own symmetric self-join (operators/dedup.py lsh_candidate_pairs,
+    hot-bucket guard ``max_bucket`` included), deduped as bare id pairs,
+    and the vectors are fetched back by two hash joins for the exact
+    verify.  Signatures come from sign_band_rows (an Arrow-batched
+    float matmul).  The verify is an Arrow-batched INTEGER einsum over
+    micro-quantized vectors: exact int64 dots, then the same single
+    IEEE sqrt/div/floor as the JVM fold functions.vectors.icos_ppm, so
+    cos_ppm is BIT-IDENTICAL to cosine_neardup_pairs'.  It is the one
+    verify path because it measured faster than the fold on the 64-plane
+    sf0.1 bench config (1.77-1.83 s vs 1.86-1.96 s median, local[4]).
     """
-    if verify not in ("numpy", "fold"):
-        raise ValueError(f"verify must be 'numpy' or 'fold', got {verify!r}")
-    if n_planes % bands != 0:
-        raise ValueError(
-            f"n_planes ({n_planes}) must be divisible by bands ({bands})"
-        )
-    planes_m = np.asarray(_hyperplanes(dim, n_planes, seed)).T  # dim x n_planes
-    rows_per_band = n_planes // bands
-    weights = (1 << np.arange(rows_per_band)).astype(np.int64)
-
-    @F.pandas_udf("array<long>")
-    def band_buckets(vs: pd.Series) -> pd.Series:
-        m = np.asarray(vs.tolist(), dtype=np.float64)  # batch x dim
-        bits = (m @ planes_m >= 0).astype(np.int64)  # batch x n_planes
-        packed = bits.reshape(len(m), bands, rows_per_band) @ weights
-        return pd.Series(list(packed))
+    sided = df.select(
+        F.col(id_col).alias("doc"), as_double(F.col(vec_col)).alias("__v")
+    )
+    band_rows = sign_band_rows(
+        sided, "doc", "__v", _hyperplanes(dim, n_planes, seed), bands
+    )
+    cand = lsh_candidate_pairs(band_rows, max_bucket).select(
+        F.col("doc_a").alias("id_a"), F.col("doc_b").alias("id_b")
+    )
+    quant = _micro_sided(df, id_col, vec_col, "__id")
+    va = quant.select(
+        F.col("__id").alias("id_a"),
+        F.col("__q").alias("__qa"),
+        F.col("__n").alias("__na"),
+    )
+    vb = quant.select(
+        F.col("__id").alias("id_b"),
+        F.col("__q").alias("__qb"),
+        F.col("__n").alias("__nb"),
+    )
 
     @F.pandas_udf("long")
     def icos_batch(
@@ -703,58 +689,13 @@ def hyperplane_lsh_neardup(
         )
         return pd.Series(np.floor(1e6 * d / den + 0.5).astype(np.int64))
 
-    sided = df.select(
-        F.col(id_col).alias("__id"), as_double(F.col(vec_col)).alias("__v")
-    )
-    band_rows = sided.select(
-        "__id", F.posexplode(band_buckets("__v")).alias("band", "bucket")
-    )
-    if max_bucket is not None:
-        w = Window.partitionBy("band", "bucket")
-        band_rows = (
-            band_rows.withColumn("__bsz", F.count(F.lit(1)).over(w))
-            .where(F.col("__bsz") <= max_bucket)
-            .drop("__bsz")
-        )
-    cand = (
-        band_rows.alias("a")
-        .join(
-            band_rows.alias("b"),
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.bucket") == F.col("b.bucket"))
-            & (F.col("a.__id") < F.col("b.__id")),
-        )
-        .select(F.col("a.__id").alias("id_a"), F.col("b.__id").alias("id_b"))
-        .dropDuplicates(["id_a", "id_b"])
-    )
-    from ..functions.vectors import icos_ppm
-
-    quant = _micro_sided(df, id_col, vec_col, "__id")
-    va = quant.select(
-        F.col("__id").alias("id_a"),
-        F.col("__q").alias("__qa"),
-        F.col("__n").alias("__na"),
-    )
-    vb = quant.select(
-        F.col("__id").alias("id_b"),
-        F.col("__q").alias("__qb"),
-        F.col("__n").alias("__nb"),
-    )
-    fetched = cand.join(va, "id_a").join(vb, "id_b")
     ppm_threshold = int(round(float(threshold) * 1e6))
-    if verify == "fold":
-        scored = fetched.withColumn(
-            "cos_ppm",
-            icos_ppm(
-                F.col("__qa"), F.col("__na"), F.col("__qb"), F.col("__nb")
-            ),
-        )
-    else:
-        scored = fetched.withColumn(
-            "cos_ppm", icos_batch("__qa", "__na", "__qb", "__nb")
-        )
-    return scored.where(F.col("cos_ppm") >= ppm_threshold).select(
-        "id_a", "id_b", "cos_ppm"
+    return (
+        cand.join(va, "id_a")
+        .join(vb, "id_b")
+        .withColumn("cos_ppm", icos_batch("__qa", "__na", "__qb", "__nb"))
+        .where(F.col("cos_ppm") >= ppm_threshold)
+        .select("id_a", "id_b", "cos_ppm")
     )
 
 
@@ -1363,39 +1304,46 @@ def micro_planes(dim: int, n_planes: int, seed: int) -> list[list[int]]:
     ]
 
 
-def _iband_rows(
-    sided: DataFrame, id_name: str, planes_micro: list[list[int]], bands: int
+def sign_band_rows(
+    sided: DataFrame,
+    id_name: str,
+    vec_name: str,
+    planes: list[list[float]] | list[list[int]],
+    bands: int,
 ) -> DataFrame:
-    """(id, band, bucket) sign-LSH band rows over micro-quantized
-    vectors: bit_j = [idot(q, plane_j) >= 0], buckets pack
-    n_planes/bands bits per band.  ONLY the three small columns come
-    out: vectors never enter the candidate shuffle.
+    """(id, band, band_sig) sign-LSH band rows: bit_j = [v . plane_j >=
+    0], band_sig packs n_planes/bands bits per band.  ONLY the three
+    small columns come out: vectors never enter the candidate shuffle.
 
-    The bit kernel is an Arrow-batched int64 matmul (numpy integer
-    arithmetic is exact and associative, so the signs — hence the
-    buckets — are bit-identical to any engine's integer dots; the
-    equivalent literal-folded Catalyst expression was a
-    planes x dim-literal codegen monster that cost seconds to compile
-    per plan).  Same sanctioned Pandas-UDF exception as the float
-    band_buckets kernel in hyperplane_lsh_neardup."""
-    n_planes = len(planes_micro)
+    The planes' dtype picks the matmul: float planes (_hyperplanes) a
+    float64 one over raw vectors; integer planes (micro_planes) an int64
+    one over micro-quantized vectors — numpy integer arithmetic is exact
+    and associative, so those signs (hence buckets) are bit-identical to
+    any engine's integer dots.  Arrow-batched numpy (one (batch x dim) @
+    (dim x n_planes) matmul per batch): the n_planes-fold Catalyst
+    expression it replaces evaluated higher-order functions per element
+    and was ~10x slower, and the literal-folded integer form cost
+    seconds of codegen per plan — the sanctioned Pandas-UDF exception
+    for genuinely numeric kernels.  The planes ship inside the UDF
+    closure (dim * n_planes numbers, like kmeans centers)."""
+    planes_m = np.asarray(planes).T  # dim x n_planes
+    n_planes = planes_m.shape[1]
     if n_planes % bands != 0:
         raise ValueError(
             f"n_planes ({n_planes}) must be divisible by bands ({bands})"
         )
     rpb = n_planes // bands
-    planes_m = np.asarray(planes_micro, dtype=np.int64).T  # dim x n_planes
     weights = (1 << np.arange(rpb)).astype(np.int64)
 
     @F.pandas_udf("array<long>")
-    def iband_buckets(qs: pd.Series) -> pd.Series:
-        m = np.asarray(qs.tolist(), dtype=np.int64)  # batch x dim
-        bits = (m @ planes_m >= 0).astype(np.int64)  # exact int64 dots
+    def band_buckets(vs: pd.Series) -> pd.Series:
+        m = np.asarray(vs.tolist(), dtype=planes_m.dtype)  # batch x dim
+        bits = (m @ planes_m >= 0).astype(np.int64)  # batch x n_planes
         packed = bits.reshape(len(m), bands, rpb) @ weights
         return pd.Series(list(packed))
 
     return sided.select(
-        id_name, F.posexplode(iband_buckets("__q")).alias("band", "bucket")
+        id_name, F.posexplode(band_buckets(vec_name)).alias("band", "band_sig")
     )
 
 
@@ -1447,20 +1395,16 @@ def margin_pair_mine_ann(
     planes_micro = micro_planes(dim, n_planes, seed)
     qsided = _micro_sided(queries, qid, vec_col, "query_id")
     csided = _micro_sided(corpus, id_col, vec_col, "neighbor_id")
-    qband = _iband_rows(qsided, "query_id", planes_micro, bands)
-    cband = _iband_rows(csided, "neighbor_id", planes_micro, bands)
-    if max_bucket is not None:
-        w = Window.partitionBy("band", "bucket")
-        cband = (
-            cband.withColumn("__bsz", F.count(F.lit(1)).over(w))
-            .where(F.col("__bsz") <= max_bucket)
-            .drop("__bsz")
-        )
+    qband = sign_band_rows(qsided, "query_id", "__q", planes_micro, bands)
+    cband = cap_hot_buckets(
+        sign_band_rows(csided, "neighbor_id", "__q", planes_micro, bands),
+        max_bucket,
+    )
     cand = (
         cband.join(
-            F.broadcast(qband.withColumnsRenamed({"band": "__qb", "bucket": "__qk"})),
+            F.broadcast(qband.withColumnsRenamed({"band": "__qb", "band_sig": "__qk"})),
             (F.col("band") == F.col("__qb"))
-            & (F.col("bucket") == F.col("__qk"))
+            & (F.col("band_sig") == F.col("__qk"))
             & (F.col("neighbor_id") != F.col("query_id")),
         )
         .select("query_id", "neighbor_id")

@@ -24,7 +24,7 @@ Catalyst can still optimize across the fragment boundary.
 from __future__ import annotations
 
 from collections.abc import Callable
-from dataclasses import dataclass, field
+from dataclasses import dataclass, field, replace
 from typing import Any
 
 from pyspark.sql import DataFrame, SparkSession
@@ -433,18 +433,13 @@ def _hash_partition(df: DataFrame, params: dict) -> DataFrame:
 
 
 @_register(PARTITION_FUNCTIONS, "BoundaryListPartitionFunction")
+@_register(PARTITION_FUNCTIONS, "UniformPartitionFunction")
 def _range_partition(df: DataFrame, params: dict) -> DataFrame:
     """Sampled range partitioning + in-partition sort = global order
-    (BoundaryListPartitionFunction.cc:10-35 + phase 0/2 semantics)."""
-    n = int(params.get("NUM_PARTITIONS", df.sparkSession.sparkContext.defaultParallelism))
-    return df.repartitionByRange(n, "key").sortWithinPartitions("key")
-
-
-@_register(PARTITION_FUNCTIONS, "UniformPartitionFunction")
-def _uniform_partition(df: DataFrame, params: dict) -> DataFrame:
-    """Uniform key-space scaling (UniformPartitionFunction.cc:78-90) —
+    (BoundaryListPartitionFunction.cc:10-35 + phase 0/2 semantics).
+    Uniform key-space scaling (UniformPartitionFunction.cc:78-90) is
     range partitioning without sampling; Spark's range partitioner is
-    the closest declarative equivalent."""
+    the closest declarative equivalent, so it shares this body."""
     n = int(params.get("NUM_PARTITIONS", df.sparkSession.sparkContext.defaultParallelism))
     return df.repartitionByRange(n, "key").sortWithinPartitions("key")
 
@@ -460,7 +455,7 @@ def _random_partition(df: DataFrame, params: dict) -> DataFrame:
 def _single_partition(df: DataFrame, params: dict) -> DataFrame:
     """Everything to one partition, sorted (merge jobs,
     SinglePartitionMergingPartitionFunction.cc:148-158)."""
-    return df.repartitionByRange(1, "key").sortWithinPartitions("key")
+    return _range_partition(df, {"NUM_PARTITIONS": 1})
 
 
 @dataclass
@@ -600,14 +595,7 @@ def run_job(
                 job.params.get("TARGET_PARTITION_BYTES", 128 << 20)
             ),
         )
-        job = ThemisJob(
-            map_function=job.map_function,
-            reduce_function=job.reduce_function,
-            partition_function=job.partition_function,
-            params={**job.params, "NUM_PARTITIONS": n},
-            input_table=job.input_table,
-            input_path=job.input_path,
-        )
+        job = replace(job, params={**job.params, "NUM_PARTITIONS": n})
 
     out = MAP_FUNCTIONS[job.map_function](df, job.params)
     if job.reduce_function == "IdentityReduceFunction":
@@ -659,14 +647,7 @@ def run_shared_scan(
             raise ValueError(
                 f"shared-scan jobs must share one input, got {sorted(sources)}"
             )
-        probe = jobs[0]
-        if probe.input_table is not None:
-            from ..data import table
-
-            df = table(spark, sf_dir, probe.input_table)
-        elif probe.input_path is not None:
-            df = spark.read.parquet(probe.input_path)
-        else:
-            raise ValueError("shared-scan jobs need input_table or input_path")
-    shared = df.localCheckpoint(eager=False)
+    shared = _resolve_source(spark, jobs[0], df, sf_dir).localCheckpoint(
+        eager=False
+    )
     return [run_job(spark, job, df=shared, sf_dir=sf_dir) for job in jobs]

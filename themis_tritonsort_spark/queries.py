@@ -1498,14 +1498,14 @@ def q39_lsh_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = table(spark, sf_dir, "embeddings")
     return hyperplane_lsh_neardup(
         emb, "vec_id", "embedding", threshold=NEARDUP_COS, dim=64,
-        n_planes=16, bands=8, verify="fold",
+        n_planes=16, bands=8,
     )
 
 
 # Q39 oracle: the exact near-dup pair set (same SQL as q38).  Sign-LSH
 # candidates are verified with the SAME engine-exact integer cosine as
-# q38 (micro-quantized icos_ppm; verify="fold" selects the JVM fold,
-# which is bit-identical to the Arrow integer kernel), so the output
+# q38 (micro-quantized integer cosine: the Arrow integer kernel is
+# bit-identical to the JVM icos_ppm fold), so the output
 # is a subset of the exact pairs with identical cos_ppm values; the
 # configured signature (16 planes, 8 bands of 2 bits) recovers every
 # >=400000-ppm pair of this corpus (hyperplanes are seeded, so recall
@@ -6197,7 +6197,7 @@ def q142_ann_margin_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _iband_sig_sql(planes_micro: list[list[int]], bands: int) -> str:
-    """DuckDB list-of-buckets expression mirroring similarity._iband_rows
+    """DuckDB list-of-buckets expression mirroring similarity.sign_band_rows
     over a quantized list column ``q``: the same integer plane constants
     are interpolated as literals, so bucket values are bit-identical to
     the Spark side's."""
@@ -6209,9 +6209,11 @@ def _iband_sig_sql(planes_micro: list[list[int]], bands: int) -> str:
             lits = "[" + ", ".join(
                 str(c) for c in planes_micro[b * rpb + j]
             ) + "]"
+            # zip the plane in once: a list literal indexed inside the
+            # lambda is rebuilt per element (~10 s of the oracle at sf0.01)
             bit = (
-                "(CASE WHEN list_sum(list_transform(range(1, len(q) + 1),"
-                f" i -> q[i] * {lits}[i])) >= 0 THEN 1 ELSE 0 END)"
+                "(CASE WHEN list_sum(list_transform("
+                f"list_zip(q, {lits}), x -> x[1] * x[2])) >= 0 THEN 1 ELSE 0 END)"
             )
             bits.append(f"{bit} * {1 << j}")
         band_exprs.append("(" + "\n   + ".join(bits) + ")")
@@ -6225,7 +6227,7 @@ def _q142_sql() -> str:
     sig = _iband_sig_sql(planes, _Q142_BANDS)
     return f"""
 WITH {_EMB_MICRO_CTE},
-sig AS (SELECT vec_id, label, q, nn, {sig} AS buckets FROM nz),
+sig AS MATERIALIZED (SELECT vec_id, label, q, nn, {sig} AS buckets FROM nz),
 qb AS (
   SELECT vec_id, unnest(buckets) AS bucket,
          generate_subscripts(buckets, 1) AS band

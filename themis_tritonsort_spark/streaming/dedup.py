@@ -53,83 +53,47 @@ def neardup_candidates_stream(
 ) -> DataFrame:
     """Streaming MinHash-LSH near-duplicate candidates — dedup on
     INGEST.  Each arriving document's banded min-hash signature probes
-    per-(band, bucket) keyed state; every bucket that already holds
+    per-(band, band_sig) keyed state; every bucket that already holds
     members emits (id, prior_id, band) candidate rows, so a new
     document learns what it near-duplicates WITHOUT re-scanning the
     corpus.  The batch family (operators/dedup.py) answers "what
     duplicates exist in this corpus"; this answers "is this new doc a
     near-dup of anything ingested so far".
 
-    Signature family mirrors the batch ``minhash_signature`` (md5
-    60-bit base mod 2^31-1, affine transforms h_i(x) = (2i+1)x +
-    7919i), computed per ROW in Arrow batches via the python tokenizer
-    mirror (functions/text.py: py_tokens) — a document is one row, so
-    no corpus shuffle is needed to build its signature.
+    Band keys are the batch's: ``operators.dedup.minhash_doc_bands``
+    builds each document's (band, band_sig) rows in the JVM with the
+    same min-hash family and band digest as ``minhash_band_buckets``,
+    per ROW — a document is one row, so no corpus shuffle is needed to
+    build its signature.  Documents with no shingle get no band rows
+    and never become candidates, as in batch.
 
-    State per bucket holds up to ``max_bucket`` member ids — the same
-    hot-bucket guard as the batch paths: a degenerate bucket (identical
-    boilerplate) emits at most max_bucket*(max_bucket-1)/2 pairs EVER
-    and then goes dark (exact dedup owns that case; it is linear).
-    State is keyed by (band, bucket), hash-partitioned across
+    State per bucket holds up to ``max_bucket`` member ids — the
+    stream's hot-bucket guard.  Unlike the batch cap_hot_buckets, which
+    drops a bucket over the cap, it keeps the bucket's first members: a
+    degenerate bucket (identical boilerplate) emits at most
+    max_bucket*(max_bucket-1)/2 pairs EVER and then goes dark (exact
+    dedup owns that case; it is linear).
+    State is keyed by (band, band_sig), hash-partitioned across
     executors like any keyed state.  Pairs may repeat across bands —
     consumers dedup downstream (the same contract as the batch
-    candidate stage before its ``distinct()``).
+    candidate stage before its ``distinct()``).  With no bucket over
+    the cap, the distinct unordered pairs equal the batch
+    ``lsh_candidate_pairs(minhash_band_buckets(...))``.
     """
-    import hashlib
     from collections.abc import Iterator
 
     from pyspark.sql.streaming.state import GroupStateTimeout
 
-    from ..functions.text import py_tokens
-    from ..operators.dedup import MINHASH_PRIME
+    from ..operators.dedup import minhash_doc_bands
 
-    if num_hashes % bands != 0:
-        raise ValueError(
-            f"num_hashes ({num_hashes}) must be divisible by bands ({bands})"
-        )
-    rows_per_band = num_hashes // bands
-
-    @F.pandas_udf("array<long>")
-    def band_buckets(texts: pd.Series) -> pd.Series:
-        out = []
-        for text in texts:
-            toks = py_tokens(text or "")
-            shingles = {
-                " ".join(toks[i : i + n]) for i in range(len(toks) - n + 1)
-            }
-            if not shingles:
-                out.append([-1] * bands)  # empty docs share one bucket
-                continue
-            xs = [
-                int(hashlib.md5(s.encode()).hexdigest()[:15], 16)
-                % MINHASH_PRIME
-                for s in shingles
-            ]
-            mh = [
-                min(((2 * h + 1) * x + 7919 * h) % MINHASH_PRIME for x in xs)
-                for h in range(num_hashes)
-            ]
-            sigs = []
-            for b in range(bands):
-                seg = mh[b * rows_per_band : (b + 1) * rows_per_band]
-                digest = hashlib.md5(
-                    "|".join(map(str, seg)).encode()
-                ).hexdigest()
-                sigs.append(int(digest[:15], 16))
-            out.append(sigs)
-        return pd.Series(out)
-
-    probes = docs.select(
-        F.col(id_col).alias("__id"),
-        F.posexplode(band_buckets(F.col(text_col))).alias("band", "bucket"),
-    )
+    probes = minhash_doc_bands(docs, id_col, text_col, n, num_hashes, bands)
 
     def fn(key, pdfs: Iterator[pd.DataFrame], state) -> Iterator[pd.DataFrame]:
         members = list(state.get[0]) if state.exists else []
         band = key[0]
         ids, priors = [], []
         for pdf in pdfs:
-            for doc in sorted(pdf["__id"]):  # deterministic within batch
+            for doc in sorted(pdf["doc"]):  # deterministic within batch
                 if len(members) >= max_bucket:
                     break
                 for prior in members:
@@ -141,7 +105,7 @@ def neardup_candidates_stream(
             {"id": ids, "prior_id": priors, "band": [band] * len(ids)}
         )
 
-    return probes.groupBy("band", "bucket").applyInPandasWithState(
+    return probes.groupBy("band", "band_sig").applyInPandasWithState(
         fn,
         outputStructType="id long, prior_id long, band integer",
         stateStructType="members array<long>",

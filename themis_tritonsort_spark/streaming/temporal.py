@@ -175,97 +175,3 @@ def transition_stream(
         outputMode="append",
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
-
-
-def ewma_stream_tws(
-    events: DataFrame,
-    key_col: str = "user_id",
-    ts_col: str = "ts_us",
-    id_col: str = "event_id",
-    value_col: str = "value_cents",
-):
-    """Per-key halving EWMA via ``transformWithStateInPandas`` — the
-    Spark 4 stateful-processor API (state-store v2 / RocksDB-backed),
-    forward path of :func:`ewma_stream`'s applyInPandasWithState
-    formulation.  Identical semantics: one double of ValueState per
-    key, HALF_UP rounding parity with the batch operator, (key, id,
-    ts, ewma_micro) per event in append mode.
-
-    The processor object carries NO instance state of its own between
-    keys — everything lives in the handle's ValueState, so state is
-    keyed, partitioned, and fault-tolerant exactly like the v1 API,
-    while gaining v2's independent per-state-variable schemas, TTL,
-    and timers for free when an operator needs them.
-
-    Requires ``spark.sql.streaming.stateStore.providerClass`` =
-    RocksDBStateStoreProvider (transformWithState is v2-only; the
-    session factory leaves the default HDFS-backed provider for the
-    v1 operators, so set it on the session running this query —
-    see test_streaming.test_ewma_tws_matches_v1_and_batch) and the
-    ``protobuf`` python package (the v2 state protocol wire format;
-    import-gated here because minimal containers may lack it — the
-    v1 twin has no such dependency).
-    """
-    import math
-
-    try:
-        import google.protobuf  # noqa: F401
-    except ImportError as e:
-        raise ImportError(
-            "transformWithStateInPandas needs the 'protobuf' package "
-            "(pyspark's v2 state protocol); use ewma_stream (the "
-            "applyInPandasWithState twin, identical semantics) in "
-            "environments without it"
-        ) from e
-
-    import pandas as pd
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor,
-        StatefulProcessorHandle,
-    )
-
-    out_schema = (
-        f"{key_col} long, {id_col} long, {ts_col} long, ewma_micro long"
-    )
-
-    def _round_half_up(v: float) -> int:
-        return int(math.copysign(math.floor(abs(v) + 0.5), v))
-
-    class _EwmaProcessor(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._s = handle.getValueState("s", "s double")
-
-        def handleInputRows(self, key, rows, timer_values):
-            (k,) = key
-            s = self._s.get()[0] if self._s.exists() else None
-            out = []
-            for pdf in rows:
-                pdf = pdf.sort_values([ts_col, id_col], kind="mergesort")
-                for ts, eid, x in zip(
-                    pdf[ts_col], pdf[id_col], pdf[value_col]
-                ):
-                    x = float(int(x))
-                    s = x if s is None else (x + s) / 2.0
-                    out.append(
-                        (
-                            int(k),
-                            int(eid),
-                            int(ts),
-                            _round_half_up(s * 1_000_000.0),
-                        )
-                    )
-            if s is not None:
-                self._s.update((s,))
-            yield pd.DataFrame(
-                out, columns=[key_col, id_col, ts_col, "ewma_micro"]
-            )
-
-        def close(self) -> None:
-            pass
-
-    return events.groupBy(key_col).transformWithStateInPandas(
-        statefulProcessor=_EwmaProcessor(),
-        outputStructType=out_schema,
-        outputMode="append",
-        timeMode="None",
-    )

@@ -123,9 +123,8 @@ def replica_probes(spark, sf_dir: str, copies: int):
         duplicate_substring_spans,
         exact_duplicates,
         keep_best_per_cluster,
-        lsh_band_buckets,
         lsh_candidate_pairs,
-        minhash_signature,
+        minhash_band_buckets,
     )
     from themis_tritonsort_spark.operators.kmeans import lloyd
     from themis_tritonsort_spark.operators.pagerank import pagerank
@@ -167,9 +166,9 @@ def replica_probes(spark, sf_dir: str, copies: int):
     )
 
     def lsh(d):
-        sig = minhash_signature(d, "doc_id", "text", num_hashes=16)
         return lsh_candidate_pairs(
-            lsh_band_buckets(sig, bands=4, num_hashes=16), max_bucket=64
+            minhash_band_buckets(d, "doc_id", "text", num_hashes=16, bands=4),
+            max_bucket=64,
         )
 
     def chunk_pack(d):
