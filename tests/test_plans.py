@@ -97,6 +97,19 @@ def test_q37_range_join_is_equi_join(spark):
     assert "NestedLoop" not in plan and "Cartesian" not in plan
 
 
+def test_q39_verify_udf_runs_once(spark):
+    # the cos_ppm filter stays above the projection computing it: a
+    # filter pushed below it inlines icos_batch, and a second
+    # ArrowEvalPython runs the verify again for every candidate pair
+    plan = _plan(q.q39_lsh_neardup(spark, SF_SMOKE))
+    evals = re.findall(
+        r"^\(\d+\) ArrowEvalPython\nInput .*\nArguments: \[icos_batch\(",
+        plan,
+        re.M,
+    )
+    assert len(evals) == 1, plan
+
+
 def test_cobucketed_join_elides_exchange_and_sort(spark):
     from pyspark.sql import functions as F
 

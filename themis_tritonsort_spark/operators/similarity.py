@@ -689,6 +689,10 @@ def hyperplane_lsh_neardup(
         )
         return pd.Series(np.floor(1e6 * d / den + 0.5).astype(np.int64))
 
+    # marked nondeterministic only so Catalyst cannot push the cos_ppm
+    # filter below the projection computing it: a pushed filter
+    # inlines the call and the verify runs twice per candidate pair
+    icos_batch = icos_batch.asNondeterministic()
     ppm_threshold = int(round(float(threshold) * 1e6))
     return (
         cand.join(va, "id_a")

@@ -59,8 +59,10 @@ def get_spark(
         # truncates the same way: nanos -> micros).
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
         .config("spark.ui.enabled", "false")
-        # Workers fork from pydaemon, which stops every task re-reading
-        # pyspark.zip (0.12-0.26 s of CPU per task on CPython 3.11).
+        # Workers fork from pydaemon, which imports the byte-compiled
+        # pyspark when it is pyspark.zip's release (compiling the zip's
+        # sources cost ~1 s per daemon start) and stops every task
+        # re-reading the zip (0.12-0.26 s of CPU per task on 3.11).
         # spark.python.worker.module cannot carry it: pyspark/daemon.py
         # loads only worker modules named pyspark*.
         .config("spark.python.daemon.module", "themis_tritonsort_spark.pydaemon")
