@@ -24,3 +24,36 @@ def spark():
 @pytest.fixture(scope="session")
 def sf_dir():
     return SF_SMOKE
+
+
+@pytest.fixture
+def graph_paths(monkeypatch):
+    """Iterate it to run a test body once per path of the graph
+    operators' one-partition rule (``components.driver_table``):
+    "driver" with the rule answering as it does, where it must hand
+    back a table every time (the graphs under test are small), then
+    "loop" with the rule answering None, which forces the distributed
+    loop.  Each pass prints its path, so a failure's captured output
+    names it."""
+    from themis_tritonsort_spark.operators import components
+
+    real = components.driver_table
+
+    def passes():
+        for path, answer in (("driver", real), ("loop", lambda df, rows: None)):
+            seen: list = []
+
+            def consult(df, rows=None):
+                seen.append(answer(df, rows))
+                return seen[-1]
+
+            with monkeypatch.context() as patch:
+                patch.setattr(components, "driver_table", consult)
+                print(f"graph path: {path}")
+                yield path
+            assert seen, f"no graph operator consulted the rule ({path})"
+            assert path == "loop" or all(t is not None for t in seen)
+
+    it = passes()
+    yield it
+    it.close()

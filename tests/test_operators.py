@@ -475,14 +475,17 @@ def test_funnel_steps_strict_ordering(spark):
     assert out == {1: 3, 2: 2, 3: 1, 5: 0}
 
 
-def test_graph_ops_cache_ownership(spark, monkeypatch):
+def test_graph_ops_cache_ownership(spark, monkeypatch, graph_paths):
     """ADVICE r09 cache discipline: the iterative graph ops
     (connected_components, kcore_vertices, label_propagation, bfs_hops)
     materialize internally and release EVERY persist they take before
     returning; pagerank, connected_components_star and the triangle
     family take no persist at all (their reused relations are lazy
     local checkpoints owned by the result's lineage).  After every op
-    the session's CacheManager is empty, with no clearCache()."""
+    the session's CacheManager is empty, with no clearCache().
+    connected_components and kcore_vertices persist only on their
+    distributed loop: a graph that fits one partition finishes on the
+    driver with no persist, so both paths run here."""
     from themis_tritonsort_spark.operators import components as C
     from themis_tritonsort_spark.operators.pagerank import pagerank
 
@@ -512,9 +515,25 @@ def test_graph_ops_cache_ownership(spark, monkeypatch):
         return spark._jsparkSession.sharedState().cacheManager().isEmpty()
 
     # self-releasing ops: every persist taken is released on return
+    # (the two with a driver path take none there)
+    for path in graph_paths:
+        for call in (
+            lambda: C.connected_components(edges).collect(),
+            lambda: C.kcore_vertices(edges, k=2).collect(),
+        ):
+            taken.clear()
+            call()
+            if path == "loop":
+                assert taken, "op stopped persisting its edge set?"
+            else:
+                assert taken == []
+            assert not any(cached(h) for h in taken)
+            assert cache_empty()
+        taken.clear()
+        C.connected_components_star(edges).collect()
+        assert taken == []
+        assert cache_empty()
     for call in (
-        lambda: C.connected_components(edges).collect(),
-        lambda: C.kcore_vertices(edges, k=2).collect(),
         lambda: C.label_propagation(edges, rounds=2).collect(),
         lambda: C.bfs_hops(edges, seeds, rounds=2).collect(),
     ):
@@ -525,14 +544,10 @@ def test_graph_ops_cache_ownership(spark, monkeypatch):
         assert cache_empty()
 
     # checkpoint-only ops: no persist is taken at all
-    for call in (
-        lambda: pagerank(edges, iterations=3).collect(),
-        lambda: C.connected_components_star(edges).collect(),
-    ):
-        taken.clear()
-        call()
-        assert taken == []
-        assert cache_empty()
+    taken.clear()
+    pagerank(edges, iterations=3).collect()
+    assert taken == []
+    assert cache_empty()
 
     # lazy triangle family: no persist is taken, and the answer is the
     # exact one (the single triangle {1, 2, 3}) on every read
@@ -651,7 +666,7 @@ def test_until_converged_raises_only_when_rounds_run_out():
         list(until_converged("probe", 0))
 
 
-def test_star_cc_and_kcore_raise_when_out_of_rounds(spark):
+def test_star_cc_and_kcore_raise_when_out_of_rounds(spark, graph_paths):
     """Both operators must raise, not return a partial answer, when
     max_iterations is too small — and leave no cache behind."""
     from themis_tritonsort_spark.operators.components import (
@@ -665,20 +680,21 @@ def test_star_cc_and_kcore_raise_when_out_of_rounds(spark):
     chain = spark.createDataFrame(
         [(i, i + 1) for i in range(300)], ["src", "dst"]
     )
-    with pytest.raises(
-        RuntimeError, match="connected_components_star did not converge in 1"
-    ):
-        connected_components_star(chain, max_iterations=1)
-    assert cache_empty()
+    for _ in graph_paths:
+        with pytest.raises(
+            RuntimeError, match="connected_components_star did not converge in 1"
+        ):
+            connected_components_star(chain, max_iterations=1)
+        assert cache_empty()
 
-    # the cascade graph of test_kcore_peel_cascade_and_compaction: its
-    # pendant path peels one vertex per round
-    cycle = [(i, i + 1) for i in range(1, 6)] + [(6, 1)]
-    path = [(6, 100)] + [(100 + i, 101 + i) for i in range(12)]
-    edges = spark.createDataFrame(cycle + path, ["src", "dst"])
-    with pytest.raises(RuntimeError, match="kcore_vertices did not converge in 2"):
-        kcore_vertices(edges, k=2, max_iterations=2)
-    assert cache_empty()
+        # the cascade graph of test_kcore_peel_cascade_and_compaction: its
+        # pendant path peels one vertex per round
+        cycle = [(i, i + 1) for i in range(1, 6)] + [(6, 1)]
+        path = [(6, 100)] + [(100 + i, 101 + i) for i in range(12)]
+        edges = spark.createDataFrame(cycle + path, ["src", "dst"])
+        with pytest.raises(RuntimeError, match="kcore_vertices did not converge in 2"):
+            kcore_vertices(edges, k=2, max_iterations=2)
+        assert cache_empty()
 
 
 def test_kcenter_select_releases_its_cache_when_the_loop_raises(
@@ -751,7 +767,7 @@ def test_triangle_total_doulion(spark):
             triangle_total_doulion(df, p_ppm=bad)
 
 
-def test_connected_components_frontier_matches_union_find(spark):
+def test_connected_components_frontier_matches_union_find(spark, graph_paths):
     """Frontier (delta) min-label propagation (r11) must label every
     vertex with its component minimum — pinned against a brute-force
     union-find on a shape that exercises the frontier's edge cases: a
@@ -788,14 +804,15 @@ def test_connected_components_frontier_matches_union_find(spark):
     want = {(v, find(v)) for v in parent}
 
     df = spark.createDataFrame(edges, ["src", "dst"])
-    got = {
-        (r["vid"], r["component"])
-        for r in connected_components(df, max_iterations=50).collect()
-    }
-    assert got == want
+    for _ in graph_paths:
+        got = {
+            (r["vid"], r["component"])
+            for r in connected_components(df, max_iterations=50).collect()
+        }
+        assert got == want
 
 
-def test_connected_components_star_matches_min_label(spark):
+def test_connected_components_star_matches_min_label(spark, graph_paths):
     """The alternating large-star/small-star variant must produce the
     identical (vid, component) relation as min-label propagation on an
     arbitrary graph — same minimum-id component contract."""
@@ -809,18 +826,19 @@ def test_connected_components_star_matches_min_label(spark):
     edges = [((i * 7919) % 120, (i * 104729 + 13) % 120) for i in range(150)]
     edges += [(5, 5), (17, 3), (3, 17)]
     df = spark.createDataFrame(edges, ["src", "dst"])
-    want = {
-        (r["vid"], r["component"])
-        for r in connected_components(df, max_iterations=50).collect()
-    }
-    got = {
-        (r["vid"], r["component"])
-        for r in connected_components_star(df).collect()
-    }
-    assert got == want
+    for _ in graph_paths:
+        want = {
+            (r["vid"], r["component"])
+            for r in connected_components(df, max_iterations=50).collect()
+        }
+        got = {
+            (r["vid"], r["component"])
+            for r in connected_components_star(df).collect()
+        }
+        assert got == want
 
 
-def test_connected_components_star_handles_long_chains(spark):
+def test_connected_components_star_handles_long_chains(spark, graph_paths):
     """The adversarial shape the variant exists for: a 300-hop chain.
     Min-label needs diameter rounds (raises at max_iterations=10);
     star contraction converges in O(log n) alternations and labels
@@ -835,20 +853,23 @@ def test_connected_components_star_handles_long_chains(spark):
     chain = [(i, i + 1) for i in range(300)]
     df = spark.createDataFrame(chain, ["src", "dst"])
 
-    with _pytest.raises(RuntimeError, match="did not converge"):
-        connected_components(df, max_iterations=10).collect()
+    for _ in graph_paths:
+        with _pytest.raises(RuntimeError, match="did not converge"):
+            connected_components(df, max_iterations=10).collect()
 
-    out = connected_components_star(df, max_iterations=12).collect()
-    assert len(out) == 301
-    assert all(r["component"] == 0 for r in out)
-    assert {r["vid"] for r in out} == set(range(301))
+        out = connected_components_star(df, max_iterations=12).collect()
+        assert len(out) == 301
+        assert all(r["component"] == 0 for r in out)
+        assert {r["vid"] for r in out} == set(range(301))
 
 
-def test_connected_components_star_releases_checkpoint_blocks(spark):
+def test_connected_components_star_releases_checkpoint_blocks(spark, graph_paths):
     """ADVICE r10: superseded alternations' localCheckpoint blocks are
     released inside the loop, not left for GC + ContextCleaner — after
     the call returns and the result is consumed, at most the final
-    round's block sets may linger, never ~2 per alternation."""
+    round's block sets may linger, never ~2 per alternation.  The
+    chain fits one partition, so only the "loop" pass runs the
+    alternations; the "driver" pass pins that it leaves no more."""
     import gc
 
     from themis_tritonsort_spark.operators.components import (
@@ -860,20 +881,111 @@ def test_connected_components_star_releases_checkpoint_blocks(spark):
     def n_stored() -> int:
         return len(sc._jsc.sc().getRDDStorageInfo())
 
-    # settle any leftovers from earlier tests in the shared session
-    gc.collect()
-    base = n_stored()
     # a 64-hop chain forces several alternations (the shape that would
     # otherwise accumulate 2 block sets per round)
     df = spark.createDataFrame(
         [(i, i + 1) for i in range(64)], "src long, dst long"
     )
-    out = connected_components_star(df, max_iterations=12)
-    assert out.count() == 65
-    # everything superseded was released in-loop; only the fixed-point
-    # round's sets (large-star mid + final e, <= 2) may remain until
-    # their Python handles die
-    assert n_stored() - base <= 2
+    for _ in graph_paths:
+        # settle any leftovers from earlier tests in the shared session
+        gc.collect()
+        base = n_stored()
+        out = connected_components_star(df, max_iterations=12)
+        assert out.count() == 65
+        # everything superseded was released in-loop; only the fixed-point
+        # round's sets (large-star mid + final e, <= 2) may remain until
+        # their Python handles die
+        assert n_stored() - base <= 2
+
+
+@pytest.mark.parametrize(
+    "name", ["q86_kcore", "q144_chain_components", "q46_dedup_clusters"]
+)
+def test_graph_queries_identical_on_both_paths(spark, sf_dir, graph_paths, name):
+    """Over parquet-sourced edges, the driver path and the distributed
+    loop return the same rows and the same StructType, nullability
+    included: the path is a physical choice, not a semantic one."""
+    from themis_tritonsort_spark.queries import CATALOG
+
+    got = {}
+    for path in graph_paths:
+        out = CATALOG[name](spark, sf_dir)
+        assert _jvm_schema(out) == out.schema
+        got[path] = (out.schema, sorted(map(tuple, out.collect())))
+    assert got["driver"] == got["loop"]
+
+
+def _jvm_schema(df):
+    """The schema the JVM plan reports (``df.schema`` may be a cached
+    Python copy)."""
+    import json
+
+    from pyspark.sql.types import StructType
+
+    return StructType.fromJson(json.loads(df._jdf.schema().json()))
+
+
+def test_graph_ops_on_an_empty_edge_set(spark, graph_paths):
+    """No edges: every graph operator returns no rows, with its usual
+    schema, on both paths."""
+    from themis_tritonsort_spark.operators.components import (
+        connected_components,
+        connected_components_star,
+        kcore_vertices,
+    )
+
+    edges = spark.createDataFrame([], "src long, dst long")
+    for _ in graph_paths:
+        for op, extra in [
+            (connected_components, ("component", True)),
+            (connected_components_star, ("component", True)),
+            (lambda e: kcore_vertices(e, k=2), ("deg", False)),
+        ]:
+            out = op(edges)
+            assert out.collect() == []
+            assert [(f.name, f.nullable) for f in _jvm_schema(out)] == [
+                ("vid", True),
+                extra,
+            ]
+
+
+def test_driver_table_is_rows_times_width_against_the_driver_bytes(spark):
+    """The one-partition rule: rows x UnsafeRow width (24 B for two
+    longs) against the advisory partition size, which is capped at
+    spark.driver.maxResultSize / 8 (1g by default) so a large advisory
+    size cannot send more to the driver than one action may return."""
+    from themis_tritonsort_spark.operators.loop import driver_bytes, driver_table
+
+    key = "spark.sql.adaptive.advisoryPartitionSizeInBytes"
+    session = spark.newSession()
+    pairs = session.range(3).selectExpr("id AS a", "id + 1 AS b")
+    session.conf.set(key, "48b")
+    assert driver_bytes(session) == 48
+    assert driver_table(pairs.limit(2)).num_rows == 2
+    assert driver_table(pairs) is None
+    # the caller's count is trusted: no job, the same answer
+    assert driver_table(pairs, rows=3) is None
+    session.conf.set(key, "1t")
+    assert driver_bytes(session) == (1 << 30) // 8
+    session.conf.set(key, "64m")
+    assert driver_bytes(session) == 64 << 20
+
+
+@pytest.mark.parametrize(
+    "name, budget", [("q86_kcore", 10), ("q144_chain_components", 20)]
+)
+def test_graph_query_job_budget(spark, sf_dir, name, budget):
+    """Jobs launched to build and collect a graph query, counted from
+    the status tracker the way the benchmark counts them.  A graph that
+    fits one partition finishes on the driver; the distributed loops
+    ran 46 (q86) and 68 (q144) one-stage jobs here."""
+    from themis_tritonsort_spark.queries import CATALOG
+
+    tracker = spark.sparkContext.statusTracker()
+    mark = max(tracker.getJobIdsForGroup(None), default=-1)
+    CATALOG[name](spark, sf_dir).collect()
+    jobs = sum(1 for j in tracker.getJobIdsForGroup(None) if j > mark)
+    assert jobs <= budget, f"{name} launched {jobs} jobs (budget {budget})"
 
 
 # --- the MinHash family, pinned against a pure-Python reference

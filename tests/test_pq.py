@@ -104,7 +104,7 @@ def test_pq_rerank_subset_of_shortlist(spark):
     assert rer <= short
 
 
-def test_kcore_planted_graph(spark):
+def test_kcore_planted_graph(spark, graph_paths):
     from themis_tritonsort_spark.operators.components import kcore_vertices
 
     # K4 on {1,2,3,4} plus a pendant chain 4-5-6: the 3-core is exactly
@@ -113,18 +113,19 @@ def test_kcore_planted_graph(spark):
         [(1, 2), (1, 3), (1, 4), (2, 3), (2, 4), (3, 4), (4, 5), (5, 6)],
         ["src", "dst"],
     )
-    core = {
-        r["vid"]: r["deg"] for r in kcore_vertices(edges, k=3).collect()
-    }
-    assert core == {1: 3, 2: 3, 3: 3, 4: 3}
-    # k=1 keeps every non-isolated vertex with its full degree
-    all1 = {r["vid"]: r["deg"] for r in kcore_vertices(edges, k=1).collect()}
-    assert all1 == {1: 3, 2: 3, 3: 3, 4: 4, 5: 2, 6: 1}
-    # collapse: no 5-core in this graph
-    assert kcore_vertices(edges, k=5).count() == 0
+    for _ in graph_paths:
+        core = {
+            r["vid"]: r["deg"] for r in kcore_vertices(edges, k=3).collect()
+        }
+        assert core == {1: 3, 2: 3, 3: 3, 4: 3}
+        # k=1 keeps every non-isolated vertex with its full degree
+        all1 = {r["vid"]: r["deg"] for r in kcore_vertices(edges, k=1).collect()}
+        assert all1 == {1: 3, 2: 3, 3: 3, 4: 4, 5: 2, 6: 1}
+        # collapse: no 5-core in this graph
+        assert kcore_vertices(edges, k=5).count() == 0
 
 
-def test_kcore_peel_cascade_and_compaction(spark):
+def test_kcore_peel_cascade_and_compaction(spark, graph_paths):
     """A long pendant path forces one-vertex-per-round peel cascades
     (each removal exposes the next endpoint), exercising the delta
     peel's incremental decrements across many rounds, and the mass
@@ -138,11 +139,12 @@ def test_kcore_peel_cascade_and_compaction(spark):
     cycle = [(i, i + 1) for i in range(1, 6)] + [(6, 1)]
     path = [(6, 100)] + [(100 + i, 101 + i) for i in range(12)]
     edges = spark.createDataFrame(cycle + path, ["src", "dst"])
-    core = {r["vid"]: r["deg"] for r in kcore_vertices(edges, k=2).collect()}
-    assert core == {v: 2 for v in range(1, 7)}
-    # the pure path has no 2-core at all once the cycle is removed
-    path_only = spark.createDataFrame(path, ["src", "dst"])
-    assert kcore_vertices(path_only, k=2).count() == 0
+    for _ in graph_paths:
+        core = {r["vid"]: r["deg"] for r in kcore_vertices(edges, k=2).collect()}
+        assert core == {v: 2 for v in range(1, 7)}
+        # the pure path has no 2-core at all once the cycle is removed
+        path_only = spark.createDataFrame(path, ["src", "dst"])
+        assert kcore_vertices(path_only, k=2).count() == 0
 
 
 def test_kcore_rejects_bad_k(spark):

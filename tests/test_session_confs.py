@@ -35,10 +35,13 @@ def test_override_of_foreign_timezone_warns_and_pins(spark):
         spark.conf.set("spark.sql.session.timeZone", "UTC")
 
 
-def test_star_cc_and_budget_replay_write_no_caller_conf(spark, monkeypatch):
+def test_star_cc_and_budget_replay_write_no_caller_conf(
+    spark, monkeypatch, graph_paths
+):
     """Neither star-contraction CC nor the token-budget replay writes
     the caller's session conf: the replay sets its state-store count on
-    a session of its own, and star CC runs under the conf it is given."""
+    a session of its own, and star CC runs under the conf it is given,
+    on the driver path and on its distributed loop alike."""
     from pyspark.sql.conf import RuntimeConfig
 
     from themis_tritonsort_spark.operators.components import (
@@ -64,11 +67,15 @@ def test_star_cc_and_budget_replay_write_no_caller_conf(spark, monkeypatch):
         return real_set(self, key, value)
 
     monkeypatch.setattr(RuntimeConfig, "set", spy_set)
-    cc = sorted(tuple(r) for r in connected_components_star(edges).collect())
+    cc = {
+        path: sorted(tuple(r) for r in connected_components_star(edges).collect())
+        for path in graph_paths
+    }
     replayed = token_budget_replay(spark, docs, "doc_id", "text", "source", 8)
     admitted = sorted(r["id"] for r in replayed.collect())
     monkeypatch.undo()
     assert writes == []
     assert spark.conf.getAll == before
-    assert cc == [(1, 1), (2, 1), (3, 1), (4, 1), (7, 7), (8, 7)]
+    want = [(1, 1), (2, 1), (3, 1), (4, 1), (7, 7), (8, 7)]
+    assert cc == {"driver": want, "loop": want}
     assert admitted == [0, 1, 2]

@@ -1146,11 +1146,11 @@ def test_token_budget_replay_timeout_raises(spark, monkeypatch):
 def test_parse_bytes_matches_spark(spark, value, expected):
     """The replay's advisory size is parsed the way Spark parses
     ``advisoryPartitionSizeInBytes`` itself."""
-    from themis_tritonsort_spark.streaming.budget import _parse_bytes
+    from themis_tritonsort_spark.operators.loop import advisory_bytes
 
     key = "spark.sql.adaptive.advisoryPartitionSizeInBytes"
     session = spark.newSession()
     session.conf.set(key, value)
     entry = spark._jvm.org.apache.spark.sql.internal.SQLConf.ADVISORY_PARTITION_SIZE_IN_BYTES()
     assert session._jsparkSession.sessionState().conf().getConf(entry) == expected
-    assert _parse_bytes(spark, value) == expected
+    assert advisory_bytes(session) == expected

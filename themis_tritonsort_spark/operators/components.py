@@ -19,6 +19,21 @@ AQE a checkpoint of the repartitioned edges reports no partitioning,
 so every round would exchange them again (measured on q46 at sf0.1:
 49 jobs instead of 38).  No loop here writes session conf.
 
+Graphs that fit one partition finish on the driver.  The reference
+runs a partition through its in-memory phase whenever it fits and sends
+only what does not fit to the external phase; the loops here do the
+same.  :func:`connected_components`, :func:`connected_components_star`
+and :func:`kcore_vertices` count their distinct canonical edge pairs
+once (:func:`~.loop.driver_table`: rows x UnsafeRow width against
+``spark.sql.adaptive.advisoryPartitionSizeInBytes``, capped by
+``spark.driver.maxResultSize``; :func:`~.loop.driver_bytes`).  When
+they fit, they collect them as Arrow and run the SAME round rule in
+numpy, with rounds from the same :func:`~.loop.until_converged`, so
+the output is bit-identical and ``max_iterations`` raises on both
+paths alike.  The result comes back as a local relation with the
+loop's exact schema (a JVM LocalTableScan, no Python worker).  At
+gate scale this turns q86's 30 one-stage jobs into 6.
+
 For adversarial long-chain graphs use
 :func:`connected_components_star` (alternating large-star/small-star
 contraction, O(log n) rounds); near-dup graphs do not need it — their
@@ -30,31 +45,34 @@ from __future__ import annotations
 
 from contextlib import ExitStack
 
+import numpy as np
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.exact import md5_60
-from .loop import persisted, until_converged
+from .loop import advisory_bytes, driver_table, persisted, until_converged
 
 
-def sized_edge_npart(
-    relation: DataFrame,
-    cap: int,
-    target_bytes: int = 64 << 20,
-) -> int:
+def sized_edge_npart(relation: DataFrame, cap: int) -> int:
     """Scale-adaptive partition count for a loop-persisted edge
     relation (guide §2.2; the round rules' "derive partitioning from
-    input size, not a core count"): estimated bytes over an
-    advisory-style 64 MB target, clamped to [1, cap] where ``cap`` is
-    the caller's defaultParallelism — the pre-r12 static choice, kept
-    as the ceiling so an overestimate reproduces the old behavior.
+    input size, not a core count"): estimated bytes over the advisory
+    partition size (:func:`~.loop.advisory_bytes`), clamped to [1, cap]
+    where ``cap`` is the caller's defaultParallelism — the pre-r12
+    static choice, kept as the ceiling so an overestimate reproduces
+    the old behavior.
 
-    Sized from the optimizer's estimate, which errs HIGH on join/explode
-    pipelines (q134's LSH-pair relation estimates ~300 GB at sf0.1),
-    which clamps to cap — it never under-partitions a genuinely large
-    graph; the scan/window pipelines the graph family feeds in here
-    carry scan-proportional estimates (no selectivity guesses),
-    measured accurate within 2x at every gate SF.  Locally this is
+    Sized from the optimizer's estimate, which errs both ways.  It errs
+    HIGH on join/explode pipelines (q134's LSH-pair relation estimates
+    ~300 GB at sf0.1) and then clamps to cap.  It errs LOW on
+    parquet-sourced edges, because it starts from the COMPRESSED file
+    size: lineitem's edges estimate 24,258 B at sf0.001 for 4,065
+    distinct canonical pairs, and 215,682 B at sf0.01 for 44,680
+    (715 KB at 16 B a pair), 3-8x low.  A low estimate only costs
+    parallelism here, but it is why :func:`~.loop.driver_table` counts
+    rows instead of trusting this estimate: sending a graph to one
+    process on an underestimate could overrun it.  Locally this is
     what stops a 32-task-per-stage loop over a megabyte-scale graph
     from being task-launch-bound (measured: the q134 CC loop 4.1 s ->
     3.4 s at sf0.1 with identical output).
@@ -70,43 +88,86 @@ def sized_edge_npart(
         )
     except Exception:  # noqa: BLE001 — introspection surprise: old behavior
         return cap
-    return max(1, min(cap, -(-est // target_bytes)))
+    return max(1, min(cap, -(-est // advisory_bytes(relation.sparkSession))))
 
 
-def _undirected_edges(edges: DataFrame, src: str, dst: str) -> DataFrame:
+def _canonical_edges(edges: DataFrame, src: str, dst: str) -> DataFrame:
+    """The undirected graph's distinct canonical (a < b) pairs,
+    self-loops dropped: the edge set every graph operator here starts
+    from, and the one the one-partition rule counts."""
+    return (
+        edges.select(
+            F.least(F.col(src), F.col(dst)).alias("a"),
+            F.greatest(F.col(src), F.col(dst)).alias("b"),
+        )
+        .where(F.col("a") != F.col("b"))
+        .distinct()
+    )
+
+
+def _both_ways(canon: DataFrame) -> DataFrame:
+    """Both orientations (s, d) of canonical pairs."""
+    return canon.select(F.col("a").alias("s"), F.col("b").alias("d")).unionByName(
+        canon.select(F.col("b").alias("s"), F.col("a").alias("d"))
+    )
+
+
+def _undirected_edges(canon: DataFrame) -> DataFrame:
     """Both-orientations (s, d) edge set of the undirected graph,
-    deduped and repartitioned on the propagation key — the static side
-    every iterative op here persists for its loop and joins against
-    each round.
+    repartitioned on the propagation key — the static side every
+    iterative op here persists for its loop and joins against each
+    round.
 
     Canonicalize-then-mirror (r11, guide §2.3/§2.4): the former
     ``union(half, half-flipped).distinct()`` evaluated the caller's
     whole edge-derivation pipeline in BOTH union branches (only the
     scan-side exchange below the window is reusable, the window sort
     itself ran twice) and shuffled 2|E| rows through the distinct.
-    Deduping the canonical (least, greatest) form first runs the
-    pipeline's expensive tail once and halves the distinct's exchange;
-    mirroring afterwards is two projections of the SAME deduplicated
-    subtree, whose identical exchanges Spark reuses.  Canonical
-    distinct == directed distinct of the undirected graph (a != b
-    rows only), so the resulting edge set is identical.
+    Deduping the canonical (least, greatest) form first
+    (:func:`_canonical_edges`) runs the pipeline's expensive tail once
+    and halves the distinct's exchange; mirroring afterwards is two
+    projections of the SAME deduplicated subtree, whose identical
+    exchanges Spark reuses.  Canonical distinct == directed distinct
+    of the undirected graph (a != b rows only), so the resulting edge
+    set is identical.
 
     The partition count is size-derived via :func:`sized_edge_npart`,
     capped at the session's defaultParallelism.
     """
-    canon = (
-        edges.select(
-            F.least(F.col(src), F.col(dst)).alias("s"),
-            F.greatest(F.col(src), F.col(dst)).alias("d"),
-        )
-        .where(F.col("s") != F.col("d"))
-        .distinct()
-    )
-    mirrored = canon.unionByName(
-        canon.select(F.col("d").alias("s"), F.col("s").alias("d"))
-    )
-    cap = edges.sparkSession.sparkContext.defaultParallelism
+    mirrored = _both_ways(canon)
+    cap = canon.sparkSession.sparkContext.defaultParallelism
     return mirrored.repartition(sized_edge_npart(mirrored, cap=cap), "s")
+
+
+def _counted_edges(
+    held: ExitStack, edges: DataFrame, src: str, dst: str
+) -> tuple[DataFrame, pa.Table | None]:
+    """The one-partition rule for the loops over both orientations.
+    Counts the canonical pairs (a lazy local checkpoint, so the count
+    materializes them once for whichever path follows) and collects
+    them when they fit (:func:`~.loop.driver_table`).  Returns ``(e,
+    table)``.  On a fit, ``table`` holds the pairs and ``e`` is their
+    both-orientations view, read for the result's schema only: the
+    driver path takes no persist and no exchange beyond the distinct.
+    Otherwise ``table`` is None and ``e`` is the loop's
+    :func:`_undirected_edges`, persisted on ``held`` and materialized
+    from the counted pairs.  Either way the pairs' blocks are released
+    before this returns."""
+    canon = _canonical_edges(edges, src, dst).localCheckpoint(eager=False)
+    table = driver_table(canon)
+    if table is not None:
+        e = _both_ways(canon)
+    else:
+        e = held.enter_context(persisted(_undirected_edges(canon)))
+        e.count()
+    _release_local_checkpoint(canon)
+    return e, table
+
+
+def _both_ways_ids(table: pa.Table) -> tuple[np.ndarray, np.ndarray]:
+    """Canonical Arrow pairs as both-orientations (s, d) id arrays."""
+    a, b = _ids(table, "a"), _ids(table, "b")
+    return np.concatenate([a, b]), np.concatenate([b, a])
 
 
 def connected_components(
@@ -121,6 +182,10 @@ def connected_components(
     Converges early when a round changes no label (checked against a
     driver-side count of changed labels — a scalar, not data).
 
+    An edge set that fits one partition (:func:`~.loop.driver_table`)
+    runs the same rounds on the driver (:func:`_min_label_rounds`);
+    ``max_iterations`` binds there too.
+
     Cache lifecycle: the both-orientations edge set is held by
     :func:`~.loop.persisted` for the loop only; every round's count
     materializes its checkpoint, so the result never reads it.
@@ -128,10 +193,17 @@ def connected_components(
     # Undirected: materialize BOTH orientations once, partitioned by the
     # propagation source — each round is then ONE join (src side
     # co-located with the persisted partitioning) instead of two.
-    with persisted(_undirected_edges(edges, src, dst)) as e:
+    with ExitStack() as held:
+        e, table = _counted_edges(held, edges, src, dst)
         labels = e.select(F.col("s").alias("vid")).distinct().withColumn(
             "label", F.col("vid")
         )
+        if table is not None:
+            vids, comps = _min_label_rounds(*_both_ways_ids(table), max_iterations)
+            schema = _min_label_round(e, labels, labels).select(
+                "vid", F.col("label").alias("component")
+            ).schema
+            return _local(e.sparkSession, schema, vids, comps)
         # Frontier (delta) propagation — r11, guide §2.2 (shuffle fewer
         # bytes): only vertices whose label CHANGED last round need to
         # offer this round.  Labels are min-monotone, so an offer from an
@@ -148,24 +220,8 @@ def connected_components(
         # before.
         active = labels
         for _ in until_converged("connected_components", max_iterations):
-            # Each active vertex offers its label to its neighbors; every
-            # vertex keeps its own.  The keep row carries the previous
-            # label in `old`, so after the min-groupBy the convergence
-            # check is a filter-count on the checkpointed result — no
-            # extra join per round (min ignores the NULL `old` on
-            # propagated rows; every vid has exactly one keep row, so
-            # `old` IS the previous label).
-            offered = e.join(active, e.s == active.vid).select(
-                F.col("d").alias("vid"),
-                F.col("label"),
-                F.lit(None).cast("long").alias("old"),
-            )
-            keep = labels.select("vid", "label", F.col("label").alias("old"))
-            merged = (
-                offered.unionByName(keep)
-                .groupBy("vid")
-                .agg(F.min("label").alias("label"), F.min("old").alias("old"))
-                .localCheckpoint(eager=False)
+            merged = _min_label_round(e, labels, active).localCheckpoint(
+                eager=False
             )
             changed_rows = merged.where(F.col("label") != F.col("old"))
             labels = merged.select("vid", "label")
@@ -178,6 +234,60 @@ def connected_components(
                 break
 
     return labels.select("vid", F.col("label").alias("component"))
+
+
+def _min_label_round(
+    e: DataFrame, labels: DataFrame, active: DataFrame
+) -> DataFrame:
+    """One min-label round: (vid, label, old) with every label lowered
+    to the least label its active neighbors offer."""
+    # Each active vertex offers its label to its neighbors; every
+    # vertex keeps its own.  The keep row carries the previous label in
+    # `old`, so after the min-groupBy the convergence check is a
+    # filter-count on the checkpointed result — no extra join per round
+    # (min ignores the NULL `old` on propagated rows; every vid has
+    # exactly one keep row, so `old` IS the previous label).
+    offered = e.join(active, e.s == active.vid).select(
+        F.col("d").alias("vid"),
+        F.col("label"),
+        F.lit(None).cast("long").alias("old"),
+    )
+    keep = labels.select("vid", "label", F.col("label").alias("old"))
+    return (
+        offered.unionByName(keep)
+        .groupBy("vid")
+        .agg(F.min("label").alias("label"), F.min("old").alias("old"))
+    )
+
+
+def _ids(table: pa.Table, col: str) -> np.ndarray:
+    return table.column(col).to_numpy().astype(np.int64, copy=False)
+
+
+def _local(spark, schema, *columns: np.ndarray) -> DataFrame:
+    """Driver-computed columns as a local relation with ``schema``, the
+    loop's exact output schema: a LocalTableScan in the JVM."""
+    table = pa.table(
+        {f.name: pa.array(c, pa.int64()) for f, c in zip(schema.fields, columns)}
+    )
+    return spark.createDataFrame(table, schema)
+
+
+def _min_label_rounds(
+    s: np.ndarray, d: np.ndarray, max_iterations: int
+) -> tuple[np.ndarray, np.ndarray]:
+    """:func:`connected_components`' rounds on the driver, over the
+    both-orientations edge arrays: each round sets every label to the
+    minimum of its own and its neighbors', until a round changes none."""
+    vids, si = np.unique(s, return_inverse=True)
+    di = np.searchsorted(vids, d)
+    labels = vids
+    for _ in until_converged("connected_components", max_iterations):
+        lowered = labels.copy()
+        np.minimum.at(lowered, di, labels[si])
+        if np.array_equal(lowered, labels):
+            return vids, labels
+        labels = lowered
 
 
 def _release_local_checkpoint(df: DataFrame) -> None:
@@ -239,19 +349,15 @@ def connected_components_star(
     edge-sized block sets regardless of round count; nothing leaks
     into the session (the same self-releasing discipline as the other
     iterative ops here), and it writes no session conf.
+
+    An edge set that fits one partition (:func:`~.loop.driver_table`,
+    sized by the count the first fingerprint job already returns, so
+    the check costs no job) runs the same alternations on the driver
+    (:func:`_star_rounds`); ``max_iterations`` binds there too.
     """
-    half = edges.select(F.col(src).alias("a"), F.col(dst).alias("b")).where(
-        F.col(src) != F.col(dst)
-    )
     # canonical a < b, deduped; star edges stay canonical thereafter
     # (emissions always point a high vertex at a strictly smaller root)
-    e = (
-        half.select(
-            F.least("a", "b").alias("a"), F.greatest("a", "b").alias("b")
-        )
-        .distinct()
-        .localCheckpoint(eager=False)
-    )
+    e = _canonical_edges(edges, src, dst).localCheckpoint(eager=False)
 
     def fingerprint(cur: DataFrame) -> tuple[int, int]:
         # One fused job per alternation: materializes the round's
@@ -268,20 +374,38 @@ def connected_components_star(
         ).collect()[0]
         return row["c"], row["f"]
 
+    def vertices(cur: DataFrame) -> DataFrame:
+        return (
+            cur.select(F.col("a").alias("vid"))
+            .unionAll(cur.select(F.col("b").alias("vid")))
+            .distinct()
+        )
+
+    def resolve(verts: DataFrame, cur: DataFrame) -> DataFrame:
+        # fixed point: (root, leaf) stars.  Every vertex resolves
+        # through the leaf->root map; roots (and any vertex whose edges
+        # contracted away) fall back to themselves.
+        leafmap = cur.select(F.col("b").alias("vid"), F.col("a").alias("__root"))
+        return verts.join(leafmap, "vid", "left").select(
+            F.col("vid").cast("long"),
+            F.coalesce(F.col("__root"), F.col("vid")).cast("long").alias("component"),
+        )
+
     prev = fingerprint(e)
+    table = driver_table(e, rows=prev[0])
+    if table is not None:
+        _release_local_checkpoint(e)
+        vids, comps = _star_rounds(_ids(table, "a"), _ids(table, "b"), max_iterations)
+        schema = resolve(vertices(e), e).schema
+        return _local(e.sparkSession, schema, vids, comps)
     # Original vertex set, captured as vertex-sized checkpoint blocks
     # read off e's FIRST materialization (the fingerprint job above):
     # the final resolve join needs every vertex of the input, but by
     # then the loop has superseded (and released) e's blocks and
-    # re-deriving from `half` would recompute the caller's whole edge
+    # re-deriving from `edges` would recompute the caller's whole edge
     # pipeline a second time (q144: the events window) — r11, guide
     # §2.4.  Eager: materialized NOW, while e's blocks are live.
-    verts = (
-        e.select(F.col("a").alias("vid"))
-        .unionAll(e.select(F.col("b").alias("vid")))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
+    verts = vertices(e).localCheckpoint(eager=True)
 
     def star(cur: DataFrame, large: bool) -> DataFrame:
         # Canonical form lets both stars skip the doubled adjacency
@@ -336,19 +460,59 @@ def connected_components_star(
         # superseded e; only e_new's blocks stay live
         _release_local_checkpoint(e)
         e, prev = e_new, fp
+    return resolve(verts, e)
 
-    # fixed point: (root, leaf) stars.  Every vertex resolves through
-    # the leaf->root map; roots (and any vertex whose edges contracted
-    # away) fall back to themselves.
-    leafmap = e.select(F.col("b").alias("vid"), F.col("a").alias("__root"))
-    return (
-        verts.join(leafmap, "vid", "left")
-        .select(
-            F.col("vid").cast("long"),
-            F.coalesce(F.col("__root"), F.col("vid"))
-            .cast("long")
-            .alias("component"),
+
+def _star_rounds(
+    a: np.ndarray, b: np.ndarray, max_iterations: int
+) -> tuple[np.ndarray, np.ndarray]:
+    """:func:`connected_components_star`'s alternations on the driver,
+    over canonical (a < b) edge arrays: large-star then small-star,
+    each exactly as the loop's ``star`` computes it, until the edge
+    set repeats; then the same leaf->root resolve."""
+
+    def pairs(x: np.ndarray, y: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
+        # the loop's `.distinct()`, as unique rows sorted by (x, y)
+        keep = x != y
+        x, y = x[keep], y[keep]
+        order = np.lexsort((y, x))
+        x, y = x[order], y[order]
+        first = np.ones(len(x), bool)
+        first[1:] = (x[1:] != x[:-1]) | (y[1:] != y[:-1])
+        return x[first], y[first]
+
+    def min_in(x: np.ndarray, y: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
+        # (each y, the least x pointing at it): the loop's `min_in`
+        order = np.lexsort((x, y))
+        ys, first = np.unique(y[order], return_index=True)
+        return ys, x[order][first]
+
+    def alternation(x: np.ndarray, y: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
+        # large-star: (least(x, min_in(x)), y), a missing min_in being
+        # the left join's null that least skips
+        keys, mn = min_in(x, y)
+        if len(keys):
+            pos = np.minimum(np.searchsorted(keys, x), len(keys) - 1)
+            x = np.where(keys[pos] == x, np.minimum(x, mn[pos]), x)
+        # small-star: every edge (x, y) becomes (min_in(y), x), and every
+        # center y adds (min_in(y), y)
+        centers, mn = min_in(x, y)
+        return pairs(
+            np.concatenate([mn[np.searchsorted(centers, y)], mn]),
+            np.concatenate([x, centers]),
         )
+
+    cur = pairs(a, b)
+    for _ in until_converged("connected_components_star", max_iterations):
+        nxt = alternation(*cur)
+        if all(np.array_equal(p, q) for p, q in zip(nxt, cur)):
+            break
+        cur = nxt
+    verts = np.union1d(a, b)
+    roots = ~np.isin(verts, cur[1])
+    return (
+        np.concatenate([cur[1], verts[roots]]),
+        np.concatenate([cur[0], verts[roots]]),
     )
 
 
@@ -399,15 +563,7 @@ def _oriented_triangles(
     merge at gate scale); the closing join is hinted sort-merge (both
     sides edge-sized).
     """
-    e = (
-        edges.select(
-            F.least(F.col(src), F.col(dst)).alias("a"),
-            F.greatest(F.col(src), F.col(dst)).alias("b"),
-        )
-        .where(F.col("a") != F.col("b"))
-        .distinct()
-        .localCheckpoint(eager=False)
-    )
+    e = _canonical_edges(edges, src, dst).localCheckpoint(eager=False)
     # Checkpointed (r11, guide §5): the relation feeds BOTH degree-attach
     # builds, and the r11 plan audit showed the join-key renames (a vs
     # b) pushing different isnotnull filters into the two subtrees, so
@@ -615,16 +771,29 @@ def kcore_vertices(
     exactly once.  Lineage is cut per round on the vertex-sized
     relation only (localCheckpoint); convergence is a driver-side
     scalar count.
+
+    An edge set that fits one partition (:func:`~.loop.driver_table`)
+    runs the same peel rounds on the driver (:func:`_kcore_rounds`);
+    ``max_iterations`` binds there too.
     """
     if k < 1:
         raise ValueError(f"k must be >= 1, got {k}")
     spark = edges.sparkSession
     npart = spark.sparkContext.defaultParallelism
-    with ExitStack() as held:
-        e = held.enter_context(persisted(_undirected_edges(edges, src, dst)))
-        deg = e.groupBy("s").agg(F.count(F.lit(1)).alias("deg")).localCheckpoint(
-            eager=False
+
+    def result(deg: DataFrame) -> DataFrame:
+        return deg.select(
+            F.col("s").cast("long").alias("vid"),
+            F.col("deg").cast("long").alias("deg"),
         )
+
+    with ExitStack() as held:
+        e, table = _counted_edges(held, edges, src, dst)
+        deg = e.groupBy("s").agg(F.count(F.lit(1)).alias("deg"))
+        if table is not None:
+            vids, degs = _kcore_rounds(*_both_ways_ids(table), k, max_iterations)
+            return _local(spark, result(deg).schema, vids, degs)
+        deg = deg.localCheckpoint(eager=False)
         dropped_since_compact = 0
         for _ in until_converged("kcore_vertices", max_iterations):
             # ONE driver action per round: alive + frontier size off the
@@ -638,10 +807,7 @@ def kcore_vertices(
             alive = counts["__n"] - (counts["__nd"] or 0)
             n_drop = counts["__nd"] or 0
             if n_drop == 0:
-                return deg.select(
-                    F.col("s").cast("long").alias("vid"),
-                    F.col("deg").cast("long").alias("deg"),
-                )
+                return result(deg)
             drop = deg.where(F.col("deg") < k).select("s")
             # Degree decrements from the frontier's incident edges; the
             # left join onto surviving vertices drops decrements aimed
@@ -677,6 +843,25 @@ def kcore_vertices(
                 e.unpersist()
                 e = e_new
                 dropped_since_compact = 0
+
+
+def _kcore_rounds(
+    s: np.ndarray, d: np.ndarray, k: int, max_iterations: int
+) -> tuple[np.ndarray, np.ndarray]:
+    """:func:`kcore_vertices`' peel rounds on the driver, over the
+    both-orientations edge arrays: each round drops every surviving
+    vertex of degree < k and decrements its surviving neighbors, until
+    a round drops nothing."""
+    vids, si = np.unique(s, return_inverse=True)
+    di = np.searchsorted(vids, d)
+    deg = np.bincount(si, minlength=len(vids))
+    alive = np.ones(len(vids), bool)
+    for _ in until_converged("kcore_vertices", max_iterations):
+        drop = alive & (deg < k)
+        if not drop.any():
+            return vids[alive], deg[alive]
+        alive &= ~drop
+        deg -= np.bincount(di[drop[si]], minlength=len(vids))
 
 
 def label_propagation(
@@ -715,7 +900,9 @@ def label_propagation(
         raise ValueError(f"rounds must be >= 0, got {rounds}")
     spark = edges.sparkSession
     npart = spark.sparkContext.defaultParallelism
-    with persisted(_undirected_edges(edges, src, dst)) as e:
+    with persisted(
+        _undirected_edges(_canonical_edges(edges, src, dst))
+    ) as e:
         labels = (
             e.select(F.col("s").alias("vid"))
             .distinct()
@@ -778,7 +965,9 @@ def bfs_hops(
     """
     if rounds < 0:
         raise ValueError(f"rounds must be >= 0, got {rounds}")
-    with persisted(_undirected_edges(edges, src, dst)) as e:
+    with persisted(
+        _undirected_edges(_canonical_edges(edges, src, dst))
+    ) as e:
         dist = (
             seeds.select(F.col(seed_col).alias("vid"))
             .distinct()

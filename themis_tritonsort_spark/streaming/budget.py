@@ -21,6 +21,8 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..operators.loop import advisory_bytes
+
 
 def token_budget_stream(
     docs: DataFrame,
@@ -186,14 +188,8 @@ def token_budget_replay(
         staged_bytes = sum(
             os.path.getsize(os.path.join(src, f)) for f in parts
         )
-        advisory = _parse_bytes(
-            spark,
-            spark.conf.get(
-                "spark.sql.adaptive.advisoryPartitionSizeInBytes", "64m"
-            ),
-        )
         cap = int(spark.conf.get("spark.sql.shuffle.partitions"))
-        n_state = max(1, min(cap, -(-staged_bytes // advisory)))
+        n_state = max(1, min(cap, -(-staged_bytes // advisory_bytes(spark))))
         # The replay runs on its own session, so the state-store count
         # is set there and the caller's conf is never written.  Sessions
         # share the SparkContext, and the staged input is read by path.
@@ -235,10 +231,3 @@ def token_budget_replay(
     )
     replay.catalog.dropTempView(name)
     return out
-
-
-def _parse_bytes(spark: SparkSession, v: str) -> int:
-    """Parse a Spark byte-size conf value ('64m', '1t', '2p', '64mb',
-    plain digits = bytes) exactly the way Spark parses it."""
-    java_utils = spark.sparkContext._jvm.org.apache.spark.network.util.JavaUtils
-    return java_utils.byteStringAsBytes(str(v))
