@@ -30,6 +30,7 @@ from typing import Any
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..data import _read_parquet, table
 from ..functions.text import tokens
 
 Fragment = Callable[[DataFrame, dict[str, Any]], DataFrame]
@@ -492,11 +493,9 @@ def _resolve_source(
     if df is not None:
         return df
     if job.input_table is not None:
-        from ..data import table
-
         return table(spark, sf_dir, job.input_table)
     if job.input_path is not None:
-        return spark.read.parquet(job.input_path)
+        return _read_parquet(spark, job.input_path)
     raise ValueError("job needs input_table, input_path, or df")
 
 
